@@ -58,13 +58,10 @@ object CdcOps {
   def scd2Stream(log: DataFrame, key: String, attr: String, ts: String,
       tie: String): DataFrame = {
     import log.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     log.select(col(key).cast("long").as("entity"), col(attr).cast("string").as("attr"),
         unix_micros(col(ts)).as("ts_us"), col(tie).cast("long").as("tie"))
       .as[(Long, String, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.Scd2ChangeProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.Scd2ChangeProcessor().byKey(_._1))
       .toDF("entity", "attr", "from_us")
   }
 
@@ -118,16 +115,13 @@ object CdcOps {
   def mergeStream(log: DataFrame, key: String, etype: String, value: String,
       ts: String, tie: String, opCol: String = "op"): DataFrame = {
     import log.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     log.select(col(key).cast("long").as("entity"),
         col(etype).cast("string").as("etype"),
         col(value).cast("double").as("value"),
         col(ts).cast("long").as("ts_us"), col(tie).cast("long").as("tie"),
         col(opCol).cast("string").as("op"))
       .as[(Long, String, Double, Long, Long, String)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.MergeStateProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.MergeStateProcessor().byKey(_._1))
       .toDF("entity", "etype", "value", "ts_us", "op")
   }
 
@@ -281,14 +275,11 @@ object CdcOps {
   def incrementalAggStream(changes: DataFrame, key: String,
       unitsCol: String, opCol: String = "op"): DataFrame = {
     import changes.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val sign = when(col(opCol) === "delete", lit(-1L)).otherwise(lit(1L))
     changes.select(col(key).cast("long").as("k"), sign.as("dc"),
         (sign * col(unitsCol).cast("long")).as("ds"))
       .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.IncrAggProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.IncrAggProcessor().byKey(_._1))
       .toDF("k", "cnt", "units")
   }
 

@@ -534,15 +534,12 @@ object EventsQueries {
       h: Long = CusumH, tsCol: String = "ts", userCol: String = "user_id",
       idCol: String = "event_id", valueCol: String = "value"): DataFrame = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     events
       .select(col(userCol).cast("long").as("u"),
         unix_micros(col(tsCol)).as("us"), col(idCol).cast("long").as("eid"),
         round(col(valueCol) * 100).cast("bigint").as("cents"))
       .as[(Long, Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.CusumProcessor(k, h),
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.CusumProcessor(k, h).byKey(_._1))
       .toDF("user_id", "us", "s")
   }
 
@@ -655,15 +652,12 @@ object EventsQueries {
       tsCol: String = "ts", userCol: String = "user_id",
       idCol: String = "event_id", valueCol: String = "value"): DataFrame = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     events
       .select(col(userCol).cast("long").as("u"),
         unix_micros(col(tsCol)).as("us"), col(idCol).cast("long").as("eid"),
         round(col(valueCol) * 100).cast("bigint").as("cents"))
       .as[(Long, Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.HoltProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.HoltProcessor().byKey(_._1))
       .toDF("user_id", "us", "level", "trend", "forecast")
   }
 
@@ -675,15 +669,12 @@ object EventsQueries {
       tsCol: String = "ts", userCol: String = "user_id",
       idCol: String = "event_id", valueCol: String = "value"): DataFrame = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     events
       .select(col(userCol).cast("long").as("u"),
         unix_micros(col(tsCol)).as("us"), col(idCol).cast("long").as("eid"),
         round(col(valueCol) * 100).cast("bigint").as("cents"))
       .as[(Long, Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.EwmaProcessor(h),
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.EwmaProcessor(h).byKey(_._1))
       .toDF("user_id", "us", "s")
   }
 
@@ -757,15 +748,12 @@ object EventsQueries {
       rate: Long = RlRate, tsCol: String = "ts", userCol: String = "user_id",
       idCol: String = "event_id", valueCol: String = "value"): DataFrame = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     events
       .select(col(userCol).cast("long").as("u"),
         unix_micros(col(tsCol)).as("us"), col(idCol).cast("long").as("eid"),
         round(col(valueCol) * 100).cast("bigint").as("cents"))
       .as[(Long, Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.RateLimitProcessor(cap, rate),
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.RateLimitProcessor(cap, rate).byKey(_._1))
       .toDF("user_id", "us", "cents", "avail")
   }
 
@@ -1048,15 +1036,12 @@ object EventsQueries {
   def hllDailyDistinctStream(events: DataFrame, tsCol: String = "ts",
       userCol: String = "user_id"): DataFrame = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     events
       .select(datediff(to_date(col(tsCol)), lit("1970-01-01")).cast("long")
           .as("day"),
         col(userCol).cast("long").as("u"))
       .as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.HllStateProcessor(12),
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.HllStateProcessor(12).byKey(_._1))
       .toDF("day", "approx_users")
   }
 
@@ -1074,15 +1059,12 @@ object EventsQueries {
   def bitmapDailyDistinctStream(events: DataFrame, tsCol: String = "ts",
       userCol: String = "user_id"): DataFrame = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     events
       .select(datediff(to_date(col(tsCol)), lit("1970-01-01")).cast("long")
           .as("day"),
         col(userCol).cast("long").as("u"))
       .as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.BitmapStateProcessor(),
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.BitmapStateProcessor().byKey(_._1))
       .toDF("day", "n_users")
   }
 
@@ -1099,15 +1081,12 @@ object EventsQueries {
   def trendingItemsStream(events: DataFrame, k: Int = 16,
       tsCol: String = "ts", itemCol: String = "item"): DataFrame = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     events
       .select(datediff(to_date(col(tsCol)), lit("1970-01-01")).cast("long")
           .as("day"),
         col(itemCol).cast("string").as("item"))
       .as[(Long, String)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.FreqItemsProcessor(k),
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.FreqItemsProcessor(k).byKey(_._1))
       .toDF("day", "item", "est")
   }
 
@@ -1386,7 +1365,6 @@ object EventsQueries {
       typeCol: String = "event_type", idCol: String = "event_id"): DataFrame = {
     require(stages.nonEmpty && stages.distinct.size == stages.size)
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val stageIdx = stages.zipWithIndex.foldLeft(lit(-1)) { case (acc, (st, i)) =>
       when(col(typeCol) === st, lit(i + 1)).otherwise(acc)
     }
@@ -1394,9 +1372,7 @@ object EventsQueries {
         unix_micros(col(tsCol).cast("timestamp")).as("tus"),
         col(idCol).cast("long").as("eid"), stageIdx.as("stage"))
       .as[(Long, Long, Long, Int)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.CepProcessor(stages.size),
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.CepProcessor(stages.size).byKey(_._1))
       .toDF("user", "n_matches")
   }
 
@@ -1589,13 +1565,10 @@ object EventsQueries {
     */
   def ohlcStream(rows: DataFrame): DataFrame = {
     import rows.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     rows.select(col("key").cast("string"), col("us").cast("long"),
         col("event_id").cast("long"), col("cents").cast("long"))
       .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.OhlcProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.OhlcProcessor().byKey(_._1))
       .toDF("key", "n", "open_cents", "high_cents", "low_cents", "close_cents")
   }
 
@@ -1941,14 +1914,11 @@ object EventsQueries {
   def rfmFeaturesStream(events: DataFrame, userCol: String = "user_id",
       tsCol: String = "ts", valueCol: String = "value"): DataFrame = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     events.select(col(userCol).cast("long").as("u"),
         unix_micros(col(tsCol)).as("tm"),
         expr(s"CAST(round($valueCol * 100) AS BIGINT)").as("cents"))
       .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.RfmFeatureProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.RfmFeatureProcessor().byKey(_._1))
       .toDF("user_id", "last_micros", "f", "m")
   }
 

@@ -346,13 +346,10 @@ object MultimodalOps {
     */
   def sceneCutStream(frames: DataFrame): DataFrame = {
     import frames.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     frames.select(col("doc_id").cast("long"), col("frame_idx").cast("int"),
         col("flen").cast("int"), col("hist").cast("array<long>"))
       .as[(Long, Int, Int, Seq[Long])]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.SceneCutProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transform(new graft.streaming.SceneCutProcessor().byKey(_._1))
       .toDF("doc_id", "n_frames", "n_cuts", "first_cut_raw")
       .withColumn("first_cut",
         when(col("first_cut_raw") >= 0, col("first_cut_raw")))

@@ -4436,7 +4436,6 @@ object StatTests {
   def srmStream(units: DataFrame, keyCol: String, variantCol: String,
       stateTtl: org.apache.spark.sql.streaming.TTLConfig =
         org.apache.spark.sql.streaming.TTLConfig.NONE): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig}
     val spark = units.sparkSession
     import spark.implicits._
     // null key/variant rows are dropped — the batch twin counts a null
@@ -4446,15 +4445,11 @@ object StatTests {
     // is `=!= 0` on the raw column, so a fractional variant in (-1,1)
     // (e.g. 0.5) must land in arm B — casting first would truncate it
     // to 0 and misfile it in arm A (r12 ADVICE)
-    val keyed = units.select(col(keyCol).cast("string").as("k"),
+    units.select(col(keyCol).cast("string").as("k"),
         (col(variantCol) =!= 0).cast("long").as("v"))
       .filter(col("k").isNotNull && col("v").isNotNull)
       .as[(String, Long)]
-    val timeMode =
-      if (stateTtl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    keyed.groupByKey(_._1)
-      .transformWithState(new graft.streaming.SrmProcessor(stateTtl),
-        timeMode, OutputMode.Append())
+      .transform(new graft.streaming.SrmProcessor(stateTtl).byKey(_._1))
       .toDF("exp_key", "users_a", "users_b", "chisq_micro", "srm_detected")
   }
 

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import java.util.{HashMap => JHashMap}
+
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.functions.BitmapPages
 
@@ -30,22 +31,23 @@ import graft.functions.BitmapPages
   * batch.
   */
 final class BitmapStateProcessor
-    extends StatefulProcessor[Long, (Long, Long), (Long, Long)] {
+    extends KeyedFold[Long, (Long, Long), Array[Byte],
+      JHashMap[java.lang.Long, Array[Long]], (Long, Long)](
+      "bitmap", Encoders.BINARY, KeyedFold.arrival) {
 
-  @transient private var st: ValueState[Array[Byte]] = _
+  protected def load(stored: Option[Array[Byte]]): JHashMap[java.lang.Long, Array[Long]] =
+    stored.map(BitmapPages.deserialize)
+      .getOrElse(new JHashMap[java.lang.Long, Array[Long]]())
+  protected def store(pages: JHashMap[java.lang.Long, Array[Long]]): Array[Byte] =
+    BitmapPages.serialize(pages)
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Array[Byte]]("bitmap", Encoders.BINARY,
-      TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long)] = {
-    val pages = Option(st.get())
-      .map(BitmapPages.deserialize)
-      .getOrElse(new java.util.HashMap[java.lang.Long, Array[Long]]())
-    rows.foreach { case (_, id) => BitmapPages.add(pages, id) }
-    st.update(BitmapPages.serialize(pages))
-    Iterator.single((key, BitmapPages.cardinality(pages)))
+  protected def step(key: Long, pages: JHashMap[java.lang.Long, Array[Long]],
+      row: (Long, Long), emit: ((Long, Long)) => Unit): JHashMap[java.lang.Long, Array[Long]] = {
+    BitmapPages.add(pages, row._2)
+    pages
   }
+
+  override protected def finish(key: Long,
+      pages: JHashMap[java.lang.Long, Array[Long]]): Iterator[(Long, Long)] =
+    Iterator.single((key, BitmapPages.cardinality(pages)))
 }

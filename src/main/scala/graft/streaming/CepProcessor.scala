@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Per-user pattern-matching DFA backing
   * [[graft.analytics.EventsQueries.cepStream]] — the complex-event-
@@ -33,23 +33,19 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * each batch touching the user.
   */
 final class CepProcessor(finalStage: Int, stateTtl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[Long, (Long, Long, Long, Int), (Long, Long)] {
+    extends KeyedFold[Long, (Long, Long, Long, Int), (Int, Long), (Int, Long), (Long, Long)](
+      "cep", Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong),
+      Ordering.by(r => (r._2, r._3)), stateTtl) {
 
-  @transient private var st: ValueState[(Int, Long)] = _
+  protected def load(stored: Option[(Int, Long)]): (Int, Long) = stored.getOrElse((0, 0L))
+  protected def store(acc: (Int, Long)): (Int, Long) = acc
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Int, Long)]("cep",
-      Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong), stateTtl)
+  protected def step(key: Long, acc: (Int, Long), row: (Long, Long, Long, Int),
+      emit: ((Long, Long)) => Unit): (Int, Long) =
+    CepDfa.step(finalStage, acc, row._4)
 
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Long, Long, Int)],
-      timerValues: TimerValues): Iterator[(Long, Long)] = {
-    var state = Option(st.get()).getOrElse((0, 0L))
-    rows.toVector.sortBy(r => (r._2, r._3)).foreach { r =>
-      state = CepDfa.step(finalStage, state, r._4)
-    }
-    st.update(state)
-    Iterator.single((key, state._2))
-  }
+  override protected def finish(key: Long, acc: (Int, Long)): Iterator[(Long, Long)] =
+    Iterator.single((key, acc._2))
 }
 
 /** The pure transition function of [[CepProcessor]], factored out so the

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-key streaming CUSUM drift monitor — the `transformWithState` twin
   * the batch qe_cusum_alerts scaladoc promises: the clamped recurrence
@@ -23,23 +22,16 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * the batch fold.
   */
 final class CusumProcessor(k: Long, h: Long)
-    extends StatefulProcessor[Long, (Long, Long, Long, Long), (Long, Long, Long)] {
+    extends KeyedFold[Long, (Long, Long, Long, Long), Long, Long, (Long, Long, Long)](
+      "s", Encoders.scalaLong, Ordering.by(r => (r._2, r._3))) {
 
-  @transient private var st: ValueState[Long] = _
+  protected def load(stored: Option[Long]): Long = stored.getOrElse(0L)
+  protected def store(acc: Long): Long = acc
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("s", Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Long, Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
-    var acc = if (st.exists()) st.get() else 0L
-    val out = rows.toVector.sortBy(r => (r._2, r._3)).flatMap {
-      case (_, us, _, cents) =>
-        acc = math.max(0L, acc + cents - k)
-        if (acc > h) Some((key, us, acc)) else None
-    }
-    st.update(acc)
-    out.iterator
+  protected def step(key: Long, acc: Long, row: (Long, Long, Long, Long),
+      emit: ((Long, Long, Long)) => Unit): Long = {
+    val s = math.max(0L, acc + row._4 - k)
+    if (s > h) emit((key, row._2, s))
+    s
   }
 }

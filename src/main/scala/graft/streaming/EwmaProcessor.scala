@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-key streaming EWMA level monitor — the smoothed companion to
   * [[CusumProcessor]]'s drift detector, at the DYADIC smoothing constant
@@ -24,23 +23,16 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * whose post-update smoothed level exceeds `h`.
   */
 final class EwmaProcessor(h: Long)
-    extends StatefulProcessor[Long, (Long, Long, Long, Long), (Long, Long, Long)] {
+    extends KeyedFold[Long, (Long, Long, Long, Long), Long, Long, (Long, Long, Long)](
+      "s", Encoders.scalaLong, Ordering.by(r => (r._2, r._3))) {
 
-  @transient private var st: ValueState[Long] = _
+  protected def load(stored: Option[Long]): Long = stored.getOrElse(0L)
+  protected def store(acc: Long): Long = acc
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Long]("s", Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Long, Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
-    var acc = if (st.exists()) st.get() else 0L
-    val out = rows.toVector.sortBy(r => (r._2, r._3)).flatMap {
-      case (_, us, _, cents) =>
-        acc = Math.floorDiv(acc + cents, 2L)
-        if (acc > h) Some((key, us, acc)) else None
-    }
-    st.update(acc)
-    out.iterator
+  protected def step(key: Long, acc: Long, row: (Long, Long, Long, Long),
+      emit: ((Long, Long, Long)) => Unit): Long = {
+    val s = Math.floorDiv(acc + row._4, 2L)
+    if (s > h) emit((key, row._2, s))
+    s
   }
 }

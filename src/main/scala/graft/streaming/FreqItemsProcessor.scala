@@ -5,7 +5,6 @@ import java.util.{HashMap => JHashMap}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.functions.MGSummary
 
@@ -32,22 +31,23 @@ import graft.functions.MGSummary
   * latest emission per key).
   */
 final class FreqItemsProcessor(k: Int)
-    extends StatefulProcessor[Long, (Long, String), (Long, String, Long)] {
+    extends KeyedFold[Long, (Long, String), Array[Byte], JHashMap[String, java.lang.Long],
+      (Long, String, Long)](
+      "mg", Encoders.BINARY, KeyedFold.arrival) {
 
-  @transient private var st: ValueState[Array[Byte]] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Array[Byte]]("mg", Encoders.BINARY,
-      TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, String)],
-      timerValues: TimerValues): Iterator[(Long, String, Long)] = {
-    val m = Option(st.get()).map(MGSummary.deserialize)
+  protected def load(stored: Option[Array[Byte]]): JHashMap[String, java.lang.Long] =
+    stored.map(MGSummary.deserialize)
       .getOrElse(new JHashMap[String, java.lang.Long](k * 2))
-    rows.foreach { case (_, item) => MGSummary.update(m, item, k) }
-    st.update(MGSummary.serialize(m))
+  protected def store(m: JHashMap[String, java.lang.Long]): Array[Byte] = MGSummary.serialize(m)
+
+  protected def step(key: Long, m: JHashMap[String, java.lang.Long], row: (Long, String),
+      emit: ((Long, String, Long)) => Unit): JHashMap[String, java.lang.Long] = {
+    MGSummary.update(m, row._2, k)
+    m
+  }
+
+  override protected def finish(key: Long,
+      m: JHashMap[String, java.lang.Long]): Iterator[(Long, String, Long)] =
     m.entrySet().iterator().asScala.toList
       .map(e => (key, e.getKey, e.getValue.longValue())).iterator
-  }
 }

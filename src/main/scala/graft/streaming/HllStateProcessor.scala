@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.datasketches.hll.{HllSketch, TgtHllType}
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-key (e.g. per-day) streaming HLL distinct-count maintainer —
   * MERGEABLE-SKETCH state, the streaming half of the qagg_hll_sketch /
@@ -34,22 +33,19 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * per batch.
   */
 final class HllStateProcessor(lgK: Int = 12)
-    extends StatefulProcessor[Long, (Long, Long), (Long, Long)] {
+    extends KeyedFold[Long, (Long, Long), Array[Byte], HllSketch, (Long, Long)](
+      "hll", Encoders.BINARY, KeyedFold.arrival) {
 
-  @transient private var sk: ValueState[Array[Byte]] = _
+  protected def load(stored: Option[Array[Byte]]): HllSketch =
+    stored.map(HllSketch.heapify).getOrElse(new HllSketch(lgK, TgtHllType.HLL_8))
+  protected def store(s: HllSketch): Array[Byte] = s.toUpdatableByteArray
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    sk = getHandle.getValueState[Array[Byte]]("hll", Encoders.BINARY,
-      TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long)] = {
-    val s = Option(sk.get())
-      .map(HllSketch.heapify)
-      .getOrElse(new HllSketch(lgK, TgtHllType.HLL_8))
-    rows.foreach { case (_, v) => s.update(v) }
-    sk.update(s.toUpdatableByteArray)
-    Iterator.single((key, Math.round(s.getCompositeEstimate)))
+  protected def step(key: Long, s: HllSketch, row: (Long, Long),
+      emit: ((Long, Long)) => Unit): HllSketch = {
+    s.update(row._2)
+    s
   }
+
+  override protected def finish(key: Long, s: HllSketch): Iterator[(Long, Long)] =
+    Iterator.single((key, Math.round(s.getCompositeEstimate)))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-key streaming Holt double-exponential (level + trend) monitor —
   * the trend-aware companion to [[EwmaProcessor]]'s level-only smoother,
@@ -25,30 +24,26 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * forecast = level + trend) for every row.
   */
 final class HoltProcessor
-    extends StatefulProcessor[Long, (Long, Long, Long, Long), (Long, Long, Long, Long, Long)] {
+    extends KeyedFold[Long, (Long, Long, Long, Long), (Long, Long), Option[(Long, Long)],
+      (Long, Long, Long, Long, Long)](
+      "lb", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
+      Ordering.by(r => (r._2, r._3))) {
 
-  @transient private var st: ValueState[(Long, Long)] = _
+  // None until the key's first event seeds (l, b) = (x, 0); a batch
+  // slice is never empty, so the fold always ends seeded
+  protected def load(stored: Option[(Long, Long)]): Option[(Long, Long)] = stored
+  protected def store(acc: Option[(Long, Long)]): (Long, Long) = acc.get
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, Long)]("lb",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Long, Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long, Long, Long, Long)] = {
-    var seeded = st.exists()
-    var (l, b) = if (seeded) st.get() else (0L, 0L)
-    val out = rows.toVector.sortBy(r => (r._2, r._3)).map {
-      case (_, us, _, cents) =>
-        if (!seeded) { l = cents; b = 0L; seeded = true }
-        else {
-          val l0 = l
-          l = (cents + l + b) >> 1
-          b = ((l - l0) + b) >> 1
-        }
-        (key, us, l, b, l + b)
+  protected def step(key: Long, acc: Option[(Long, Long)], row: (Long, Long, Long, Long),
+      emit: ((Long, Long, Long, Long, Long)) => Unit): Option[(Long, Long)] = {
+    val cents = row._4
+    val (l, b) = acc match {
+      case None => (cents, 0L)
+      case Some((l0, b0)) =>
+        val l1 = (cents + l0 + b0) >> 1
+        (l1, ((l1 - l0) + b0) >> 1)
     }
-    st.update((l, b))
-    out.iterator
+    emit((key, row._2, l, b, l + b))
+    Some((l, b))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-key running COUNT/SUM maintainer backing
   * [[graft.analytics.CdcOps.incrementalAggStream]] — the streaming half
@@ -21,20 +20,16 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * Input: (key, dCnt, dUnits). Output: (key, cnt, units).
   */
 final class IncrAggProcessor
-    extends StatefulProcessor[Long, (Long, Long, Long), (Long, Long, Long)] {
+    extends KeyedFold[Long, (Long, Long, Long), (Long, Long), (Long, Long), (Long, Long, Long)](
+      "agg", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), KeyedFold.arrival) {
 
-  @transient private var agg: ValueState[(Long, Long)] = _
+  protected def load(stored: Option[(Long, Long)]): (Long, Long) = stored.getOrElse((0L, 0L))
+  protected def store(acc: (Long, Long)): (Long, Long) = acc
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    agg = getHandle.getValueState[(Long, Long)]("agg",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
+  protected def step(key: Long, acc: (Long, Long), row: (Long, Long, Long),
+      emit: ((Long, Long, Long)) => Unit): (Long, Long) =
+    (acc._1 + row._2, acc._2 + row._3)
 
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
-    var (c, s) = Option(agg.get()).getOrElse((0L, 0L))
-    rows.foreach { case (_, dc, ds) => c += dc; s += ds }
-    agg.update((c, s))
-    Iterator.single((key, c, s))
-  }
+  override protected def finish(key: Long, acc: (Long, Long)): Iterator[(Long, Long, Long)] =
+    Iterator.single((key, acc._1, acc._2))
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.exec.FunctionExecutor
 import graft.model._
@@ -19,41 +20,6 @@ import graft.model._
   * [[LoopHarness]], which swaps the broker for a MemoryStream; the
   * topology code is identical).
   */
-/** Tuning surface of the reference job (StateFlowFlinkJob.java:34-40,
-  * 84-87) as explicit parameters:
-  *  - `trigger`: micro-batch pacing. `None` = as-fast-as-possible, the
-  *    analogue of `execution.buffer-timeout=0` (:36); a
-  *    `Trigger.ProcessingTime` adds deliberate batching latency.
-  *  - `statelessConcurrency` / `statelessTimeout`: the AsyncDataStream
-  *    capacity-1000 / 2 s settings for the create path (:84-87).
-  *  - `useTws`: transformWithState on RocksDB (the reference's
-  *    RocksDB-backed keyed state) vs flatMapGroupsWithState on the default
-  *    HDFS-backed store.
-  */
-final case class JobConfig(
-    trigger: Option[org.apache.spark.sql.streaming.Trigger] = None,
-    statelessConcurrency: Int = 128,
-    statelessTimeout: scala.concurrent.duration.FiniteDuration =
-      scala.concurrent.duration.DurationInt(2).seconds,
-    useTws: Boolean = true,
-    /** The reference's `--operators` list (StateFlowFlinkJob.java:56):
-      * when set, events for unlisted operators return FailedInvocation
-      * instead of entering the stateful path.
-      */
-    knownOperators: Option[Set[String]] = None,
-    /** Bounds per-entity state volume: entities idle longer than the TTL
-      * are dropped from the store (TWS path only; rejected with useTws =
-      * false). NONE = reference semantics (state lives forever).
-      *
-      * MIGRATION CLIFF: switching between NONE and a TTL flips the
-      * operator's TimeMode (None ↔ ProcessingTime), which Spark validates
-      * against the checkpoint's operator metadata — an existing
-      * deployment cannot toggle this against its old checkpointLocation;
-      * plan a state rebuild (fresh checkpoint) for the switch.
-      */
-    stateTtl: org.apache.spark.sql.streaming.TTLConfig =
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-
 object KafkaSupport {
 
   /** S1+S2: subscribe + protobuf-decode. */
@@ -81,37 +47,22 @@ object KafkaSupport {
   /** Full job: one streaming query, single-pass fan-out to both topics in
     * foreachBatch (the Spark shape for the reference's side outputs; the
     * feedback loop closes through the `internal` topic re-entering the
-    * source, exactly as StateFlowFlinkJob.java:143-147 + :50).
+    * source, exactly as StateFlowFlinkJob.java:143-147 + :50). The batch
+    * is persisted because it feeds two distributed writes.
     */
   def start(spark: SparkSession, bootstrap: String, executor: FunctionExecutor,
-      checkpoint: String,
-      config: JobConfig = JobConfig()): org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    if (config.useTws)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val writer = StateflowPipeline.eventsToEgress(readEvents(spark, bootstrap), executor,
-        statelessConcurrency = config.statelessConcurrency, useTws = config.useTws,
-        statelessTimeout = config.statelessTimeout,
-        knownOperators = config.knownOperators, stateTtl = config.stateTtl)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-    config.trigger.foreach(writer.trigger)
-    writer
-      .foreachBatch { (batch: Dataset[Route], _: Long) =>
-        batch.persist()
-        def sink(direction: Int, topic: String): Unit =
-          toKafkaRecords(batch.filter(_.direction == direction).map(_.eventValue))
-            .write.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("topic", topic)
-            .save()
-        sink(RouteDirection.CLIENT, "client_reply")
-        sink(RouteDirection.INTERNAL, "internal")
-        batch.unpersist()
-        ()
-      }
-      .start()
-  }
+      checkpoint: String, config: JobConfig = JobConfig()): StreamingQuery =
+    StateflowPipeline.start(readEvents(spark, bootstrap), executor, checkpoint, config) { batch =>
+      import spark.implicits._
+      batch.persist()
+      def sink(direction: Int, topic: String): Unit =
+        toKafkaRecords(batch.filter(_.direction == direction).map(_.eventValue))
+          .write.format("kafka")
+          .option("kafka.bootstrap.servers", bootstrap)
+          .option("topic", topic)
+          .save()
+      sink(RouteDirection.CLIENT, "client_reply")
+      sink(RouteDirection.INTERNAL, "internal")
+      batch.unpersist()
+    }
 }

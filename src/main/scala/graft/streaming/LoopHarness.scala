@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -13,51 +13,29 @@ import graft.model._
 
 /** In-process stand-in for the reference's Kafka plumbing: MemoryStream
   * replaces the `internal`+`client_request` source (StateFlowFlinkJob
-  * .java:47-54); a `foreachBatch` fan-out writer replaces the two
-  * FlinkKafkaProducers (:127-147), closing the feedback cycle by re-adding
-  * INTERNAL events to the source — exactly the reference's Kafka-loop
-  * topology with the broker swapped for memory.
+  * .java:47-54); the per-batch sink replaces the two FlinkKafkaProducers
+  * (:127-147), closing the feedback cycle by re-adding INTERNAL events to
+  * the source — exactly the reference's Kafka-loop topology with the
+  * broker swapped for memory.
   *
-  * The single-pass fan-out (persist once, N filtered writes) is the Spark
-  * shape for Flink side outputs; with a real Kafka sink the same
-  * foreachBatch body writes to the two topics instead.
+  * Egress routes every event to CLIENT or INTERNAL, so the sink runs one
+  * collect and splits it on the driver.
   */
 final class LoopHarness(spark: SparkSession, executor: FunctionExecutor,
-    useTws: Boolean = true, config: JobConfig = JobConfig()) {
+    config: JobConfig = JobConfig()) {
   import spark.implicits._
-
-  if (useTws)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   private val input = MemoryStream[Event](spark)
   private val clientBuf = mutable.Buffer.empty[Event]
 
-  private val writer =
-    StateflowPipeline.eventsToEgress(input.toDS(), executor, useTws = useTws,
-        statelessConcurrency = config.statelessConcurrency,
-        statelessTimeout = config.statelessTimeout,
-        knownOperators = config.knownOperators)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("graft-ckpt").toString)
-
-  config.trigger.foreach(writer.trigger)
-
-  val query: StreamingQuery = writer
-      .foreachBatch { (batch: Dataset[Route], _: Long) =>
-        batch.persist()
-        val client = batch.filter(_.direction == RouteDirection.CLIENT)
-          .map(_.eventValue).collect()
-        val internal = batch.filter(_.direction == RouteDirection.INTERNAL)
-          .map(_.eventValue).collect()
-        batch.unpersist()
-        clientBuf.synchronized { clientBuf ++= client }
-        // the feedback loop: INTERNAL routes re-enter the source
-        if (internal.nonEmpty) input.addData(internal.toIndexedSeq)
-        ()
-      }
-      .start()
+  val query: StreamingQuery = StateflowPipeline.start(input.toDS(), executor,
+      Files.createTempDirectory("graft-ckpt").toString, config) { batch =>
+    val (client, internal) = batch.map(r => (r.direction, r.eventValue)).collect()
+      .partition(_._1 == RouteDirection.CLIENT)
+    clientBuf.synchronized { clientBuf ++= client.map(_._2) }
+    // the feedback loop: INTERNAL routes re-enter the source
+    if (internal.nonEmpty) input.addData(internal.map(_._2).toIndexedSeq)
+  }
 
   def send(events: Event*): Unit = input.addData(events)
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-entity latest-wins row maintainer backing
   * [[graft.analytics.CdcOps.mergeStream]] — the streaming half of the
@@ -22,26 +21,22 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * Output: (entity, etype, value, ts_us, op).
   */
 final class MergeStateProcessor
-    extends StatefulProcessor[Long, (Long, String, Double, Long, Long, String), (Long, String, Double, Long, String)] {
+    extends KeyedFold[Long, (Long, String, Double, Long, Long, String), (Long, Long),
+      Option[(Long, Long)], (Long, String, Double, Long, String)](
+      "stamp", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
+      Ordering.by(r => (r._4, r._5))) {
 
-  @transient private var stamp: ValueState[(Long, Long)] = _
+  // a new key's first row is always newer, so the fold always ends stamped
+  protected def load(stored: Option[(Long, Long)]): Option[(Long, Long)] = stored
+  protected def store(acc: Option[(Long, Long)]): (Long, Long) = acc.get
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    stamp = getHandle.getValueState[(Long, Long)]("stamp",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, String, Double, Long, Long, String)],
-      timerValues: TimerValues): Iterator[(Long, String, Double, Long, String)] = {
-    var cur = Option(stamp.get())
-    val out = Vector.newBuilder[(Long, String, Double, Long, String)]
-    rows.toVector.sortBy(r => (r._4, r._5)).foreach { case (_, et, v, ts, tie, op) =>
-      if (cur.forall(c => c._1 < ts || (c._1 == ts && c._2 < tie))) {
-        out += ((key, et, v, ts, op))
-        cur = Some((ts, tie))
-      }
-    }
-    cur.foreach(stamp.update)
-    out.result().iterator
+  protected def step(key: Long, acc: Option[(Long, Long)],
+      row: (Long, String, Double, Long, Long, String),
+      emit: ((Long, String, Double, Long, String)) => Unit): Option[(Long, Long)] = {
+    val (_, et, v, ts, tie, op) = row
+    if (acc.forall(c => c._1 < ts || (c._1 == ts && c._2 < tie))) {
+      emit((key, et, v, ts, op))
+      Some((ts, tie))
+    } else acc
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Running OHLC bar state, keyed by the (series, bucket) composite the
   * caller encodes into the grouping key: open/close carry their
@@ -18,34 +17,32 @@ final case class OhlcState(n: Long, oUs: Long, oId: Long, oCents: Long,
   * the key: (key, n, open_cents, high_cents, low_cents, close_cents).
   */
 final class OhlcProcessor
-    extends StatefulProcessor[String, (String, Long, Long, Long), (String, Long, Long, Long, Long, Long)] {
+    extends KeyedFold[String, (String, Long, Long, Long), OhlcState, OhlcState,
+      (String, Long, Long, Long, Long, Long)](
+      "ohlc", Encoders.product[OhlcState], KeyedFold.arrival) {
 
-  @transient private var st: ValueState[OhlcState] = _
+  // null until the key's first row opens the bar
+  protected def load(stored: Option[OhlcState]): OhlcState = stored.orNull
+  protected def store(acc: OhlcState): OhlcState = acc
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[OhlcState]("ohlc",
-      Encoders.product[OhlcState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String,
-      rows: Iterator[(String, Long, Long, Long)],
-      timerValues: TimerValues): Iterator[(String, Long, Long, Long, Long, Long)] = {
-    var s = Option(st.get()).orNull
-    rows.foreach { case (_, us, id, cents) =>
-      if (s == null)
-        s = OhlcState(1L, us, id, cents, cents, cents, us, id, cents)
-      else {
-        val open =
-          if (us < s.oUs || (us == s.oUs && id < s.oId)) (us, id, cents)
-          else (s.oUs, s.oId, s.oCents)
-        val close =
-          if (us > s.cUs || (us == s.cUs && id > s.cId)) (us, id, cents)
-          else (s.cUs, s.cId, s.cCents)
-        s = OhlcState(s.n + 1, open._1, open._2, open._3,
-          math.max(s.high, cents), math.min(s.low, cents),
-          close._1, close._2, close._3)
-      }
+  protected def step(key: String, s: OhlcState, row: (String, Long, Long, Long),
+      emit: ((String, Long, Long, Long, Long, Long)) => Unit): OhlcState = {
+    val (_, us, id, cents) = row
+    if (s == null) OhlcState(1L, us, id, cents, cents, cents, us, id, cents)
+    else {
+      val open =
+        if (us < s.oUs || (us == s.oUs && id < s.oId)) (us, id, cents)
+        else (s.oUs, s.oId, s.oCents)
+      val close =
+        if (us > s.cUs || (us == s.cUs && id > s.cId)) (us, id, cents)
+        else (s.cUs, s.cId, s.cCents)
+      OhlcState(s.n + 1, open._1, open._2, open._3,
+        math.max(s.high, cents), math.min(s.low, cents),
+        close._1, close._2, close._3)
     }
-    st.update(s)
-    Iterator.single((key, s.n, s.oCents, s.high, s.low, s.cCents))
   }
+
+  override protected def finish(key: String,
+      s: OhlcState): Iterator[(String, Long, Long, Long, Long, Long)] =
+    Iterator.single((key, s.n, s.oCents, s.high, s.low, s.cCents))
 }

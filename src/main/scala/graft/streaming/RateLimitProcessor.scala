@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-key streaming token-bucket admission audit — the third
   * constant-state monitor next to [[CusumProcessor]] (drift) and
@@ -21,30 +20,21 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * saw — identical row set to the batch fold.
   */
 final class RateLimitProcessor(cap: Long, rate: Long)
-    extends StatefulProcessor[Long, (Long, Long, Long, Long), (Long, Long, Long, Long)] {
+    extends KeyedFold[Long, (Long, Long, Long, Long), (Long, Long), (Long, Long), (Long, Long, Long, Long)](
+      "s", Encoders.product[(Long, Long)], Ordering.by(r => (r._2, r._3))) {
 
-  @transient private var st: ValueState[(Long, Long)] = _
+  // (tokens, last event-time µs); tokens -1 = no prior event
+  protected def load(stored: Option[(Long, Long)]): (Long, Long) = stored.getOrElse((-1L, 0L))
+  protected def store(acc: (Long, Long)): (Long, Long) = acc
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, Long)]("s",
-      Encoders.product[(Long, Long)], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Long, Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long, Long, Long)] = {
-    var (tok, lastUs) =
-      if (st.exists()) st.get() else (-1L, 0L)   // -1 = no prior event
-    val out = rows.toVector.sortBy(r => (r._2, r._3)).flatMap {
-      case (_, us, _, cost) =>
-        val avail =
-          if (tok < 0L) cap
-          else math.min(cap, tok + rate * ((us - lastUs) / 1000000L))
-        val admitted = avail >= cost
-        tok = if (admitted) avail - cost else avail
-        lastUs = us
-        if (admitted) None else Some((key, us, cost, avail))
-    }
-    st.update((tok, lastUs))
-    out.iterator
+  protected def step(key: Long, acc: (Long, Long), row: (Long, Long, Long, Long),
+      emit: ((Long, Long, Long, Long)) => Unit): (Long, Long) = {
+    val (tok, lastUs) = acc
+    val (_, us, _, cost) = row
+    val avail =
+      if (tok < 0L) cap
+      else math.min(cap, tok + rate * ((us - lastUs) / 1000000L))
+    if (avail >= cost) (avail - cost, us)
+    else { emit((key, us, cost, avail)); (avail, us) }
   }
 }

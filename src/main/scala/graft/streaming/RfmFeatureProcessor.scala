@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-user RFM feature maintainer — the streaming half of
   * [[graft.analytics.EventsQueries]]'s qe_rfm segmentation: state is the
@@ -20,24 +19,19 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * (user, lastMicros, f, m).
   */
 final class RfmFeatureProcessor
-    extends StatefulProcessor[Long, (Long, Long, Long), (Long, Long, Long, Long)] {
+    extends KeyedFold[Long, (Long, Long, Long), (Long, Long, Long), (Long, Long, Long),
+      (Long, Long, Long, Long)](
+      "rfm", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
+      KeyedFold.arrival) {
 
-  @transient private var st: ValueState[(Long, Long, Long)] = _
+  protected def load(stored: Option[(Long, Long, Long)]): (Long, Long, Long) =
+    stored.getOrElse((Long.MinValue, 0L, 0L))
+  protected def store(acc: (Long, Long, Long)): (Long, Long, Long) = acc
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[(Long, Long, Long)]("rfm",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong),
-      TTLConfig.NONE)
+  protected def step(key: Long, acc: (Long, Long, Long), row: (Long, Long, Long),
+      emit: ((Long, Long, Long, Long)) => Unit): (Long, Long, Long) =
+    (math.max(acc._1, row._2), acc._2 + 1, acc._3 + row._3)
 
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, Long, Long, Long)] = {
-    var (last, c, s) = Option(st.get()).getOrElse((Long.MinValue, 0L, 0L))
-    rows.foreach { case (_, tm, cents) =>
-      if (tm > last) last = tm
-      c += 1; s += cents
-    }
-    st.update((last, c, s))
-    Iterator.single((key, last, c, s))
-  }
+  override protected def finish(key: Long, acc: (Long, Long, Long)): Iterator[(Long, Long, Long, Long)] =
+    Iterator.single((key, acc._1, acc._2, acc._3))
 }

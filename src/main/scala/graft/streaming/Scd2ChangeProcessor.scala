@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-entity attribute change detector backing
   * [[graft.analytics.CdcOps.scd2Stream]] — the streaming half of the SCD2
@@ -19,25 +18,15 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * Input: (entity, attr, ts_us, tie). Output: (entity, attr, from_us).
   */
 final class Scd2ChangeProcessor
-    extends StatefulProcessor[Long, (Long, String, Long, Long), (Long, String, Long)] {
+    extends KeyedFold[Long, (Long, String, Long, Long), String, Option[String], (Long, String, Long)](
+      "lastAttr", Encoders.STRING, Ordering.by(r => (r._3, r._4))) {
 
-  @transient private var last: ValueState[String] = _
+  // a batch slice is never empty, so the fold always ends with an attribute
+  protected def load(stored: Option[String]): Option[String] = stored
+  protected def store(acc: Option[String]): String = acc.get
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    last = getHandle.getValueState[String]("lastAttr", Encoders.STRING, TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, String, Long, Long)],
-      timerValues: TimerValues): Iterator[(Long, String, Long)] = {
-    var cur = Option(last.get())
-    val out = Vector.newBuilder[(Long, String, Long)]
-    rows.toVector.sortBy(r => (r._3, r._4)).foreach { case (_, attr, ts, _) =>
-      if (!cur.contains(attr)) {
-        out += ((key, attr, ts))
-        cur = Some(attr)
-      }
-    }
-    cur.foreach(last.update)
-    out.result().iterator
-  }
+  protected def step(key: Long, acc: Option[String], row: (Long, String, Long, Long),
+      emit: ((Long, String, Long)) => Unit): Option[String] =
+    if (acc.contains(row._2)) acc
+    else { emit((key, row._2, row._3)); Some(row._2) }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Per-asset state behind [[graft.analytics.MultimodalOps.sceneCutStream]]:
   * the previous frame's (histogram, length) plus the running
@@ -21,31 +20,28 @@ final case class SceneState(hist: Seq[Long], flen: Int, n: Long,
     cuts: Long, first: Int)
 
 final class SceneCutProcessor
-    extends StatefulProcessor[Long, (Long, Int, Int, Seq[Long]), (Long, Long, Long, Int)] {
+    extends KeyedFold[Long, (Long, Int, Int, Seq[Long]), SceneState, SceneState,
+      (Long, Long, Long, Int)](
+      "scene", Encoders.product[SceneState], Ordering.by(_._2)) {
 
-  @transient private var st: ValueState[SceneState] = _
+  protected def load(stored: Option[SceneState]): SceneState =
+    stored.getOrElse(SceneState(Nil, 0, 0L, 0L, -1))
+  protected def store(s: SceneState): SceneState = s
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[SceneState]("scene",
-      Encoders.product[SceneState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long,
-      rows: Iterator[(Long, Int, Int, Seq[Long])],
-      timerValues: TimerValues): Iterator[(Long, Long, Long, Int)] = {
-    var s = Option(st.get()).getOrElse(SceneState(Nil, 0, 0L, 0L, -1))
-    rows.toSeq.sortBy(_._2).foreach { case (_, idx, flen, hist) =>
-      if (s.n > 0L) {
-        var l1 = 0L
-        var i = 0
-        while (i < hist.length) { l1 += math.abs(hist(i) - s.hist(i)); i += 1 }
-        if (2L * l1 > flen + s.flen) {
-          s = s.copy(cuts = s.cuts + 1,
-            first = if (s.first < 0) idx else s.first)
-        }
-      }
-      s = s.copy(hist = hist, flen = flen, n = s.n + 1)
+  protected def step(key: Long, s: SceneState, row: (Long, Int, Int, Seq[Long]),
+      emit: ((Long, Long, Long, Int)) => Unit): SceneState = {
+    val (_, idx, flen, hist) = row
+    var next = s
+    if (s.n > 0L) {
+      var l1 = 0L
+      var i = 0
+      while (i < hist.length) { l1 += math.abs(hist(i) - s.hist(i)); i += 1 }
+      if (2L * l1 > flen + s.flen)
+        next = s.copy(cuts = s.cuts + 1, first = if (s.first < 0) idx else s.first)
     }
-    st.update(s)
-    Iterator.single((key, s.n, s.cuts, s.first))
+    next.copy(hist = hist, flen = flen, n = s.n + 1)
   }
+
+  override protected def finish(key: Long, s: SceneState): Iterator[(Long, Long, Long, Int)] =
+    Iterator.single((key, s.n, s.cuts, s.first))
 }

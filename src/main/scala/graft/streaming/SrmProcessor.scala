@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Per-experiment sample-ratio-mismatch monitor backing
   * [[graft.analytics.StatTests.srmStream]] — the A/B member of the
@@ -18,21 +18,23 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   * srm_detected).
   */
 final class SrmProcessor(stateTtl: TTLConfig = TTLConfig.NONE)
-    extends StatefulProcessor[String, (String, Long), (String, Long, Long, Long, Boolean)] {
+    extends KeyedFold[String, (String, Long), (Long, Long), (Long, Long),
+      (String, Long, Long, Long, Boolean)](
+      "armCounts", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
+      KeyedFold.arrival, stateTtl) {
 
   private val CritMicro = BigInt(10827566L)   // χ²(0.001, df=1) · 10⁶
 
-  @transient private var counts: ValueState[(Long, Long)] = _
+  protected def load(stored: Option[(Long, Long)]): (Long, Long) = stored.getOrElse((0L, 0L))
+  protected def store(acc: (Long, Long)): (Long, Long) = acc
 
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    counts = getHandle.getValueState[(Long, Long)]("armCounts",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), stateTtl)
+  protected def step(key: String, acc: (Long, Long), row: (String, Long),
+      emit: ((String, Long, Long, Long, Boolean)) => Unit): (Long, Long) =
+    if (row._2 == 0L) (acc._1 + 1, acc._2) else (acc._1, acc._2 + 1)
 
-  override def handleInputRows(key: String, rows: Iterator[(String, Long)],
-      timerValues: TimerValues): Iterator[(String, Long, Long, Long, Boolean)] = {
-    var (a, b) = if (counts.exists()) counts.get() else (0L, 0L)
-    rows.foreach { case (_, v) => if (v == 0L) a += 1 else b += 1 }
-    counts.update((a, b))
+  override protected def finish(key: String,
+      acc: (Long, Long)): Iterator[(String, Long, Long, Long, Boolean)] = {
+    val (a, b) = acc
     val n = a + b
     val (chisq, detected) =
       if (n == 0L) (0L, false)

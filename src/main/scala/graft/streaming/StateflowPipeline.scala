@@ -32,8 +32,9 @@ import graft.routing.Routing
   *
   * Flink side outputs become filters on one routed stream; the Kafka
   * feedback cycle (topic `internal`, StateFlowFlinkJob.java:143-147) is the
-  * sink's job — see [[graft.streaming.LoopHarness]] (tests) and the Kafka
-  * wiring notes in `KafkaSupport`.
+  * sink's job — [[StateflowPipeline.start]] takes it as a per-batch
+  * function, which [[graft.streaming.LoopHarness]] (tests) and
+  * `KafkaSupport` supply.
   */
 object StateflowPipeline {
 
@@ -42,46 +43,27 @@ object StateflowPipeline {
     * `ValueState<ByteString>` (InvokeStatefulLambda.java:35-116). State is
     * an opaque byte blob, initialized empty on first touch (:75-77) and
     * overwritten wholesale with each executor reply (:109).
+    *
+    * Per-key FIFO: the groupByKey shuffle loses arrival order, so rows
+    * carry an ingress sequence (Kafka (partition,offset) analogue) and
+    * are re-sorted inside the group — Flink's keyed-order guarantee (the
+    * reference relies on it for read-modify-write state).
     */
   final class StatefulInvokeProcessor(executor: FunctionExecutor,
       stateTtl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, (Route, Long), Event] {
+      extends KeyedFold[String, (Route, Long), Array[Byte], Array[Byte], Event](
+        "operatorState", Encoders.BINARY, Ordering.by(_._2), stateTtl) {
 
-    @transient private var state: ValueState[Array[Byte]] = _
+    protected def load(stored: Option[Array[Byte]]): Array[Byte] =
+      stored.getOrElse(Array.emptyByteArray)
+    protected def store(acc: Array[Byte]): Array[Byte] = acc
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[Array[Byte]]("operatorState", Encoders.BINARY, stateTtl)
-
-    override def handleInputRows(key: String, rows: Iterator[(Route, Long)],
-        timerValues: TimerValues): Iterator[Event] = {
-      // Per-key FIFO: the groupByKey shuffle loses arrival order, so rows
-      // carry an ingress sequence (Kafka (partition,offset) analogue) and
-      // are re-sorted inside the group — Flink's keyed-order guarantee
-      // (the reference relies on it for read-modify-write state).
-      val out = Vector.newBuilder[Event]
-      rows.toVector.sortBy(_._2).foreach { case (route, _) =>
-        val cur = if (state.exists()) state.get() else Array.emptyByteArray
-        val reply = executor.invoke(EventRequestReply(route.eventValue, cur, route.routeName))
-        state.update(reply.state)
-        out += reply.event
-      }
-      out.result().iterator
+    protected def step(key: String, acc: Array[Byte], row: (Route, Long),
+        emit: Event => Unit): Array[Byte] = {
+      val reply = executor.invoke(EventRequestReply(row._1.eventValue, acc, row._1.routeName))
+      emit(reply.event)
+      reply.state
     }
-  }
-
-  /** Same semantics on flatMapGroupsWithState (works against the default
-    * HDFS-backed state store; transformWithState needs RocksDB).
-    */
-  private def statefulInvokeFMG(executor: FunctionExecutor)(
-      key: String, rows: Iterator[(Route, Long)], state: GroupState[Array[Byte]]): Iterator[Event] = {
-    var cur = state.getOption.getOrElse(Array.emptyByteArray)
-    val out = rows.toVector.sortBy(_._2).map { case (route, _) =>
-      val reply = executor.invoke(EventRequestReply(route.eventValue, cur, route.routeName))
-      cur = reply.state
-      reply.event
-    }
-    state.update(cur)
-    out.iterator
   }
 
   /** Bounded-concurrency stateless invoke: the reference hides Lambda
@@ -171,25 +153,10 @@ object StateflowPipeline {
   private def isCreate(r: Route): Boolean = r.routeName.endsWith("-create")
 
   /** Assemble the full topology. Works on both streaming and batch
-    * Datasets; `useTws` selects transformWithState (RocksDB state store)
-    * vs flatMapGroupsWithState. `statelessConcurrency`/`statelessTimeout`
-    * mirror the reference's async capacity 1000 / timeout 2 s
-    * (StateFlowFlinkJob.java:84-87).
+    * Datasets; `config` carries the reference's tuning surface.
     */
   def eventsToEgress(events: Dataset[Event], executor: FunctionExecutor,
-      statelessConcurrency: Int = 128, useTws: Boolean = true,
-      statelessTimeout: FiniteDuration = 2.seconds,
-      knownOperators: Option[Set[String]] = None,
-      // Bounds state volume for abandoned keys (idle entities never
-      // cleaned up otherwise — at stream scale state grows with every key
-      // ever seen). NONE = reference semantics (state lives forever).
-      // TWS path only: flatMapGroupsWithState has no per-state TTL.
-      stateTtl: TTLConfig = TTLConfig.NONE): Dataset[Route] = {
-    // fail fast: the FMG fallback has no per-state TTL, and silently
-    // dropping the setting would unbound exactly the state the caller
-    // asked to bound
-    require(stateTtl == TTLConfig.NONE || useTws,
-      "stateTtl requires the transformWithState path (useTws = true)")
+      config: JobConfig = JobConfig()): Dataset[Route] = {
     val spark = events.sparkSession
     import spark.implicits._
 
@@ -207,7 +174,7 @@ object StateflowPipeline {
     val ingressEgressBase = routed.filter(_.direction == RouteDirection.EGRESS)
       .map(_.eventValue)
 
-    val (internal, ingressEgress) = knownOperators match {
+    val (internal, ingressEgress) = config.knownOperators match {
       case Some(ops) =>
         val known = (r: Route) => ops.contains(r.routeName.stripSuffix("-create"))
         (internalAll.filter(r => known(r)),
@@ -218,14 +185,14 @@ object StateflowPipeline {
 
     // create path: A1 async stateless invoke + A2 rekey
     val created = internal.filter(isCreate _)
-      .mapPartitions(invokeStateless(executor, statelessConcurrency, statelessTimeout))
+      .mapPartitions(invokeStateless(executor, config.statelessConcurrency, config.statelessTimeout))
       .map(Routing.rekeyCreated)
 
     // U1 union + K1 keyBy + P1 stateful invoke. The ingress sequence is
     // attached BEFORE the keyBy shuffle (per source partition, monotonic in
     // arrival order — the (partition, offset) stand-in) so the processor
     // can restore per-key FIFO after the shuffle.
-    val keyed = internal.filter((r: Route) => !isCreate(r)).union(created)
+    val replies = internal.filter((r: Route) => !isCreate(r)).union(created)
       .mapPartitions { it =>
         // partition-stamped arrival sequence (monotonically_increasing_id
         // is rejected in streaming plans; this is its exact construction)
@@ -237,24 +204,62 @@ object StateflowPipeline {
       // per operator name): two operators invoked with the same entity key
       // must not share a state blob. routeName is "ns/name" (no NUL),
       // so the composite is collision-free.
-      .groupByKey(t => t._1.routeName + "\u0000" + t._1.key)
-    val replies =
-      if (useTws) {
-        // TTL'd state needs the processing-time clock; without a TTL keep
-        // the reference's time-agnostic mode
-        val timeMode =
-          if (stateTtl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-        keyed.transformWithState(
-          new StatefulInvokeProcessor(executor, stateTtl), timeMode, OutputMode.Append())
-      }
-      else
-        keyed.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout())(
-          statefulInvokeFMG(executor))(Encoders.BINARY, implicitly)
+      .transform(new StatefulInvokeProcessor(executor, config.stateTtl)
+        .byKey(t => t._1.routeName + "\u0000" + t._1.key))
 
     // U2 union + R6 egress routing
     ingressEgress.union(replies).map(Routing.egress)
   }
+
+  /** Start the job: the topology over `events` with keyed state on the
+    * RocksDB store (the reference's RocksDB-backed keyed state), the
+    * checkpoint at `checkpoint` and the pacing of `config.trigger`; `sink`
+    * writes each micro-batch's routes — the reference's two producers
+    * (StateFlowFlinkJob.java:127-147), whose INTERNAL write closes the
+    * feedback loop.
+    */
+  def start(events: Dataset[Event], executor: FunctionExecutor, checkpoint: String,
+      config: JobConfig)(sink: Dataset[Route] => Unit): StreamingQuery = {
+    events.sparkSession.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val writer = eventsToEgress(events, executor, config)
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+    config.trigger.foreach(writer.trigger)
+    writer.foreachBatch((batch: Dataset[Route], _: Long) => sink(batch)).start()
+  }
 }
+
+/** Tuning surface of the reference job (StateFlowFlinkJob.java:34-40,
+  * 84-87) as explicit parameters:
+  *  - `trigger`: micro-batch pacing. `None` = as-fast-as-possible, the
+  *    analogue of `execution.buffer-timeout=0` (:36); a
+  *    `Trigger.ProcessingTime` adds deliberate batching latency.
+  *  - `statelessConcurrency` / `statelessTimeout`: the AsyncDataStream
+  *    capacity-1000 / 2 s settings for the create path (:84-87).
+  */
+final case class JobConfig(
+    trigger: Option[Trigger] = None,
+    statelessConcurrency: Int = 128,
+    statelessTimeout: FiniteDuration = 2.seconds,
+    /** The reference's `--operators` list (StateFlowFlinkJob.java:56):
+      * when set, events for unlisted operators return FailedInvocation
+      * instead of entering the stateful path.
+      */
+    knownOperators: Option[Set[String]] = None,
+    /** Bounds per-entity state volume: entities idle longer than the TTL
+      * are dropped from the store — idle entities are never cleaned up
+      * otherwise, so state grows with every key ever seen. NONE =
+      * reference semantics (state lives forever).
+      *
+      * MIGRATION CLIFF: switching between NONE and a TTL flips the
+      * operator's TimeMode (None ↔ ProcessingTime), which Spark validates
+      * against the checkpoint's operator metadata — an existing
+      * deployment cannot toggle this against its old checkpointLocation;
+      * plan a state rebuild (fresh checkpoint) for the switch.
+      */
+    stateTtl: TTLConfig = TTLConfig.NONE)
 
 /** Shared daemon thread pool for the stateless-invoke path. */
 private object StatelessPool {

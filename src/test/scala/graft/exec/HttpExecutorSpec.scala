@@ -54,7 +54,7 @@ class HttpExecutorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("full pipeline over HTTP: create, stateful increments, state read") {
     val executor = new HttpFunctionExecutor(s"http://127.0.0.1:$port/invoke")
-    val h = new LoopHarness(spark, executor, useTws = false)
+    val h = new LoopHarness(spark, executor)
     try {
       val acct = FunctionType("global", "Account", stateful = true)
       def delta(v: Long) = ByteBuffer.allocate(8).putLong(v).array()

@@ -24,7 +24,7 @@ class MeteredExecutorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("accumulators count every executor invocation with latency") {
     val metered = MeteredExecutor(new LocalCounterExecutor, spark.sparkContext)
-    val h = new LoopHarness(spark, metered, useTws = false)
+    val h = new LoopHarness(spark, metered)
     try {
       val k = FunctionAddress(FunctionType("m", "Cnt", stateful = true), "mk")
       def delta(v: Long) = ByteBuffer.allocate(8).putLong(v).array()

@@ -29,8 +29,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def delta(v: Long): Array[Byte] = ByteBuffer.allocate(8).putLong(v).array()
   private def asLong(b: Array[Byte]): Long = ByteBuffer.wrap(b).getLong
 
-  private def withHarness(useTws: Boolean)(body: LoopHarness => Unit): Unit = {
-    val h = new LoopHarness(spark, new LocalCounterExecutor, useTws = useTws)
+  private def withHarness(body: LoopHarness => Unit): Unit = {
+    val h = new LoopHarness(spark, new LocalCounterExecutor)
     try body(h) finally h.stop()
   }
 
@@ -61,15 +61,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("counter entity: init → +1 ×3 → get == 3 (transformWithState)") {
-    withHarness(useTws = true)(counterScenario)
-  }
-
-  test("counter entity: init → +1 ×3 → get == 3 (flatMapGroupsWithState)") {
-    withHarness(useTws = false)(counterScenario)
+    withHarness(counterScenario)
   }
 
   test("ping short-circuits to Pong without touching state") {
-    withHarness(useTws = false) { h =>
+    withHarness { h =>
       h.send(Event.request("p1", Event.emptyAddress, Request.Ping))
       h.drain()
       val pong = h.clientReplies.find(_.eventId == "p1")
@@ -78,7 +74,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("EventFlow walks a 2-hop plan through the feedback loop and returns") {
-    withHarness(useTws = false) { h =>
+    withHarness { h =>
       // plan: invoke global/Account/ka then global/Account/kb, then RETURN.
       val first = EventFlowNode(FunctionAddress(acct, "ka"), "INVOKE")
       val plan = "global/Account/kb"
@@ -99,7 +95,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("per-key FIFO within one batch: SetState then increments apply in order") {
-    withHarness(useTws = false) { h =>
+    withHarness { h =>
       val k = FunctionAddress(acct, "ord1")
       // all three in ONE batch; only arrival order gives 102 (SetState
       // first), a reordering yields 100 (SetState overwrites) or 2
@@ -115,7 +111,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("per-key isolation: interleaved keys accumulate independently") {
-    withHarness(useTws = false) { h =>
+    withHarness { h =>
       val ka = FunctionAddress(acct, "x1")
       val kb = FunctionAddress(acct, "x2")
       h.send(
@@ -135,7 +131,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // namespace) PER OPERATOR (StateFlowFlinkJob.java:101-106 inside the
     // operators loop); entity key 'u1' of global/Account and entity key
     // 'u1' of global/Cart must not share a state blob.
-    withHarness(useTws = false) { h =>
+    withHarness { h =>
       val cart = FunctionType("global", "Cart", stateful = true)
       val accU1 = FunctionAddress(acct, "u1")
       val cartU1 = FunctionAddress(cart, "u1")
@@ -159,7 +155,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // .java:86-87): per-request timeout, no head-of-line blocking. The
     // stuck request must yield FailedInvocation at ~2 s — not 2 s × batch —
     // and must not delay the other creates in the same partition.
-    val h = new LoopHarness(spark, new SlowOneExecutor("slow1", 30000), useTws = false)
+    val h = new LoopHarness(spark, new SlowOneExecutor("slow1", 30000))
     try {
       val t0 = System.nanoTime()
       h.send(
@@ -185,7 +181,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // -66): an event addressed to an operator with no side output would
     // kill the reference job; with knownOperators set we return
     // FailedInvocation instead while listed operators work normally.
-    val h = new LoopHarness(spark, new LocalCounterExecutor, useTws = false,
+    val h = new LoopHarness(spark, new LocalCounterExecutor,
       config = JobConfig(knownOperators = Some(Set("global/Account"))))
     try {
       val ghost = FunctionType("global", "Ghost", stateful = true)
@@ -225,7 +221,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // feedback micro-batches, (b) per-key serialization held while four
     // flows hammered each entity concurrently, and (c) state namespaces
     // stayed isolated (each key's count is exactly its visit total).
-    withHarness(useTws = false) { h =>
+    withHarness { h =>
       val keys = Vector("soak-a", "soak-b", "soak-c", "soak-d")
       val Hops = 52
       for (i <- keys.indices) {

@@ -23,9 +23,13 @@ import graft.model._
   */
 class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
+  // every keyed-state test here runs on the RocksDB store, which
+  // transformWithState requires
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
@@ -36,28 +40,24 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def delta(v: Long): Array[Byte] = ByteBuffer.allocate(8).putLong(v).array()
   private def asLong(b: Array[Byte]): Long = ByteBuffer.wrap(b).getLong
 
-  private def restartScenario(useTws: Boolean, key: String): Unit = {
+  /** Per-batch sink of [[StateflowPipeline.start]] that keeps the CLIENT replies. */
+  private def collectReplies(into: mutable.Buffer[Event])(batch: Dataset[Route]): Unit = {
     import spark.implicits._
-    if (useTws)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val client = batch.filter(_.direction == RouteDirection.CLIENT)
+      .map(_.eventValue).collect()
+    into.synchronized { into ++= client }
+  }
+
+  test("state survives restart on transformWithState + RocksDB") {
+    import spark.implicits._
     val ckpt = Files.createTempDirectory("graft-restart").toString
     val input = MemoryStream[Event](spark)
     val replies = mutable.Buffer.empty[Event]
 
-    def startQuery() =
-      StateflowPipeline.eventsToEgress(input.toDS(), new LocalCounterExecutor, useTws = useTws)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: Dataset[Route], _: Long) =>
-          val client = batch.filter(_.direction == RouteDirection.CLIENT)
-            .map(_.eventValue).collect()
-          replies.synchronized { replies ++= client }
-          ()
-        }
-        .start()
+    def startQuery() = StateflowPipeline.start(input.toDS(), new LocalCounterExecutor,
+      ckpt, JobConfig())(collectReplies(replies))
 
-    val keyed = FunctionAddress(acct, key)
+    val keyed = FunctionAddress(acct, "rk2")
     val q1 = startQuery()
     input.addData(Event.request("r1", keyed, Request.InvokeStateful, delta(2)))
     input.addData(Event.request("r2", keyed, Request.InvokeStateful, delta(3)))
@@ -75,19 +75,8 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(asLong(got.get.payload) == 5L, "state lost across restart")
   }
 
-  test("state survives query stop + restart from the same checkpoint") {
-    restartScenario(useTws = false, key = "rk1")
-  }
-
-  test("state survives restart on transformWithState + RocksDB") {
-    restartScenario(useTws = true, key = "rk2")
-  }
-
   test("streaming near-dup: a later-batch near-duplicate is flagged") {
     import spark.implicits._
-    // transformWithState needs the RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     val input = MemoryStream[(Long, String)](spark)
@@ -118,8 +107,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming weighted reservoir equals the batch sampler on everything seen") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(String, Long, Long)](spark)
     val out = graft.analytics.TextOps.weightedReservoirStream(
       input.toDS().toDF("stratum", "doc_id", "w"), k = 3)
@@ -156,8 +143,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming scene cuts equal the batch detector across a batch-split cut") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(Long, Int, Int, Seq[Long])](spark)
     val out = graft.analytics.MultimodalOps.sceneCutStream(
       input.toDS().toDF("doc_id", "frame_idx", "flen", "hist"))
@@ -189,8 +174,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming OHLC equals the batch struct-order aggregation with late data") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(String, Long, Long, Long)](spark)
     val out = graft.analytics.EventsQueries.ohlcStream(
       input.toDS().toDF("key", "us", "event_id", "cents"))
@@ -217,8 +200,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming SCD2 change capture equals the batch LAG collapse") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, unix_micros}
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(Long, String, java.sql.Timestamp, Long)](spark)
     val out = graft.analytics.CdcOps.scd2Stream(
       input.toDS().toDF("user_id", "event_type", "ts", "event_id"),
@@ -251,8 +232,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming changelog merge equals the batch latest-wins state; stale updates suppressed") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(Long, String, Double, Long, Long, String)](spark)
     val out = graft.analytics.CdcOps.mergeStream(
       input.toDS().toDF("k", "et", "v", "ts_us", "tie", "op"),
@@ -290,8 +269,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming near-dup: band state survives a checkpoint restart") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     val ckpt = Files.createTempDirectory("graft-neardup-restart").toString
@@ -379,8 +356,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming RFM features: last emission per user equals the batch aggregate") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(Long, Timestamp, Double)](spark) // (user, ts, value)
     val out = graft.analytics.EventsQueries.rfmFeaturesStream(
       input.toDS().toDF("user_id", "ts", "value"))
@@ -416,8 +391,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming incremental aggregate equals the batch view over all deltas") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(Long, String, Long)](spark) // (key, op, cents)
     val out = graft.analytics.CdcOps.incrementalAggStream(
       input.toDS().toDF("k", "op", "cents"), "k", "cents")
@@ -542,8 +515,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("transformWithState event-time timers: session emits when watermark passes the gap") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[(Long, Timestamp, Double)](spark)
     val sessions = input.toDS().toDF("user_id", "ts", "value")
       .withWatermark("ts", "10 minutes")
@@ -713,7 +684,7 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("non-default trigger: pipeline correct under Trigger.ProcessingTime") {
     import org.apache.spark.sql.streaming.Trigger
-    val h = new LoopHarness(spark, new LocalCounterExecutor, useTws = false,
+    val h = new LoopHarness(spark, new LocalCounterExecutor,
       config = JobConfig(trigger = Some(Trigger.ProcessingTime("50 milliseconds"))))
     try {
       val k = FunctionAddress(acct, "trig1")
@@ -805,10 +776,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("state TTL: an idle entity's state expires; fresh entities are unaffected") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{TTLConfig, Trigger}
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[Event](spark)
     val replies = mutable.Buffer.empty[Event]
     val keyed = FunctionAddress(acct, "ttlk")
@@ -818,19 +785,9 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
     // cleanup keeps scheduling batches), so each run polls for its reply
     // with a bounded deadline and stops explicitly — no blocking waits.
     def runOnce(expectId: String, commitBatch: Int): Unit = {
-      val q = StateflowPipeline.eventsToEgress(input.toDS(),
-          new LocalCounterExecutor, useTws = true,
-          stateTtl = TTLConfig(java.time.Duration.ofMillis(1)))
-        .writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: Dataset[Route], _: Long) =>
-          val client = batch.filter(_.direction == RouteDirection.CLIENT)
-            .map(_.eventValue).collect()
-          replies.synchronized { replies ++= client }
-          ()
-        }
-        .start()
+      val q = StateflowPipeline.start(input.toDS(), new LocalCounterExecutor, ckpt,
+        JobConfig(trigger = Some(Trigger.AvailableNow()),
+          stateTtl = TTLConfig(java.time.Duration.ofMillis(1))))(collectReplies(replies))
       // wait for the reply AND the batch's offset commit marker —
       // stopping between foreachBatch and the commit would make the next
       // run REPLAY this batch (at-least-once), merging t1+t2 into one
@@ -842,21 +799,16 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
         System.currentTimeMillis() < deadline) Thread.sleep(100)
       q.stop()
     }
-    try {
-      input.addData(Event.request("t1", keyed, Request.InvokeStateful, delta(5)))
-      runOnce("t1", commitBatch = 0)
-      Thread.sleep(50)   // let the 1 ms TTL lapse in wall-clock time
-      // same key again: the executor must see EMPTY state (expired), so the
-      // counter restarts at 0 + 7 instead of 5 + 7
-      input.addData(Event.request("t2", keyed, Request.InvokeStateful, delta(7)))
-      runOnce("t2", commitBatch = 1)
-      val byId = replies.synchronized(replies.map(e => e.eventId -> asLong(e.payload)).toMap)
-      assert(byId("t1") == 5L, s"got $byId")
-      assert(byId("t2") == 7L, s"TTL'd state must read as empty, got $byId")
-    } finally prevProvider match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
-    }
+    input.addData(Event.request("t1", keyed, Request.InvokeStateful, delta(5)))
+    runOnce("t1", commitBatch = 0)
+    Thread.sleep(50)   // let the 1 ms TTL lapse in wall-clock time
+    // same key again: the executor must see EMPTY state (expired), so the
+    // counter restarts at 0 + 7 instead of 5 + 7
+    input.addData(Event.request("t2", keyed, Request.InvokeStateful, delta(7)))
+    runOnce("t2", commitBatch = 1)
+    val byId = replies.synchronized(replies.map(e => e.eventId -> asLong(e.payload)).toMap)
+    assert(byId("t1") == 5L, s"got $byId")
+    assert(byId("t2") == 7L, s"TTL'd state must read as empty, got $byId")
   }
 
   test("at-least-once: replayed batch duplicates replies, never loses them") {
@@ -864,7 +816,7 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Send the same event twice (the reference's AT_LEAST_ONCE contract
     // allows duplicates, StateFlowFlinkJob.java:40,132); the engine must
     // process both, not deduplicate silently.
-    val h = new LoopHarness(spark, new LocalCounterExecutor, useTws = false)
+    val h = new LoopHarness(spark, new LocalCounterExecutor)
     try {
       val keyed = FunctionAddress(acct, "alo1")
       val e = Event.request("dup1", keyed, Request.InvokeStateful, delta(1))
@@ -879,8 +831,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming PIT join equals the batch pitJoin under the ordered-feed contract") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // (entity, kind 0=dim / 1=fact, ts-seconds, tie, attr, fact_id)
     val input = MemoryStream[(Long, Int, Long, Long, String, Long)](spark)
     val all = input.toDS()
@@ -1047,8 +997,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming HLL sketch state equals batch hll_sketch_agg across micro-batches") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def t(s: String) = Timestamp.valueOf(s)
     val input = MemoryStream[(Long, Timestamp)](spark) // (user, ts)
     val out = graft.analytics.EventsQueries.hllDailyDistinctStream(
@@ -1104,8 +1052,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming bitmap distinct equals batch countDistinct bit-exactly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def t(s: String) = Timestamp.valueOf(s)
     val input = MemoryStream[(Long, Timestamp)](spark)
     val out = graft.analytics.EventsQueries.bitmapDailyDistinctStream(
@@ -1158,8 +1104,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
     // not users, and the per-day estimate must stay inside the lgK=12
     // error envelope at 250k users/day.
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def day(d: Int) = Timestamp.valueOf(f"2024-03-0$d%d 12:00:00")
     val input = MemoryStream[(Long, Timestamp)](spark)
     val out = graft.analytics.EventsQueries.hllDailyDistinctStream(
@@ -1189,8 +1133,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming EWMA: alert rows identical to the batch fold across batch splits") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def t(s: String) = Timestamp.valueOf(s)
     val h = 250L
     // user 1 ramps the smoothed level over h then decays below; user 2
@@ -1233,8 +1175,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming Holt trend: level/trend/forecast identical to the batch fold across splits") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def t(s: String) = Timestamp.valueOf(s)
     // u1 ramps then drops (trend goes NEGATIVE — the >> 1 floor case `div`
     // would get wrong); u2 seeds in batch 1 and continues in batch 2
@@ -1279,8 +1219,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming rate limit: rejected rows identical to the batch fold across splits") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def t(s: String) = Timestamp.valueOf(s)
     val cap = 300L; val rate = 1L   // cents per second
     // u1: 250 admitted (tok 50); each later event sees only +10 cents
@@ -1328,8 +1266,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming CUSUM: alert rows identical to the batch fold across batch splits") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def t(s: String) = Timestamp.valueOf(s)
     val k = 100L; val h = 250L
     // two interleaved users; values chosen so user 1 crosses h twice
@@ -1373,8 +1309,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming Misra-Gries trending: golden bit-equality + contract per day") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def t(s: String) = Timestamp.valueOf(s)
     val k = 5
     val input = MemoryStream[(String, Timestamp)](spark) // (item, ts)
@@ -1430,8 +1364,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stop + restart from the checkpoint: a post-restart wave of 200k
     // values that all repeat run-1 fingerprints emits ZERO rows.
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("graft-dedup-1m").toString
     val input = MemoryStream[Long](spark)
     val emitted = new java.util.concurrent.atomic.AtomicLong
@@ -1499,8 +1431,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("EwmaProcessor soak: 10^6 entities, exact state across a restart") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("graft-ewma-1m").toString
     val t1 = Timestamp.valueOf("2024-03-01 10:00:00")
     val t2 = Timestamp.valueOf("2024-03-01 10:00:20")
@@ -1538,8 +1468,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("HoltProcessor soak: 10^6 entities, exact (level, trend) across a restart") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("graft-holt-1m").toString
     val t1 = Timestamp.valueOf("2024-03-01 10:00:00")
     val t2 = Timestamp.valueOf("2024-03-01 10:00:20")
@@ -1579,8 +1507,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("RateLimitProcessor soak: 10^6 buckets, exact tokens across a restart") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("graft-rl-1m").toString
     val t1 = Timestamp.valueOf("2024-03-01 10:00:00")
     val t2 = Timestamp.valueOf("2024-03-01 10:00:20")
@@ -1620,8 +1546,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CepProcessor soak: 10^6 open DFA states, match completes after restart") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("graft-cep-1m").toString
     val t1 = Timestamp.valueOf("2024-03-01 10:00:00")
     val t2 = Timestamp.valueOf("2024-03-01 10:00:01")
@@ -1665,8 +1589,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("SrmProcessor soak: 10^6 assignments over 250k experiments, exact counts across a restart") {
     import graft.analytics.StatTests
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("graft-srm-1m").toString
     val keys = 250000L
     val emitted = new java.util.concurrent.atomic.AtomicLong
@@ -1704,8 +1626,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ContaminationProcessor soak: 10^6 stored hashes, late benchmark retro-flags after restart") {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("graft-contam-1m").toString
     val emitted = new java.util.concurrent.atomic.AtomicLong
     val docSum = new java.util.concurrent.atomic.AtomicLong
@@ -1748,8 +1668,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("srmStream: per-experiment counts equal the batch SRM gate across batch splits") {
     import graft.analytics.StatTests
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // exp "bad": 600 vs 400 (SRM); exp "ok": 520 vs 480 (healthy) —
     // split so each experiment's arms straddle the batch boundary
     val bad = (1 to 600).map(_ => ("bad", 0L)) ++ (1 to 400).map(_ => ("bad", 1L))
@@ -1790,8 +1708,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("srmStream: fractional variant encodings split arms pre-cast, equal to batch") {
     import graft.analytics.StatTests
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // variant 0.5 is NONZERO: the batch gate's `=!= 0` counts it in arm
     // B; a cast-first stream would truncate 0.5 -> 0 into arm A (r12
     // ADVICE). 30 zeros vs 70 halves must read 30/70, not 100/0.
@@ -1823,8 +1739,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("contaminationStream: late benchmark retro-flags stored docs; flag set equals batch") {
     import graft.analytics.TextOps
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val b1 = "alpha beta gamma delta epsilon zeta eta theta"
     val b2 = "one two three four five six seven eight nine ten"
     val trainRows = Seq(
@@ -1870,8 +1784,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("graphAnnStream: incrementally-built graph equals the batch rebuild edge for edge") {
     import graft.analytics.SimilarityOps
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = SimilarityOps.trainCentroids(corpus)
     val k = 6; val xCells = 2; val xK = 2
@@ -1949,8 +1861,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bm25Stream: maintained index ranks bit-identically to batch bm25Rank") {
     import graft.analytics.VocabOps
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val terms = Seq("spark", "query", "dup")
     val batchTop = VocabOps.bm25Rank(docs, terms).collect()
@@ -1998,8 +1908,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("Bm25PostingsProcessor soak: 10^6 postings, restart, replays are no-ops") {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("graft-bm25-1m").toString
     val emittedPosts = new java.util.concurrent.atomic.AtomicLong
     val shardLatest = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]
@@ -2060,8 +1968,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("graphAnnStream with deletes: maintained graph equals the batch rebuild on survivors") {
     import graft.analytics.SimilarityOps
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = SimilarityOps.trainCentroids(corpus)
     val k = 6; val xCells = 2; val xK = 2
@@ -2144,8 +2050,6 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("GraphAnnInsertProcessor soak: 10^6 residents, restart, delete churn, exact adjacency") {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = Files.createTempDirectory("graft-gann-1m").toString
     val cells = 250000L
     val emitted = new java.util.concurrent.atomic.AtomicLong
