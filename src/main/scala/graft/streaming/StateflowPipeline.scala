@@ -216,12 +216,18 @@ object StateflowPipeline {
     * checkpoint at `checkpoint` and the pacing of `config.trigger`; `sink`
     * writes each micro-batch's routes — the reference's two producers
     * (StateFlowFlinkJob.java:127-147), whose INTERNAL write closes the
-    * feedback loop.
+    * feedback loop. Local checkpoint files go through [[ForkFreeLocalFs]]
+    * and each state commit writes a RocksDB changelog file, because a
+    * micro-batch is one EventFlow hop and its fixed cost sets hop latency.
     */
   def start(events: Dataset[Event], executor: FunctionExecutor, checkpoint: String,
       config: JobConfig)(sink: Dataset[Route] => Unit): StreamingQuery = {
-    events.sparkSession.conf.set("spark.sql.streaming.stateStore.providerClass",
+    val conf = events.sparkSession.conf
+    conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // a commit appends one changelog file; snapshots move to maintenance
+    conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    ForkFreeLocalFs.register(conf)
     val writer = eventsToEgress(events, executor, config)
       .writeStream
       .outputMode("append")

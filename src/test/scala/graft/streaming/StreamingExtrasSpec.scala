@@ -75,6 +75,40 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(asLong(got.get.payload) == 5L, "state lost across restart")
   }
 
+  test("state survives a restart across a RocksDB snapshot boundary") {
+    import spark.implicits._
+    val ckpt = Files.createTempDirectory("graft-snapshot").toString
+    val input = MemoryStream[Event](spark)
+    val replies = mutable.Buffer.empty[Event]
+    def startQuery() = StateflowPipeline.start(input.toDS(), new LocalCounterExecutor,
+      ckpt, JobConfig())(collectReplies(replies))
+
+    // 13 committed batches: past the default minDeltasForSnapshot of 10, so
+    // recovery loads a snapshot and replays the changelog files after it
+    val keyed = FunctionAddress(acct, "snap1")
+    val q1 = startQuery()
+    for (v <- 1 to 13) {
+      input.addData(Event.request(s"s$v", keyed, Request.InvokeStateful, delta(v)))
+      q1.processAllAvailable()
+    }
+    q1.stop()
+    // each state partition holds a snapshot below version 13 and the
+    // changelog up to 13, so the restart must replay changelog files
+    val parts = new java.io.File(ckpt, "state/0").listFiles().filter(_.getName.forall(_.isDigit))
+    assert(parts.length == 4, parts.toSeq)
+    for (part <- parts; names = part.list().toSet)
+      assert(names("13.changelog") && (1 to 12).exists(v => names(s"$v.zip")), s"$part: $names")
+
+    val q2 = startQuery()
+    input.addData(Event.request("sget", keyed, Request.GetState))
+    q2.processAllAvailable()
+    q2.stop()
+
+    val got = replies.synchronized(replies.find(_.eventId == "sget"))
+    assert(got.isDefined, s"no GetState reply after restart: $replies")
+    assert(asLong(got.get.payload) == (1 to 13).sum.toLong, "state lost across restart")
+  }
+
   test("streaming near-dup: a later-batch near-duplicate is flagged") {
     import spark.implicits._
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
