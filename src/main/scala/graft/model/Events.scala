@@ -85,5 +85,11 @@ object Event {
   */
 final case class Route(direction: Int, routeName: String, key: String, eventValue: Event)
 
+/** The row the streaming plan carries: event.proto:66-75 with its
+  * `event_value` arm kept as [[ProtoCodec]] bytes, so no column is a
+  * nested struct and the plan never runs the [[Event]] encoder.
+  */
+final case class WireRoute(direction: Int, routeName: String, key: String, event: Array[Byte])
+
 /** event.proto:77-81 — the executor RPC envelope. */
 final case class EventRequestReply(event: Event, state: Array[Byte], operatorName: String)

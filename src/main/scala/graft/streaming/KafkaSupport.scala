@@ -22,9 +22,9 @@ import graft.model._
   */
 object KafkaSupport {
 
-  /** S1+S2: subscribe + protobuf-decode. */
+  /** S1+S2: subscribe; the pipeline decodes each protobuf value once, at ingress. */
   def readEvents(spark: SparkSession, bootstrap: String,
-      topics: String = "internal,client_request"): Dataset[Event] = {
+      topics: String = "internal,client_request"): Dataset[Array[Byte]] = {
     import spark.implicits._
     spark.readStream
       .format("kafka")
@@ -34,15 +34,14 @@ object KafkaSupport {
       .option("kafka.group.id", "graft-group-id")
       .load()
       .select(col("value").as[Array[Byte]])
-      .map(ProtoCodec.decodeEvent)
   }
 
-  /** S3: Event → (key = event_id bytes, value = proto bytes). */
-  def toKafkaRecords(events: Dataset[Event]): DataFrame = {
-    import events.sparkSession.implicits._
-    events.map(e => (e.eventId.getBytes("UTF-8"), ProtoCodec.encode(e)))
-      .toDF("key", "value")
-  }
+  /** S3: route → (key = route key bytes, value = the event's proto bytes).
+    * Egress keys every route by its event id, so the record key is the
+    * `event_id` bytes (KafkaSerializeProto.java:24-30).
+    */
+  def toKafkaRecords(routes: Dataset[WireRoute]): DataFrame =
+    routes.select(col("key").cast("binary").as("key"), col("event").as("value"))
 
   /** Full job: one streaming query, single-pass fan-out to both topics in
     * foreachBatch (the Spark shape for the reference's side outputs; the
@@ -53,10 +52,9 @@ object KafkaSupport {
   def start(spark: SparkSession, bootstrap: String, executor: FunctionExecutor,
       checkpoint: String, config: JobConfig = JobConfig()): StreamingQuery =
     StateflowPipeline.start(readEvents(spark, bootstrap), executor, checkpoint, config) { batch =>
-      import spark.implicits._
       batch.persist()
       def sink(direction: Int, topic: String): Unit =
-        toKafkaRecords(batch.filter(_.direction == direction).map(_.eventValue))
+        toKafkaRecords(batch.filter(col("direction") === direction))
           .write.format("kafka")
           .option("kafka.bootstrap.servers", bootstrap)
           .option("topic", topic)

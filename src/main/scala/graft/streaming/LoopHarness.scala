@@ -5,6 +5,7 @@ import java.nio.file.Files
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -18,26 +19,30 @@ import graft.model._
   * the source — exactly the reference's Kafka-loop topology with the
   * broker swapped for memory.
   *
-  * Egress routes every event to CLIENT or INTERNAL, so the sink runs one
-  * collect and splits it on the driver.
+  * Events cross the loop as protobuf bytes, as they cross the reference's
+  * Kafka topics: `send` encodes, the sink decodes only the CLIENT replies
+  * and feeds the INTERNAL events back as they are. Egress routes every
+  * event to CLIENT or INTERNAL, so the sink runs one collect and splits it
+  * on the driver.
   */
 final class LoopHarness(spark: SparkSession, executor: FunctionExecutor,
     config: JobConfig = JobConfig()) {
   import spark.implicits._
 
-  private val input = MemoryStream[Event](spark)
+  private val input = MemoryStream[Array[Byte]](spark)
   private val clientBuf = mutable.Buffer.empty[Event]
 
   val query: StreamingQuery = StateflowPipeline.start(input.toDS(), executor,
       Files.createTempDirectory("graft-ckpt").toString, config) { batch =>
-    val (client, internal) = batch.map(r => (r.direction, r.eventValue)).collect()
+    val (client, internal) = batch.select(col("direction"), col("event"))
+      .as[(Int, Array[Byte])].collect()
       .partition(_._1 == RouteDirection.CLIENT)
-    clientBuf.synchronized { clientBuf ++= client.map(_._2) }
+    clientBuf.synchronized { clientBuf ++= client.map(r => ProtoCodec.decodeEvent(r._2)) }
     // the feedback loop: INTERNAL routes re-enter the source
     if (internal.nonEmpty) input.addData(internal.map(_._2).toIndexedSeq)
   }
 
-  def send(events: Event*): Unit = input.addData(events)
+  def send(events: Event*): Unit = input.addData(events.map(ProtoCodec.encode))
 
   /** Block until the loop fully drains (feedback additions included). */
   def drain(): Unit = query.processAllAvailable()

@@ -5,6 +5,7 @@ import java.util.concurrent.TimeUnit
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming._
 
 import graft.exec.FunctionExecutor
@@ -13,36 +14,46 @@ import graft.routing.Routing
 
 /** The dataflow topology of the reference job
   * (StateFlowFlinkJob.java:27-150), re-expressed as one declarative
-  * streaming transformation `Dataset[Event] → Dataset[Route]`:
+  * streaming transformation from wire events (`Dataset[Array[Byte]]`,
+  * protobuf `Event`s as on the Kafka topics) to `Dataset[WireRoute]`:
   *
   * {{{
-  * events ─ map(Routing.ingress) ─┬─ EGRESS routes ──────────────────────┐
-  *                                ├─ "<op>-create" → stateless invoke    │
-  *                                │    (bounded-concurrency mapPartitions,│
-  *                                │     mirrors AsyncDataStream at       │
-  *                                │     StateFlowFlinkJob.java:86-87)    │
-  *                                │   → rekey (…:88-95) ─┐               │
-  *                                └─ direct INTERNAL ────┴ union         │
-  *                                      → groupByKey(key)               │
-  *                                      → per-key ValueState invoke      │
-  *                                        (InvokeStatefulLambda.java)    │
-  *                                      → replies ───────────────────────┤
-  *                                                 union → map(egress) ──┴→ Dataset[Route]
+  * events ─ decode, Routing.ingress ──────┬─ Pong, flow RETURN, unlisted op ──┐
+  *                                        │    (egress-routed at ingress)     │
+  *                                        ├─ "<op>-create" → stateless invoke │
+  *                                        │    (bounded-concurrency           │
+  *                                        │     mapPartitions, mirrors        │
+  *                                        │     AsyncDataStream at            │
+  *                                        │     StateFlowFlinkJob.java:86-87) │
+  *                                        │   → rekey (…:88-95) ─┐            │
+  *                                        └─ direct INTERNAL ────┴ union      │
+  *                                              → groupByKey(key)             │
+  *                                              → per-key ValueState invoke   │
+  *                                                (InvokeStatefulLambda.java) │
+  *                                              → egress-routed replies ──────┤
+  *                                                                   union ───┴→ Dataset[WireRoute]
   * }}}
   *
-  * Flink side outputs become filters on one routed stream; the Kafka
-  * feedback cycle (topic `internal`, StateFlowFlinkJob.java:143-147) is the
-  * sink's job — [[StateflowPipeline.start]] takes it as a per-batch
-  * function, which [[graft.streaming.LoopHarness]] (tests) and
-  * `KafkaSupport` supply.
+  * Every row between operators is a flat [[WireRoute]] whose event stays
+  * in its protobuf bytes, as the reference's events cross its loop
+  * (KafkaSerializeProto.java); each operator decodes only the events it
+  * invokes or routes. Flink side outputs become filters on one routed
+  * stream; the Kafka feedback cycle (topic `internal`,
+  * StateFlowFlinkJob.java:143-147) is the sink's job —
+  * [[StateflowPipeline.start]] takes it as a per-batch function, which
+  * [[graft.streaming.LoopHarness]] (tests) and `KafkaSupport` supply.
   */
 object StateflowPipeline {
+
+  /** A route on its way to the stateful invoke, with its ingress sequence. */
+  final case class Sequenced(routeName: String, key: String, event: Array[Byte], seq: Long)
 
   /** Per-key stateful invoke on Spark 4's transformWithState — the direct
     * analogue of the reference's KeyedProcessFunction with
     * `ValueState<ByteString>` (InvokeStatefulLambda.java:35-116). State is
     * an opaque byte blob, initialized empty on first touch (:75-77) and
-    * overwritten wholesale with each executor reply (:109).
+    * overwritten wholesale with each executor reply (:109). Each reply
+    * leaves egress-routed (EgressRouter.java:32-47).
     *
     * Per-key FIFO: the groupByKey shuffle loses arrival order, so rows
     * carry an ingress sequence (Kafka (partition,offset) analogue) and
@@ -51,19 +62,50 @@ object StateflowPipeline {
     */
   final class StatefulInvokeProcessor(executor: FunctionExecutor,
       stateTtl: TTLConfig = TTLConfig.NONE)
-      extends KeyedFold[String, (Route, Long), Array[Byte], Array[Byte], Event](
-        "operatorState", Encoders.BINARY, Ordering.by(_._2), stateTtl) {
+      extends KeyedFold[String, Sequenced, Array[Byte], Array[Byte], WireRoute](
+        "operatorState", Encoders.BINARY, Ordering.by(_.seq), stateTtl) {
 
     protected def load(stored: Option[Array[Byte]]): Array[Byte] =
       stored.getOrElse(Array.emptyByteArray)
     protected def store(acc: Array[Byte]): Array[Byte] = acc
 
-    protected def step(key: String, acc: Array[Byte], row: (Route, Long),
-        emit: Event => Unit): Array[Byte] = {
-      val reply = executor.invoke(EventRequestReply(row._1.eventValue, acc, row._1.routeName))
-      emit(reply.event)
+    protected def step(key: String, acc: Array[Byte], row: Sequenced,
+        emit: WireRoute => Unit): Array[Byte] = {
+      val reply = executor.invoke(
+        EventRequestReply(ProtoCodec.decodeEvent(row.event), acc, row.routeName))
+      emit(egress(reply.event))
       reply.state
     }
+  }
+
+  /** `route` as a plan row. */
+  private def wire(route: Route): WireRoute =
+    WireRoute(route.direction, route.routeName, route.key, ProtoCodec.encode(route.eventValue))
+
+  /** Route operator output to the client or back into the loop (R6). */
+  private def egress(event: Event): WireRoute = wire(Routing.egress(event))
+
+  /** Ingress routing of one wire event. Routing leaves the event of an
+    * INTERNAL route unchanged, so the route keeps the original bytes. The
+    * events answered here carry replies — Pong, flow RETURN, and a
+    * FailedInvocation for an operator missing from `knownOperators` — so
+    * egress sends them to the CLIENT: the INTERNAL rows of the result are
+    * exactly those still to invoke.
+    *
+    * The reference builds one side output per operator from the
+    * `--operators` CLI list (StateFlowFlinkJob.java:56-66); an event for
+    * an unlisted operator has no output tag and kills the job. With a
+    * known-operator set configured, we keep the validation but degrade
+    * gracefully: the event short-circuits to the client as a
+    * FailedInvocation reply instead of crashing the stream.
+    */
+  private def ingress(knownOperators: Option[Set[String]])(bytes: Array[Byte]): WireRoute = {
+    val event = ProtoCodec.decodeEvent(bytes)
+    val route = Routing.ingress(event)
+    if (route.direction != RouteDirection.INTERNAL) egress(route.eventValue)
+    else if (knownOperators.exists(ops => !ops.contains(route.routeName.stripSuffix("-create"))))
+      egress(event.withReply(Reply.FailedInvocation))
+    else WireRoute(route.direction, route.routeName, route.key, bytes)
   }
 
   /** Bounded-concurrency stateless invoke: the reference hides Lambda
@@ -80,40 +122,38 @@ object StateflowPipeline {
     * engine-level equivalent).
     */
   private def invokeStateless(executor: FunctionExecutor, concurrency: Int, timeout: FiniteDuration)(
-      routes: Iterator[Route]): Iterator[Event] = {
-    // concurrency <= 0 would make refill() never submit → routes silently dropped
+      events: Iterator[Event]): Iterator[Event] = {
+    // concurrency <= 0 would make refill() never submit → events silently dropped
     require(concurrency > 0, s"concurrency must be positive, got $concurrency")
     require(timeout > Duration.Zero, s"timeout must be positive, got $timeout")
     val timeoutNs = timeout.toNanos
     new Iterator[Event] {
       private val cs =
         new java.util.concurrent.ExecutorCompletionService[Event](StatelessPool.pool)
-      // in-flight future → (route, absolute deadline)
+      // in-flight future → (event, absolute deadline)
       private val pending =
-        new java.util.HashMap[java.util.concurrent.Future[Event], (Route, Long)]()
+        new java.util.HashMap[java.util.concurrent.Future[Event], (Event, Long)]()
       private val ready = scala.collection.mutable.Queue.empty[Event]
 
       private def refill(): Unit =
-        while (pending.size < concurrency && routes.hasNext) {
-          val r = routes.next()
-          val f = cs.submit(() => {
-            val op = r.eventValue.funAddress.fullName
-            executor.invoke(EventRequestReply(r.eventValue, Array.emptyByteArray, op)).event
-          })
-          pending.put(f, (r, System.nanoTime() + timeoutNs))
+        while (pending.size < concurrency && events.hasNext) {
+          val e = events.next()
+          val f = cs.submit(() =>
+            executor.invoke(EventRequestReply(e, Array.emptyByteArray, e.funAddress.fullName)).event)
+          pending.put(f, (e, System.nanoTime() + timeoutNs))
         }
 
       private def collectOne(): Unit =
         while (ready.isEmpty && !pending.isEmpty) {
           // earliest in-flight deadline bounds how long we may block
           var minF: java.util.concurrent.Future[Event] = null
-          var minR: Route = null
+          var minE: Event = null
           var minDl = Long.MaxValue
           val it = pending.entrySet().iterator()
           while (it.hasNext) {
             val en = it.next()
             if (en.getValue._2 < minDl) {
-              minF = en.getKey; minR = en.getValue._1; minDl = en.getValue._2
+              minF = en.getKey; minE = en.getValue._1; minDl = en.getValue._2
             }
           }
           val waitNs = minDl - System.nanoTime()
@@ -125,12 +165,12 @@ object StateflowPipeline {
             if (entry != null)
               ready += (try f.get() catch {
                 case scala.util.control.NonFatal(_) =>
-                  entry._1.eventValue.withReply(Reply.FailedInvocation)
+                  entry._1.withReply(Reply.FailedInvocation)
               })
           } else if (System.nanoTime() >= minDl) {
             minF.cancel(true)
             pending.remove(minF)
-            ready += minR.eventValue.withReply(Reply.FailedInvocation)
+            ready += minE.withReply(Reply.FailedInvocation)
           }
         }
 
@@ -149,55 +189,41 @@ object StateflowPipeline {
     }
   }
 
-  /** Route names for the create path (StateFlowFlinkJob.java:57-66). */
-  private def isCreate(r: Route): Boolean = r.routeName.endsWith("-create")
-
   /** Assemble the full topology. Works on both streaming and batch
     * Datasets; `config` carries the reference's tuning surface.
     */
-  def eventsToEgress(events: Dataset[Event], executor: FunctionExecutor,
-      config: JobConfig = JobConfig()): Dataset[Route] = {
+  def eventsToEgress(events: Dataset[Array[Byte]], executor: FunctionExecutor,
+      config: JobConfig = JobConfig()): Dataset[WireRoute] = {
     val spark = events.sparkSession
     import spark.implicits._
+    // the state store coordinator, which a batch transformWithState also
+    // reports to, is registered by the session's StreamingQueryManager
+    spark.streams
 
-    val routed: Dataset[Route] = events.map(Routing.ingress)
-
-    val internalAll = routed.filter(_.direction == RouteDirection.INTERNAL)
-
-    // The reference builds one side output per operator from the
-    // `--operators` CLI list (StateFlowFlinkJob.java:56-66); an event for
-    // an unlisted operator has no output tag and kills the job. With a
-    // known-operator set configured, we keep the validation but degrade
-    // gracefully: the event short-circuits to the client as a
-    // FailedInvocation reply instead of crashing the stream.
-    // EGRESS straight-throughs (Ping→Pong, flow RETURN): M1 passthrough
-    val ingressEgressBase = routed.filter(_.direction == RouteDirection.EGRESS)
-      .map(_.eventValue)
-
-    val (internal, ingressEgress) = config.knownOperators match {
-      case Some(ops) =>
-        val known = (r: Route) => ops.contains(r.routeName.stripSuffix("-create"))
-        (internalAll.filter(r => known(r)),
-          ingressEgressBase.union(internalAll.filter(r => !known(r))
-            .map(_.eventValue.withReply(Reply.FailedInvocation))))
-      case None => (internalAll, ingressEgressBase)
-    }
+    // the plan scans `routed` three times; outside whole-stage codegen the
+    // decode is not generated again into each scan's code
+    val routed = events.mapPartitions(_.map(ingress(config.knownOperators)))
+    val internal = routed.filter(col("direction") === RouteDirection.INTERNAL)
+    // route names for the create path (StateFlowFlinkJob.java:57-66)
+    val isCreate = col("routeName").endsWith("-create")
 
     // create path: A1 async stateless invoke + A2 rekey
-    val created = internal.filter(isCreate _)
-      .mapPartitions(invokeStateless(executor, config.statelessConcurrency, config.statelessTimeout))
-      .map(Routing.rekeyCreated)
+    val created = internal.filter(isCreate).mapPartitions { rows =>
+      invokeStateless(executor, config.statelessConcurrency, config.statelessTimeout)(
+        rows.map(r => ProtoCodec.decodeEvent(r.event)))
+        .map(e => wire(Routing.rekeyCreated(e)))
+    }
 
-    // U1 union + K1 keyBy + P1 stateful invoke. The ingress sequence is
-    // attached BEFORE the keyBy shuffle (per source partition, monotonic in
-    // arrival order — the (partition, offset) stand-in) so the processor
-    // can restore per-key FIFO after the shuffle.
-    val replies = internal.filter((r: Route) => !isCreate(r)).union(created)
+    // U1 union + K1 keyBy + P1 stateful invoke + R6 egress routing. The
+    // ingress sequence is attached BEFORE the keyBy shuffle (per source
+    // partition, monotonic in arrival order — the (partition, offset)
+    // stand-in) so the processor can restore per-key FIFO after the shuffle.
+    val replies = internal.filter(!isCreate).union(created)
       .mapPartitions { it =>
         // partition-stamped arrival sequence (monotonically_increasing_id
         // is rejected in streaming plans; this is its exact construction)
         var seq = org.apache.spark.TaskContext.getPartitionId().toLong << 40
-        it.map { r => seq += 1; (r, seq) }
+        it.map { r => seq += 1; Sequenced(r.routeName, r.key, r.event, seq) }
       }
       // state is namespaced per OPERATOR × key, like the reference (one
       // InvokeStatefulLambda instance — hence one ValueState namespace —
@@ -205,10 +231,10 @@ object StateflowPipeline {
       // must not share a state blob. routeName is "ns/name" (no NUL),
       // so the composite is collision-free.
       .transform(new StatefulInvokeProcessor(executor, config.stateTtl)
-        .byKey(t => t._1.routeName + "\u0000" + t._1.key))
+        .byKey(r => r.routeName + "\u0000" + r.key))
 
-    // U2 union + R6 egress routing
-    ingressEgress.union(replies).map(Routing.egress)
+    // U2 union: the routes answered at ingress and the invoke replies
+    routed.filter(col("direction") =!= RouteDirection.INTERNAL).union(replies)
   }
 
   /** Start the job: the topology over `events` with keyed state on the
@@ -220,8 +246,8 @@ object StateflowPipeline {
     * and each state commit writes a RocksDB changelog file, because a
     * micro-batch is one EventFlow hop and its fixed cost sets hop latency.
     */
-  def start(events: Dataset[Event], executor: FunctionExecutor, checkpoint: String,
-      config: JobConfig)(sink: Dataset[Route] => Unit): StreamingQuery = {
+  def start(events: Dataset[Array[Byte]], executor: FunctionExecutor, checkpoint: String,
+      config: JobConfig)(sink: Dataset[WireRoute] => Unit): StreamingQuery = {
     val conf = events.sparkSession.conf
     conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -233,7 +259,7 @@ object StateflowPipeline {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
     config.trigger.foreach(writer.trigger)
-    writer.foreachBatch((batch: Dataset[Route], _: Long) => sink(batch)).start()
+    writer.foreachBatch((batch: Dataset[WireRoute], _: Long) => sink(batch)).start()
   }
 }
 

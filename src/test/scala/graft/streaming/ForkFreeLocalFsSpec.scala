@@ -116,16 +116,16 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Starts the job on `ckpt`, runs one batch per id (an increment of `keyed`), stops. */
-  private def runBatches(ckpt: String, input: MemoryStream[Event], keyed: FunctionAddress,
+  private def runBatches(ckpt: String, input: MemoryStream[Array[Byte]], keyed: FunctionAddress,
       ids: Seq[String], replies: mutable.Buffer[Event]): Unit = {
     val q = StateflowPipeline.start(input.toDS(), new LocalCounterExecutor, ckpt, JobConfig()) {
-      (batch: Dataset[Route]) =>
+      (batch: Dataset[WireRoute]) =>
         import spark.implicits._
-        val client = batch.filter(_.direction == RouteDirection.CLIENT).map(_.eventValue).collect()
-        replies.synchronized { replies ++= client }
+        val client = batch.filter(_.direction == RouteDirection.CLIENT).map(_.event).collect()
+        replies.synchronized { replies ++= client.map(ProtoCodec.decodeEvent) }
     }
     try ids.foreach { id =>
-      input.addData(Event.request(id, keyed, Request.InvokeStateful, delta(1)))
+      input.addData(ProtoCodec.encode(Event.request(id, keyed, Request.InvokeStateful, delta(1))))
       q.processAllAvailable()
     } finally q.stop()
   }
@@ -136,7 +136,7 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("checkpoint files keep their .crc sidecars and checksums; corruption is caught") {
     import spark.implicits._
     val ckpt = Files.createTempDirectory("graft-crc")
-    val input = MemoryStream[Event](spark)
+    val input = MemoryStream[Array[Byte]](spark)
     val replies = mutable.Buffer.empty[Event]
     val keyed = FunctionAddress(acct, "crc1")
     runBatches(ckpt.toString, input, keyed, Seq("c1", "c2", "c3"), replies)

@@ -41,17 +41,17 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def asLong(b: Array[Byte]): Long = ByteBuffer.wrap(b).getLong
 
   /** Per-batch sink of [[StateflowPipeline.start]] that keeps the CLIENT replies. */
-  private def collectReplies(into: mutable.Buffer[Event])(batch: Dataset[Route]): Unit = {
+  private def collectReplies(into: mutable.Buffer[Event])(batch: Dataset[WireRoute]): Unit = {
     import spark.implicits._
     val client = batch.filter(_.direction == RouteDirection.CLIENT)
-      .map(_.eventValue).collect()
+      .map(_.event).collect().map(ProtoCodec.decodeEvent)
     into.synchronized { into ++= client }
   }
 
   test("state survives restart on transformWithState + RocksDB") {
     import spark.implicits._
     val ckpt = Files.createTempDirectory("graft-restart").toString
-    val input = MemoryStream[Event](spark)
+    val input = MemoryStream[Array[Byte]](spark)
     val replies = mutable.Buffer.empty[Event]
 
     def startQuery() = StateflowPipeline.start(input.toDS(), new LocalCounterExecutor,
@@ -59,14 +59,14 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val keyed = FunctionAddress(acct, "rk2")
     val q1 = startQuery()
-    input.addData(Event.request("r1", keyed, Request.InvokeStateful, delta(2)))
-    input.addData(Event.request("r2", keyed, Request.InvokeStateful, delta(3)))
+    input.addData(ProtoCodec.encode(Event.request("r1", keyed, Request.InvokeStateful, delta(2))))
+    input.addData(ProtoCodec.encode(Event.request("r2", keyed, Request.InvokeStateful, delta(3))))
     q1.processAllAvailable()
     q1.stop()
 
     // restart against the same checkpoint: per-key state must be restored
     val q2 = startQuery()
-    input.addData(Event.request("r3", keyed, Request.GetState))
+    input.addData(ProtoCodec.encode(Event.request("r3", keyed, Request.GetState)))
     q2.processAllAvailable()
     q2.stop()
 
@@ -78,7 +78,7 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("state survives a restart across a RocksDB snapshot boundary") {
     import spark.implicits._
     val ckpt = Files.createTempDirectory("graft-snapshot").toString
-    val input = MemoryStream[Event](spark)
+    val input = MemoryStream[Array[Byte]](spark)
     val replies = mutable.Buffer.empty[Event]
     def startQuery() = StateflowPipeline.start(input.toDS(), new LocalCounterExecutor,
       ckpt, JobConfig())(collectReplies(replies))
@@ -88,7 +88,7 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
     val keyed = FunctionAddress(acct, "snap1")
     val q1 = startQuery()
     for (v <- 1 to 13) {
-      input.addData(Event.request(s"s$v", keyed, Request.InvokeStateful, delta(v)))
+      input.addData(ProtoCodec.encode(Event.request(s"s$v", keyed, Request.InvokeStateful, delta(v))))
       q1.processAllAvailable()
     }
     q1.stop()
@@ -100,7 +100,7 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(names("13.changelog") && (1 to 12).exists(v => names(s"$v.zip")), s"$part: $names")
 
     val q2 = startQuery()
-    input.addData(Event.request("sget", keyed, Request.GetState))
+    input.addData(ProtoCodec.encode(Event.request("sget", keyed, Request.GetState)))
     q2.processAllAvailable()
     q2.stop()
 
@@ -810,7 +810,7 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("state TTL: an idle entity's state expires; fresh entities are unaffected") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{TTLConfig, Trigger}
-    val input = MemoryStream[Event](spark)
+    val input = MemoryStream[Array[Byte]](spark)
     val replies = mutable.Buffer.empty[Event]
     val keyed = FunctionAddress(acct, "ttlk")
     val ckpt = Files.createTempDirectory("graft-ttl").toString
@@ -833,12 +833,12 @@ class StreamingExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
         System.currentTimeMillis() < deadline) Thread.sleep(100)
       q.stop()
     }
-    input.addData(Event.request("t1", keyed, Request.InvokeStateful, delta(5)))
+    input.addData(ProtoCodec.encode(Event.request("t1", keyed, Request.InvokeStateful, delta(5))))
     runOnce("t1", commitBatch = 0)
     Thread.sleep(50)   // let the 1 ms TTL lapse in wall-clock time
     // same key again: the executor must see EMPTY state (expired), so the
     // counter restarts at 0 + 7 instead of 5 + 7
-    input.addData(Event.request("t2", keyed, Request.InvokeStateful, delta(7)))
+    input.addData(ProtoCodec.encode(Event.request("t2", keyed, Request.InvokeStateful, delta(7))))
     runOnce("t2", commitBatch = 1)
     val byId = replies.synchronized(replies.map(e => e.eventId -> asLong(e.payload)).toMap)
     assert(byId("t1") == 5L, s"got $byId")
