@@ -22,7 +22,10 @@ import graft.model._
   */
 object KafkaSupport {
 
-  /** S1+S2: subscribe; the pipeline decodes each protobuf value once, at ingress. */
+  /** S1+S2: subscribe; the pipeline scans this source once per batch, so
+    * each offset range is fetched once, and decodes each protobuf value
+    * once, at ingress.
+    */
   def readEvents(spark: SparkSession, bootstrap: String,
       topics: String = "internal,client_request"): Dataset[Array[Byte]] = {
     import spark.implicits._

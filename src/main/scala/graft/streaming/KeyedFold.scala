@@ -15,6 +15,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, 
   *  4. write the state back once (`store`);
   *  5. emit `finish` for the key.
   *
+  * A row for which `passThrough` answers is emitted as it is and is not
+  * folded; a key whose slice holds only such rows never reads or writes
+  * its state (steps 1, 4 and 5 are skipped).
+  *
   * `S` is the stored state and `A` the value carried between rows — the
   * deserialized sketch for the byte-array states, `S` itself otherwise.
   * The state's name, encoder and TTL are constructor arguments, so a
@@ -30,20 +34,24 @@ abstract class KeyedFold[K, I, S, A, O](stateName: String, stateEncoder: Encoder
   protected def step(key: K, acc: A, row: I, emit: O => Unit): A
   protected def store(acc: A): S
   protected def finish(key: K, acc: A): Iterator[O] = Iterator.empty
+  protected def passThrough(row: I): Option[O] = None
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     state = getHandle.getValueState[S](stateName, stateEncoder, stateTtl)
 
   final override def handleInputRows(key: K, rows: Iterator[I],
       timerValues: TimerValues): Iterator[O] = {
-    var acc = load(if (state.exists()) Some(state.get()) else None)
     val out = Vector.newBuilder[O]
     val emit = (o: O) => { out += o; () }
+    val folded = rows.filter(passThrough(_).map(emit).isEmpty)
     // a stable sort under the all-equal arrival order is the identity
-    val slice = if (order eq KeyedFold.Arrival) rows else rows.toVector.sorted(order).iterator
-    slice.foreach(r => acc = step(key, acc, r, emit))
-    state.update(store(acc))
-    out ++= finish(key, acc)
+    val slice = if (order eq KeyedFold.Arrival) folded else folded.toVector.sorted(order).iterator
+    if (slice.hasNext) {
+      var acc = load(if (state.exists()) Some(state.get()) else None)
+      slice.foreach(r => acc = step(key, acc, r, emit))
+      state.update(store(acc))
+      out ++= finish(key, acc)
+    }
     out.result().iterator
   }
 

@@ -39,10 +39,15 @@ final class LoopHarness(spark: SparkSession, executor: FunctionExecutor,
       .partition(_._1 == RouteDirection.CLIENT)
     clientBuf.synchronized { clientBuf ++= client.map(r => ProtoCodec.decodeEvent(r._2)) }
     // the feedback loop: INTERNAL routes re-enter the source
-    if (internal.nonEmpty) input.addData(internal.map(_._2).toIndexedSeq)
+    if (internal.nonEmpty) add(internal.map(_._2).toIndexedSeq)
   }
 
-  def send(events: Event*): Unit = input.addData(events.map(ProtoCodec.encode))
+  /** MemoryStream.addData encodes with one shared encoder outside its own
+    * lock, so concurrent sends and feedback writes would corrupt rows.
+    */
+  private def add(rows: Seq[Array[Byte]]): Unit = input.synchronized { input.addData(rows) }
+
+  def send(events: Event*): Unit = add(events.map(ProtoCodec.encode))
 
   /** Block until the loop fully drains (feedback additions included). */
   def drain(): Unit = query.processAllAvailable()

@@ -5,7 +5,6 @@ import java.util.concurrent.TimeUnit
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming._
 
 import graft.exec.FunctionExecutor
@@ -13,40 +12,41 @@ import graft.model._
 import graft.routing.Routing
 
 /** The dataflow topology of the reference job
-  * (StateFlowFlinkJob.java:27-150), re-expressed as one declarative
-  * streaming transformation from wire events (`Dataset[Array[Byte]]`,
-  * protobuf `Event`s as on the Kafka topics) to `Dataset[WireRoute]`:
+  * (StateFlowFlinkJob.java:27-150), re-expressed as one linear streaming
+  * transformation from wire events (`Dataset[Array[Byte]]`, protobuf
+  * `Event`s as on the Kafka topics) to `Dataset[WireRoute]`:
   *
   * {{{
-  * events ─ decode, Routing.ingress ──────┬─ Pong, flow RETURN, unlisted op ──┐
-  *                                        │    (egress-routed at ingress)     │
-  *                                        ├─ "<op>-create" → stateless invoke │
-  *                                        │    (bounded-concurrency           │
-  *                                        │     mapPartitions, mirrors        │
-  *                                        │     AsyncDataStream at            │
-  *                                        │     StateFlowFlinkJob.java:86-87) │
-  *                                        │   → rekey (…:88-95) ─┐            │
-  *                                        └─ direct INTERNAL ────┴ union      │
-  *                                              → groupByKey(key)             │
-  *                                              → per-key ValueState invoke   │
-  *                                                (InvokeStatefulLambda.java) │
-  *                                              → egress-routed replies ──────┤
-  *                                                                   union ───┴→ Dataset[WireRoute]
+  * events → mapPartitions, per source partition:
+  *            decode, Routing.ingress
+  *              Pong, flow RETURN, unlisted op → egress-routed at ingress
+  *              "<op>-create" → stateless invoke (bounded-concurrency
+  *                window, mirrors AsyncDataStream at
+  *                StateFlowFlinkJob.java:86-87) → rekey (…:88-95),
+  *                or egress-routed if the create failed
+  *            stamp the arrival sequence
+  *        → groupByKey(routeName, key)
+  *        → per-key ValueState invoke (InvokeStatefulLambda.java) on the
+  *          INTERNAL rows; every other row passes through untouched
+  *        → egress-routed replies → Dataset[WireRoute]
   * }}}
   *
+  * The plan scans its source once: one task per source partition routes
+  * every event and one shuffle feeds the keyed operator, as the
+  * reference's side outputs meet again in one union before its `keyBy`.
   * Every row between operators is a flat [[WireRoute]] whose event stays
   * in its protobuf bytes, as the reference's events cross its loop
   * (KafkaSerializeProto.java); each operator decodes only the events it
-  * invokes or routes. Flink side outputs become filters on one routed
-  * stream; the Kafka feedback cycle (topic `internal`,
+  * invokes or routes. The Kafka feedback cycle (topic `internal`,
   * StateFlowFlinkJob.java:143-147) is the sink's job —
   * [[StateflowPipeline.start]] takes it as a per-batch function, which
   * [[graft.streaming.LoopHarness]] (tests) and `KafkaSupport` supply.
   */
 object StateflowPipeline {
 
-  /** A route on its way to the stateful invoke, with its ingress sequence. */
-  final case class Sequenced(routeName: String, key: String, event: Array[Byte], seq: Long)
+  /** A route on its way through the keyed operator, with its ingress sequence. */
+  final case class Sequenced(direction: Int, routeName: String, key: String,
+      event: Array[Byte], seq: Long)
 
   /** Per-key stateful invoke on Spark 4's transformWithState — the direct
     * analogue of the reference's KeyedProcessFunction with
@@ -59,6 +59,10 @@ object StateflowPipeline {
     * carry an ingress sequence (Kafka (partition,offset) analogue) and
     * are re-sorted inside the group — Flink's keyed-order guarantee (the
     * reference relies on it for read-modify-write state).
+    *
+    * Routes answered before the keyed operator (egress-routed at ingress
+    * or by a failed create) pass through as they are: only INTERNAL rows
+    * are invoked, so a key that holds none never touches the store.
     */
   final class StatefulInvokeProcessor(executor: FunctionExecutor,
       stateTtl: TTLConfig = TTLConfig.NONE)
@@ -76,6 +80,10 @@ object StateflowPipeline {
       emit(egress(reply.event))
       reply.state
     }
+
+    override protected def passThrough(row: Sequenced): Option[WireRoute] =
+      Option.when(row.direction != RouteDirection.INTERNAL)(
+        WireRoute(row.direction, row.routeName, row.key, row.event))
   }
 
   /** `route` as a plan row. */
@@ -130,9 +138,10 @@ object StateflowPipeline {
     new Iterator[Event] {
       private val cs =
         new java.util.concurrent.ExecutorCompletionService[Event](StatelessPool.pool)
-      // in-flight future → (event, absolute deadline)
+      // in-flight future → (event, absolute deadline); every deadline is
+      // submission + timeout, so insertion order is deadline order
       private val pending =
-        new java.util.HashMap[java.util.concurrent.Future[Event], (Event, Long)]()
+        new java.util.LinkedHashMap[java.util.concurrent.Future[Event], (Event, Long)]()
       private val ready = scala.collection.mutable.Queue.empty[Event]
 
       private def refill(): Unit =
@@ -145,20 +154,10 @@ object StateflowPipeline {
 
       private def collectOne(): Unit =
         while (ready.isEmpty && !pending.isEmpty) {
-          // earliest in-flight deadline bounds how long we may block
-          var minF: java.util.concurrent.Future[Event] = null
-          var minE: Event = null
-          var minDl = Long.MaxValue
-          val it = pending.entrySet().iterator()
-          while (it.hasNext) {
-            val en = it.next()
-            if (en.getValue._2 < minDl) {
-              minF = en.getKey; minE = en.getValue._1; minDl = en.getValue._2
-            }
-          }
-          val waitNs = minDl - System.nanoTime()
-          val f =
-            if (waitNs > 0) cs.poll(waitNs, TimeUnit.NANOSECONDS) else cs.poll()
+          // the oldest request's deadline bounds how long we may block
+          val oldest = pending.entrySet().iterator().next()
+          val (oldestEvent, deadline) = oldest.getValue
+          val f = cs.poll(deadline - System.nanoTime(), TimeUnit.NANOSECONDS)
           if (f != null) {
             val entry = pending.remove(f)
             // null = late completion of an already-timed-out request: drop
@@ -167,10 +166,10 @@ object StateflowPipeline {
                 case scala.util.control.NonFatal(_) =>
                   entry._1.withReply(Reply.FailedInvocation)
               })
-          } else if (System.nanoTime() >= minDl) {
-            minF.cancel(true)
-            pending.remove(minF)
-            ready += minE.withReply(Reply.FailedInvocation)
+          } else if (System.nanoTime() >= deadline) {
+            oldest.getKey.cancel(true)
+            pending.remove(oldest.getKey)
+            ready += oldestEvent.withReply(Reply.FailedInvocation)
           }
         }
 
@@ -200,41 +199,37 @@ object StateflowPipeline {
     // reports to, is registered by the session's StreamingQueryManager
     spark.streams
 
-    // the plan scans `routed` three times; outside whole-stage codegen the
-    // decode is not generated again into each scan's code
-    val routed = events.mapPartitions(_.map(ingress(config.knownOperators)))
-    val internal = routed.filter(col("direction") === RouteDirection.INTERNAL)
-    // route names for the create path (StateFlowFlinkJob.java:57-66)
-    val isCreate = col("routeName").endsWith("-create")
-
-    // create path: A1 async stateless invoke + A2 rekey
-    val created = internal.filter(isCreate).mapPartitions { rows =>
-      invokeStateless(executor, config.statelessConcurrency, config.statelessTimeout)(
-        rows.map(r => ProtoCodec.decodeEvent(r.event)))
-        .map(e => wire(Routing.rekeyCreated(e)))
-    }
-
-    // U1 union + K1 keyBy + P1 stateful invoke + R6 egress routing. The
-    // ingress sequence is attached BEFORE the keyBy shuffle (per source
-    // partition, monotonic in arrival order — the (partition, offset)
-    // stand-in) so the processor can restore per-key FIFO after the shuffle.
-    val replies = internal.filter(!isCreate).union(created)
-      .mapPartitions { it =>
-        // partition-stamped arrival sequence (monotonically_increasing_id
-        // is rejected in streaming plans; this is its exact construction)
-        var seq = org.apache.spark.TaskContext.getPartitionId().toLong << 40
-        it.map { r => seq += 1; Sequenced(r.routeName, r.key, r.event, seq) }
+    events.mapPartitions { rows =>
+      // route names for the create path (StateFlowFlinkJob.java:57-66);
+      // the creates wait for the rest of the partition, then go through
+      // the window together
+      val creates = scala.collection.mutable.ArrayBuffer.empty[Event]
+      val direct = rows.map(ingress(config.knownOperators)).filter { r =>
+        val create = r.direction == RouteDirection.INTERNAL && r.routeName.endsWith("-create")
+        if (create) creates += ProtoCodec.decodeEvent(r.event)
+        !create
       }
-      // state is namespaced per OPERATOR × key, like the reference (one
+      // A1 async stateless invoke + A2 rekey; a failed create is a reply
+      // for the client, not an entity to invoke
+      def created =
+        invokeStateless(executor, config.statelessConcurrency, config.statelessTimeout)(creates.iterator)
+          .map(e => if (e.reply.contains(Reply.FailedInvocation)) egress(e) else wire(Routing.rekeyCreated(e)))
+      // The ingress sequence is attached BEFORE the keyBy shuffle (per
+      // source partition, monotonic in arrival order — the (partition,
+      // offset) stand-in) so the processor can restore per-key FIFO after
+      // the shuffle. monotonically_increasing_id is rejected in streaming
+      // plans; this is its exact construction.
+      var seq = org.apache.spark.TaskContext.getPartitionId().toLong << 40
+      (direct ++ created).map { r => seq += 1; Sequenced(r.direction, r.routeName, r.key, r.event, seq) }
+    }
+      // K1 keyBy + P1 stateful invoke + R6 egress routing. State is
+      // namespaced per OPERATOR × key, like the reference (one
       // InvokeStatefulLambda instance — hence one ValueState namespace —
       // per operator name): two operators invoked with the same entity key
       // must not share a state blob. routeName is "ns/name" (no NUL),
       // so the composite is collision-free.
       .transform(new StatefulInvokeProcessor(executor, config.stateTtl)
         .byKey(r => r.routeName + "\u0000" + r.key))
-
-    // U2 union: the routes answered at ingress and the invoke replies
-    routed.filter(col("direction") =!= RouteDirection.INTERNAL).union(replies)
   }
 
   /** Start the job: the topology over `events` with keyed state on the
@@ -245,6 +240,8 @@ object StateflowPipeline {
     * feedback loop. Local checkpoint files go through [[ForkFreeLocalFs]]
     * and each state commit writes a RocksDB changelog file, because a
     * micro-batch is one EventFlow hop and its fixed cost sets hop latency.
+    * The sink must execute its batch Dataset: a batch that runs no job
+    * commits no state store, and Spark then fails the query.
     */
   def start(events: Dataset[Array[Byte]], executor: FunctionExecutor, checkpoint: String,
       config: JobConfig)(sink: Dataset[WireRoute] => Unit): StreamingQuery = {
@@ -270,6 +267,16 @@ object StateflowPipeline {
   *    `Trigger.ProcessingTime` adds deliberate batching latency.
   *  - `statelessConcurrency` / `statelessTimeout`: the AsyncDataStream
   *    capacity-1000 / 2 s settings for the create path (:84-87).
+  *
+  * MIGRATION: checkpoints written while the plan scanned its source three
+  * times per batch list that source three times in every `offsets/<n>`
+  * file, and Spark refuses to restart them ("There are [3] sources in the
+  * checkpoint offsets and now there are [1]"). The state layout did not
+  * change: rewrite each offsets file to keep its first three lines (the
+  * version, the batch metadata and one source offset; for Kafka, the
+  * lowest offset per partition of the three, since replay is at-least-once
+  * but a skip loses events), delete its `.crc` sidecar and restart, or
+  * start from a fresh checkpoint.
   */
 final case class JobConfig(
     trigger: Option[Trigger] = None,
@@ -293,10 +300,16 @@ final case class JobConfig(
       */
     stateTtl: TTLConfig = TTLConfig.NONE)
 
-/** Shared daemon thread pool for the stateless-invoke path. */
+/** Shared daemon thread pool for the stateless-invoke path. It grows on
+  * demand, so every request of a window is in flight from submission,
+  * when its deadline starts: threads are bounded by
+  * `statelessConcurrency` × running tasks (512 at the default 128 and
+  * `local[4]`), plus timed-out calls that ignore their interrupt; idle
+  * threads exit after 60 s.
+  */
 private object StatelessPool {
   lazy val pool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(64, r => {
+    java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-stateless-invoke")
       t.setDaemon(true)
       t

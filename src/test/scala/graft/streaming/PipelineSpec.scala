@@ -261,9 +261,8 @@ final class SlowOneExecutor(slowId: String, sleepMs: Long)
     extends graft.exec.FunctionExecutor {
   private val inner = new LocalCounterExecutor
   override def invoke(req: graft.model.EventRequestReply): graft.model.EventRequestReply = {
-    // stall only the create-path invocation: the timed-out event flows on
-    // (as FailedInvocation) into the synchronous stateful path, which must
-    // not re-stall it
+    // stall only the create-path invocation: the timed-out event goes to
+    // the client as FailedInvocation without a second backend call
     if (req.event.eventId == slowId && req.event.request.contains(Request.InitClass))
       Thread.sleep(sleepMs)
     inner.invoke(req)
