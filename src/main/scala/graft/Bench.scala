@@ -73,44 +73,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Host timing variance in this environment is 40-60% across a session
     // (established rounds 1-4), so a single-shot measurement can overstate a
     // query by >2x. Run each query REPS times and report the min: min is the
     // noise-robust estimator of the plan's actual cost (noise is strictly
     // additive here — GC pauses, host contention — never negative).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    // Rehearsal IO profile (r13 verdict task 4): >1 GB shuffle writes and
-    // evicted memo blocks go through this box's VIRTUAL disk, whose
-    // writeback variance (18–80 s on a 1.5 GB materialization, pure
-    // iowait) is the sf10 measurement noise floor. SPARK_GRAFT_TMPFS=1
-    // points spark.local.dir at tmpfs (126 GB on this box) so shuffle
-    // spill never touches the virtual disk; combine with
-    // SPARK_GRAFT_MEMO_SER=1 (see Memo) for the memo blocks. Off by
-    // default: the committed bench artifact's calibration is the plain
-    // profile.
-    val tmpfs = sys.env.get("SPARK_GRAFT_TMPFS").contains("1")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-    val spark = (if (tmpfs) {
-      val d = "/dev/shm/graft-spark-local"
-      new java.io.File(d).mkdirs()
-      builder0.config("spark.local.dir", d)
-    } else builder0)
-      .config("spark.ui.enabled", "false")
-      // wide-row codegen headroom (see Verify)
-      .config("spark.sql.codegen.maxFields", "200")
-      // NOTE (r15): spark.sql.join.preferSortMergeJoin=false was A/B-tested
-      // here and REJECTED — at sf0.1 every sampled static plan stayed
-      // BHJ/SMJ (the SHJ size band [10MB, threshold×partitions] is empty
-      // at this scale), and two back-to-back family A/Bs read -3.7% then
-      // +3.7%, i.e. pure window noise. Re-evaluate on a real cluster where
-      // the band is populated.
-      // same deployment hook as Verify: functions + optimizer rule
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = 4)
     // untimed warm-up: JIT + codegen + parquet footer reads, so the first
     // timed query (alphabetically q01) doesn't absorb JVM startup cost
     locally {
@@ -152,17 +121,8 @@ object Bench {
     // use the cores and its wall floor is elsewhere; ≈1 means genuinely
     // serial or overhead-bound. The listener bus is drained before each
     // snapshot (GraftSparkShims) so attribution is exact.
-    val taskMillis = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) taskMillis.addAndGet(m.executorRunTime)
-      }
-    })
-    def taskSecondsSnap(): Double = {
-      org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-      taskMillis.get() / 1e3
-    }
+    val counter = LocalSession.counter(spark)
+    def taskSecondsSnap(): Double = counter.counts().taskRunMs / 1e3
     // local iteration aid: SPARK_GRAFT_ONLY=q1,q2 times just those queries
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)

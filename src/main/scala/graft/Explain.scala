@@ -1,38 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan inspection + timing: runMain graft.Explain <sfDir> <query>[,query2] [--plan] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(',')
     val showPlan = args.contains("--plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.maxFields", "200")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = 32)
     // job/stage/task census (r16): for iteration-shaped queries the final
     // plan hides the per-round work (it executes during construction), so
     // the load-bearing before/after evidence is the JOB COUNT, not the
     // plan dump. Counters are monotonic; we print deltas per query.
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val stages = new java.util.concurrent.atomic.AtomicLong(0)
-    val tasks = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(e.stageInfo.numTasks)
-      }
-    })
+    val counter = LocalSession.counter(spark)
     names.foreach { name =>
       if (showPlan) {
         println(s"===== $name plan =====")
@@ -41,14 +20,13 @@ object Explain {
       // Time construction + execution, like Bench: iterative queries do
       // eager work (localCheckpoint, convergence counts) during
       // construction, so timing only the final write undercounts them.
-      org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-      val (j0, s0, k0) = (jobs.get(), stages.get(), tasks.get())
+      val c0 = counter.counts()
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-      println(f"===== $name: $dt%.2f s, jobs=${jobs.get() - j0}, stages=${stages.get() - s0}, tasks=${tasks.get() - k0}")
+      val c = counter.counts() - c0
+      println(f"===== $name: $dt%.2f s, jobs=${c.jobs}, stages=${c.stages}, tasks=${c.tasks}")
     }
     spark.stop()
   }

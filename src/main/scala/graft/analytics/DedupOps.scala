@@ -78,7 +78,7 @@ object DedupOps {
       threshold: Double = 0.8, idCol: String = "doc_id", textCol: String = "text",
       stateTtl: org.apache.spark.sql.streaming.TTLConfig =
         org.apache.spark.sql.streaming.TTLConfig.NONE): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig}
+    import org.apache.spark.sql.streaming.OutputMode
     require(k % bands == 0, "k must be a multiple of bands")
     val rows = k / bands
     val spark = docs.sparkSession
@@ -93,12 +93,10 @@ object DedupOps {
           s"transform(slice(sig, b * $rows + 1, $rows), x -> cast(x as string)))))"))
           .as("bkey"))
       .as[(Long, Array[Long], String)]
-    val timeMode =
-      if (stateTtl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
     banded.groupByKey(_._3)
       .transformWithState(
         new graft.streaming.BandNearDupProcessor(threshold, stateTtl),
-        timeMode, OutputMode.Append())
+        graft.streaming.KeyedFold.timeMode(stateTtl), OutputMode.Append())
       .toDF("doc_id", "dup_of", "jaccard")
   }
 
@@ -702,23 +700,11 @@ object DedupOps {
     if (edges.count() <= localBudget) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var root = x
-        while (parent.getOrElse(root, root) != root) root = parent(root)
-        var c = x
-        while (parent.getOrElse(c, c) != root) {
-          val nx = parent(c); parent(c) = root; c = nx
-        }
-        root
-      }
+      val uf = new MinLabelUnionFind
       val rows = edges.collect()
-      rows.foreach { r =>
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
+      rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
       return rows.iterator.map(_.getLong(0)).toSet.iterator
-        .map((x: Long) => (x, find(x))).toSeq
+        .map((x: Long) => (x, uf.find(x))).toSeq
         .toDF("doc_id", "cluster_id")
     }
     var labels = edges.select(col("a").as("id")).distinct()

@@ -2251,22 +2251,10 @@ object GraphOps {
     if (nPicks <= localBudget) {
       val spark = picks.sparkSession
       val rows = picks.select(col("cc"), col("partner")).collect()
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var root = x
-        while (parent.getOrElse(root, root) != root) root = parent(root)
-        var c0 = x
-        while (parent.getOrElse(c0, c0) != root) {
-          val nx = parent(c0); parent(c0) = root; c0 = nx
-        }
-        root
-      }
-      rows.foreach { row =>
-        val (rl, rh) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (rl != rh) parent(math.max(rl, rh)) = math.min(rl, rh)
-      }
+      val uf = new MinLabelUnionFind
+      rows.foreach(row => uf.union(row.getLong(0), row.getLong(1)))
       val merged = rows.iterator.map(_.getLong(0))
-        .map(x => (x, find(x))).filter { case (x, nc) => nc != x }.toSeq
+        .map(x => (x, uf.find(x))).filter { case (x, nc) => nc != x }.toSeq
       return broadcast(spark.createDataFrame(merged).toDF("oc", "nc"))
     }
     val pp = picks.select(col("cc").as("c2"), col("partner").as("p2"))
@@ -2335,24 +2323,11 @@ object GraphOps {
         // the distributed rounds, so the final relabel is one broadcast
         // join
         val rows = g.sort(col("ekey")).collect()
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var root = x
-          while (parent.getOrElse(root, root) != root) root = parent(root)
-          var c0 = x
-          while (parent.getOrElse(c0, c0) != root) {
-            val nx = parent(c0); parent(c0) = root; c0 = nx
-          }
-          root
-        }
+        val uf = new MinLabelUnionFind
         val chosen = scala.collection.mutable.ArrayBuffer
           .empty[java.math.BigDecimal]
         rows.foreach { row =>
-          val (rl, rh) = (find(row.getLong(0)), find(row.getLong(1)))
-          if (rl != rh) {
-            parent(math.max(rl, rh)) = math.min(rl, rh)
-            chosen += row.getDecimal(2)
-          }
+          if (uf.union(row.getLong(0), row.getLong(1))) chosen += row.getDecimal(2)
         }
         val ekeyType = g.schema("ekey").dataType
         allPicks += spark.createDataFrame(
@@ -2362,7 +2337,7 @@ object GraphOps {
             org.apache.spark.sql.types.StructField("ekey", ekeyType))))
         val merged = rows.iterator
           .flatMap(row => Iterator(row.getLong(0), row.getLong(1)))
-          .toSet.iterator.map((x: Long) => (x, find(x)))
+          .toSet.iterator.map((x: Long) => (x, uf.find(x)))
           .filter { case (x, nc) => nc != x }.toSeq
         val lbl = broadcast(spark.createDataFrame(merged).toDF("oc", "nc"))
         comp = comp.join(lbl, comp("c") === col("oc"), "left")

@@ -2336,7 +2336,7 @@ object SimilarityOps {
         org.apache.spark.sql.streaming.TTLConfig.NONE,
       deleteCol: String = "",
       allowIncoherentTtl: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig}
+    import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
     require(stateTtl == TTLConfig.NONE || allowIncoherentTtl,
       "graphAnnStream: TTL expiry drops residents WITHOUT re-linking " +
         "survivors (orphan adjacency edges) — use explicit tombstones " +
@@ -2376,12 +2376,10 @@ object SimilarityOps {
       .select(col("r.c").as("cell"), col("vec_id"),
         col("r.m").as("member"), col("v"), col("nrm"), col("_del"))
       .as[(Long, Long, Boolean, Array[Double], Double, Boolean)]
-    val timeMode =
-      if (stateTtl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
     routed.groupByKey(_._1)
       .transformWithState(
         new graft.streaming.GraphAnnInsertProcessor(k, xK, stateTtl),
-        timeMode, OutputMode.Append())
+        graft.streaming.KeyedFold.timeMode(stateTtl), OutputMode.Append())
       .toDF("cell", "src", "member", "nbrs", "cosines", "alive")
   }
 

@@ -288,7 +288,7 @@ object TextOps {
       benchTextCol: String = "text", window: Int = 8,
       stateTtl: org.apache.spark.sql.streaming.TTLConfig =
         org.apache.spark.sql.streaming.TTLConfig.NONE): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig}
+    import org.apache.spark.sql.streaming.OutputMode
     val spark = train.sparkSession
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame, bench: Boolean) = {
@@ -304,12 +304,10 @@ object TextOps {
         norm(benchmark.select(col(benchTextCol).as("text"),
           lit(0L).as("doc_id")), "doc_id", "text"), bench = true))
       .as[(String, Boolean, Long)]
-    val timeMode =
-      if (stateTtl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
     tagged.groupByKey(_._1)
       .transformWithState(
         new graft.streaming.ContaminationProcessor(stateTtl),
-        timeMode, OutputMode.Append())
+        graft.streaming.KeyedFold.timeMode(stateTtl), OutputMode.Append())
       .toDF("doc_id", "kind")
   }
 

@@ -165,7 +165,7 @@ object VocabOps {
       stateTtl: org.apache.spark.sql.streaming.TTLConfig =
         org.apache.spark.sql.streaming.TTLConfig.NONE,
       allowIncoherentTtl: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TTLConfig}
+    import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
     require(stateTtl == TTLConfig.NONE || allowIncoherentTtl,
       "bm25Stream: TTL expires the seenDocs replay guard and the " +
         "corpusStats counters independently — redelivery after a " +
@@ -195,13 +195,11 @@ object VocabOps {
       concat(lit("s:"), pmod(xxhash64(col("doc_id")), lit(shards.toLong))
         .cast("string")).as("k"),
       col("doc_id"), lit(0L).as("a"), col("dl").as("b"))
-    val timeMode =
-      if (stateTtl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
     posts.unionByName(statsRows)
       .as[(String, Long, Long, Long)]
       .groupByKey(_._1)
       .transformWithState(new graft.streaming.Bm25PostingsProcessor(stateTtl),
-        timeMode, OutputMode.Append())
+        graft.streaming.KeyedFold.timeMode(stateTtl), OutputMode.Append())
       .toDF("key", "doc_id", "tf", "dl")
   }
 

@@ -1,5 +1,6 @@
 package graft.exec
 
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.ByteBuffer
 import java.util.Base64
 
@@ -39,33 +40,52 @@ object LambdaEnvelope {
     s"""{"reply": "${Base64.getEncoder.encodeToString(ProtoCodec.encode(rr))}"}"""
 }
 
+/** The call both HTTP backends make: POST the request envelope to `url`
+  * with `headers`, let `check` refuse the response, decode the reply
+  * envelope. One HttpClient per executor instance, one request per call;
+  * `timeoutMillis` bounds each call (the engine's stateless path adds its
+  * own per-request deadline on top).
+  */
+private[exec] abstract class HttpEnvelopeExecutor(timeoutMillis: Long)
+    extends FunctionExecutor {
+
+  protected def url: String
+  protected def headers: Seq[(String, String)]
+  /** Throws unless `resp` carries a reply envelope. */
+  protected def check(resp: HttpResponse[String]): Unit
+
+  @transient private lazy val client = HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofMillis(timeoutMillis))
+    .build()
+
+  final override def invoke(request: EventRequestReply): EventRequestReply = {
+    val req = headers.foldLeft(HttpRequest.newBuilder(java.net.URI.create(url))
+        .timeout(java.time.Duration.ofMillis(timeoutMillis))
+        .header("Content-Type", "application/json")) { case (b, (k, v)) => b.header(k, v) }
+      .POST(HttpRequest.BodyPublishers.ofString(LambdaEnvelope.encodeRequest(request)))
+      .build()
+    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+    check(resp)
+    LambdaEnvelope.decode(resp.body())
+  }
+}
+
 /** HTTP function backend: POSTs the reference's Base64-JSON envelope to a
   * function endpoint and decodes the reply envelope — the deployment shape
   * of the reference's Lambda RPC (InvokeStatefulLambda.java:86-92 invokes
   * through the AWS SDK; any HTTP-fronted function — Lambda function URL,
-  * Knative, a plain service — speaks this same envelope). One HttpClient
-  * per executor instance; `timeout` bounds each call (the engine's
-  * stateless path adds its own per-request deadline on top).
+  * Knative, a plain service — speaks this same envelope). Anything but 200
+  * fails the call.
   */
 final class HttpFunctionExecutor(endpoint: String,
-    timeoutMillis: Long = 2000) extends FunctionExecutor {
+    timeoutMillis: Long = 2000) extends HttpEnvelopeExecutor(timeoutMillis) {
 
-  @transient private lazy val client = java.net.http.HttpClient.newBuilder()
-    .connectTimeout(java.time.Duration.ofMillis(timeoutMillis))
-    .build()
+  protected def url: String = endpoint
+  protected def headers: Seq[(String, String)] = Nil
 
-  override def invoke(request: EventRequestReply): EventRequestReply = {
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
-      .timeout(java.time.Duration.ofMillis(timeoutMillis))
-      .header("Content-Type", "application/json")
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
-        LambdaEnvelope.encodeRequest(request)))
-      .build()
-    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+  protected def check(resp: HttpResponse[String]): Unit =
     if (resp.statusCode() != 200)
       throw new RuntimeException(s"function endpoint returned ${resp.statusCode()}")
-    LambdaEnvelope.decode(resp.body())
-  }
 }
 
 /** AWS-Lambda-Invoke-API-shaped backend — the direct twin of the
@@ -87,28 +107,19 @@ final class HttpFunctionExecutor(endpoint: String,
   */
 final class LambdaInvokeExecutor(baseUri: String, functionName: String,
     qualifier: Option[String] = None,
-    timeoutMillis: Long = 2000) extends FunctionExecutor {
+    timeoutMillis: Long = 2000) extends HttpEnvelopeExecutor(timeoutMillis) {
 
-  private val url = {
+  protected val url: String = {
     val base = baseUri.stripSuffix("/")
     val q = qualifier.map(v => s"?Qualifier=$v").getOrElse("")
     s"$base/2015-03-31/functions/$functionName/invocations$q"
   }
 
-  @transient private lazy val client = java.net.http.HttpClient.newBuilder()
-    .connectTimeout(java.time.Duration.ofMillis(timeoutMillis))
-    .build()
+  protected val headers: Seq[(String, String)] = Seq(
+    "X-Amz-Invocation-Type" -> "RequestResponse",
+    "X-Amz-Log-Type" -> "None")
 
-  override def invoke(request: EventRequestReply): EventRequestReply = {
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
-      .timeout(java.time.Duration.ofMillis(timeoutMillis))
-      .header("Content-Type", "application/json")
-      .header("X-Amz-Invocation-Type", "RequestResponse")
-      .header("X-Amz-Log-Type", "None")
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
-        LambdaEnvelope.encodeRequest(request)))
-      .build()
-    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+  protected def check(resp: HttpResponse[String]): Unit = {
     if (resp.statusCode() < 200 || resp.statusCode() > 299)
       throw new RuntimeException(
         s"lambda invoke of $functionName returned ${resp.statusCode()}: ${resp.body()}")
@@ -116,7 +127,6 @@ final class LambdaInvokeExecutor(baseUri: String, functionName: String,
     if (fnError.isPresent)
       throw new RuntimeException(
         s"lambda function $functionName raised ${fnError.get()}: ${resp.body()}")
-    LambdaEnvelope.decode(resp.body())
   }
 }
 

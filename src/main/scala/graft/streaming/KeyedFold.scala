@@ -55,14 +55,9 @@ abstract class KeyedFold[K, I, S, A, O](stateName: String, stateEncoder: Encoder
     out.result().iterator
   }
 
-  /** `rows` grouped by `key` through this fold, for `Dataset.transform`.
-    * A TTL'd state needs the processing-time clock; without a TTL the
-    * fold is time-agnostic.
-    */
-  def byKey(key: I => K)(implicit keyEnc: Encoder[K], outEnc: Encoder[O]): Dataset[I] => Dataset[O] = {
-    val timeMode = if (stateTtl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
-    _.groupByKey(key).transformWithState(this, timeMode, OutputMode.Append())
-  }
+  /** `rows` grouped by `key` through this fold, for `Dataset.transform`. */
+  def byKey(key: I => K)(implicit keyEnc: Encoder[K], outEnc: Encoder[O]): Dataset[I] => Dataset[O] =
+    _.groupByKey(key).transformWithState(this, KeyedFold.timeMode(stateTtl), OutputMode.Append())
 }
 
 object KeyedFold {
@@ -72,4 +67,10 @@ object KeyedFold {
 
   /** Keeps a key's batch slice in arrival order: every row compares equal. */
   def arrival[I]: Ordering[I] = Arrival.asInstanceOf[Ordering[I]]
+
+  /** The clock a state with `ttl` needs: a TTL'd state expires on
+    * processing time; without a TTL the operator is time-agnostic.
+    */
+  def timeMode(ttl: TTLConfig): TimeMode =
+    if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
 }

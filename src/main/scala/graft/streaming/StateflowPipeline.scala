@@ -44,6 +44,14 @@ import graft.routing.Routing
   */
 object StateflowPipeline {
 
+  /** The create path's window: requests in flight per source partition,
+    * and each request's deadline from submission. Constants, as the
+    * reference hard-codes its AsyncDataStream capacity (1000) and timeout
+    * (2 s) (StateFlowFlinkJob.java:84-87).
+    */
+  private[streaming] val StatelessConcurrency = 128
+  private[streaming] val StatelessTimeout: FiniteDuration = 2.seconds
+
   /** A route on its way through the keyed operator, with its ingress sequence. */
   final case class Sequenced(direction: Int, routeName: String, key: String,
       event: Array[Byte], seq: Long)
@@ -120,21 +128,18 @@ object StateflowPipeline {
     * latency with async unordered I/O, capacity 1000, per-request timeout
     * 2 s (AsyncDataStream.unorderedWait, StateFlowFlinkJob.java:84-87).
     * Spark has no async operator; this is a sliding-window completion loop
-    * inside mapPartitions: up to `concurrency` requests in flight at once,
-    * each with its OWN `timeout` deadline measured from submission, and
-    * results emitted as they complete (unordered — matching unorderedWait).
+    * inside mapPartitions: up to [[StatelessConcurrency]] requests in flight
+    * at once, each with its OWN [[StatelessTimeout]] deadline measured from
+    * submission, and results emitted as they complete (unordered — matching
+    * unorderedWait).
     * One stuck request neither blocks the rest of the window nor inflates
-    * anyone else's budget; it times out alone at ~`timeout` and yields a
+    * anyone else's budget; it times out alone and yields a
     * FailedInvocation reply (the reference's AsyncDataStream would fail the
     * job on timeout — a clean per-request failure reply is the graceful
     * engine-level equivalent).
     */
-  private def invokeStateless(executor: FunctionExecutor, concurrency: Int, timeout: FiniteDuration)(
-      events: Iterator[Event]): Iterator[Event] = {
-    // concurrency <= 0 would make refill() never submit → events silently dropped
-    require(concurrency > 0, s"concurrency must be positive, got $concurrency")
-    require(timeout > Duration.Zero, s"timeout must be positive, got $timeout")
-    val timeoutNs = timeout.toNanos
+  private def invokeStateless(executor: FunctionExecutor)(events: Iterator[Event]): Iterator[Event] = {
+    val timeoutNs = StatelessTimeout.toNanos
     new Iterator[Event] {
       private val cs =
         new java.util.concurrent.ExecutorCompletionService[Event](StatelessPool.pool)
@@ -145,7 +150,7 @@ object StateflowPipeline {
       private val ready = scala.collection.mutable.Queue.empty[Event]
 
       private def refill(): Unit =
-        while (pending.size < concurrency && events.hasNext) {
+        while (pending.size < StatelessConcurrency && events.hasNext) {
           val e = events.next()
           val f = cs.submit(() =>
             executor.invoke(EventRequestReply(e, Array.emptyByteArray, e.funAddress.fullName)).event)
@@ -212,7 +217,7 @@ object StateflowPipeline {
       // A1 async stateless invoke + A2 rekey; a failed create is a reply
       // for the client, not an entity to invoke
       def created =
-        invokeStateless(executor, config.statelessConcurrency, config.statelessTimeout)(creates.iterator)
+        invokeStateless(executor)(creates.iterator)
           .map(e => if (e.reply.contains(Reply.FailedInvocation)) egress(e) else wire(Routing.rekeyCreated(e)))
       // The ingress sequence is attached BEFORE the keyBy shuffle (per
       // source partition, monotonic in arrival order — the (partition,
@@ -261,12 +266,12 @@ object StateflowPipeline {
 }
 
 /** Tuning surface of the reference job (StateFlowFlinkJob.java:34-40,
-  * 84-87) as explicit parameters:
+  * 56) as explicit parameters:
   *  - `trigger`: micro-batch pacing. `None` = as-fast-as-possible, the
   *    analogue of `execution.buffer-timeout=0` (:36); a
   *    `Trigger.ProcessingTime` adds deliberate batching latency.
-  *  - `statelessConcurrency` / `statelessTimeout`: the AsyncDataStream
-  *    capacity-1000 / 2 s settings for the create path (:84-87).
+  * The create path's window is fixed, as in the reference (see
+  * `StateflowPipeline.StatelessConcurrency`).
   *
   * MIGRATION: checkpoints written while the plan scanned its source three
   * times per batch list that source three times in every `offsets/<n>`
@@ -280,8 +285,6 @@ object StateflowPipeline {
   */
 final case class JobConfig(
     trigger: Option[Trigger] = None,
-    statelessConcurrency: Int = 128,
-    statelessTimeout: FiniteDuration = 2.seconds,
     /** The reference's `--operators` list (StateFlowFlinkJob.java:56):
       * when set, events for unlisted operators return FailedInvocation
       * instead of entering the stateful path.
@@ -303,7 +306,7 @@ final case class JobConfig(
 /** Shared daemon thread pool for the stateless-invoke path. It grows on
   * demand, so every request of a window is in flight from submission,
   * when its deadline starts: threads are bounded by
-  * `statelessConcurrency` × running tasks (512 at the default 128 and
+  * `StatelessConcurrency` × running tasks (512 at 128 and
   * `local[4]`), plus timed-out calls that ignore their interrupt; idle
   * threads exit after 60 s.
   */

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.LocalSession
 
 /** Scale-rehearsal data generator (r13 verdict task 1).
   *
@@ -40,15 +42,8 @@ object GenSf {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val m = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(defaultCpus = 16, graftSql = false,
+      conf = Seq("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     import graft.analytics.Tables
 
     def copies(df: DataFrame): DataFrame =

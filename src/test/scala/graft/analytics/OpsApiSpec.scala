@@ -3676,6 +3676,23 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(local.getLong(1) == local.getLong(0) - local.getLong(2))
   }
 
+  test("resolvePickForest: driver union-find ≡ pointer doubling") {
+    import spark.implicits._
+    // pick forests as the MST rounds build them: each tree hangs off one
+    // mutual pair (1↔2, 10↔11, 20↔21), the rest chain or fan into it
+    val picks = Seq((1L, 2L), (2L, 1L), (3L, 2L), (4L, 3L), (5L, 4L),
+      (10L, 11L), (11L, 10L), (12L, 10L),
+      (20L, 21L), (21L, 20L), (22L, 21L), (23L, 22L)).toDF("cc", "partner")
+    def labels(budget: Long) = GraphOps.resolvePickForest(picks, 12L, budget)
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+      .filter { case (oc, nc) => oc != nc }.toMap
+    val want = Map(2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 11L -> 10L,
+      12L -> 10L, 21L -> 20L, 22L -> 20L, 23L -> 20L)
+    // localBudget = 0 forces the doubling loop; 12 picks fit budget 12
+    assert(labels(0L) == want)
+    assert(labels(12L) == want)
+  }
+
   test("binarySegmentation: clean step found once, flat never splits") {
     import spark.implicits._
     def day(i: Int) = java.sql.Date.valueOf(f"2024-02-${i}%02d")

@@ -108,10 +108,10 @@ class LinearPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a full stateless window has all its calls in flight at once") {
-    // 128 = JobConfig's default statelessConcurrency; each create takes
+    // 128 = the create window's StatelessConcurrency; each create takes
     // 1.2 s against the 2 s deadline, so a window that queues any call
     // behind a running one makes it miss its deadline
-    val n = JobConfig().statelessConcurrency
+    val n = StateflowPipeline.StatelessConcurrency
     withHarness(new SlowCreateExecutor(sleepMs = 1200)) { h =>
       h.send((1 to n).map(i => Event.request(s"w$i", FunctionAddress(acct, ""), Request.InitClass)): _*)
       h.drain()
