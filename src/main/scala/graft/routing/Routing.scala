@@ -8,6 +8,14 @@ import graft.model._
   * unit-test as tables and run identically in a typed `map` on executors):
   *  - ingress: /root/reference/.../IngressRouter.java:36-100
   *  - egress:  /root/reference/.../EgressRouter.java:32-63
+  *
+  * One deliberate difference: the reference's egress loops every EventFlow
+  * back into the `internal` topic, and a flow that reached its `RETURN`
+  * node is answered only when ingress reads it again. Egress here asks
+  * [[ingressFlow]] for that answer and sends it to the client at once: the
+  * reply bytes are the ones ingress would have produced a micro-batch
+  * later, and no state is read in between. Ingress still answers `RETURN`
+  * events sent by clients or left in the topic by an older job.
   */
 object Routing {
 
@@ -59,11 +67,17 @@ object Routing {
         s"Expected either an EventFlow Request event or Reply, but got ${event.eventId}")
   }
 
-  /** In-flight flows always loop back through the internal topic; node
-    * advancement happens in the executor (EgressRouter.java:49-63 + TODO:55).
+  /** In-flight flows loop back through the internal topic; node
+    * advancement happens in the executor (EgressRouter.java:49-63 +
+    * TODO:55). A flow whose node is already `RETURN` would be answered by
+    * ingress on its next trip without reading state, so egress answers it
+    * now: the same reply, one micro-batch and one feedback write sooner.
     */
-  private def egressFlow(event: Event): Route =
-    Route(RouteDirection.INTERNAL, "", event.eventId, event)
+  private def egressFlow(event: Event): Route = {
+    val next = ingressFlow(event)
+    if (next.direction == RouteDirection.EGRESS) egress(next.eventValue)
+    else Route(RouteDirection.INTERNAL, "", event.eventId, event)
+  }
 
   /** Re-key a create-reply so it joins the stateful flow under its newly
     * assigned key (StateFlowFlinkJob.java:88-95).

@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.RuntimeConfig
@@ -42,9 +42,18 @@ final class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocal
 
 /** The FileContext-API `file:` scheme, built like Hadoop's `LocalFs`:
   * `ChecksumFs` over a `DelegateToFileSystem` of the fork-free raw store.
-  * Spark's checkpoint file managers write through this one. */
+  * Spark's checkpoint file managers write through this one.
+  *
+  * Spark reads the offset and commit logs with `FileContext.open(Path)`,
+  * which `FilterFs` hands straight to the raw store, past `ChecksumFs`'s
+  * checker; so a wrong digit in `offsets/<n>` would restart the query at
+  * the wrong offset. Here that call verifies the `.crc` sidecar as the
+  * buffered open does. This covers `file:` checkpoints only: other schemes
+  * keep their own filesystem's read path. */
 final class ForkFreeLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf))
+    extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 /** Hadoop's `RawLocalFs` (whose constructors are package-private) over
   * [[ForkFreeRawLocalFileSystem]]. */

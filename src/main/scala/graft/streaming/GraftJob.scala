@@ -20,6 +20,13 @@ import graft.exec.{FunctionExecutor, HttpFunctionExecutor, LocalCounterExecutor}
   * shape); without it the in-JVM counter entity runs (smoke deployments).
   * `--operators` enables the reference's operator validation — events for
   * unlisted operators return FailedInvocation.
+  *
+  * The keyed state has as many partitions as `spark.sql.shuffle.partitions`,
+  * and every hop runs one task per partition. Unless the submit sets it
+  * (`--conf spark.sql.shuffle.partitions=N`), the job uses the cluster's
+  * default parallelism (its cores) rather than Spark's 200. The first
+  * checkpoint fixes the count: a job restarted on an existing checkpoint
+  * keeps the count that checkpoint was written with.
   */
 object GraftJob {
   def main(args: Array[String]): Unit = {
@@ -32,8 +39,16 @@ object GraftJob {
     val config = JobConfig(
       trigger = opts.get("--trigger-ms").map(ms => Trigger.ProcessingTime(ms.toLong)),
       knownOperators = opts.get("--operators").map(_.split(',').toSet))
-    val spark = SparkSession.builder().appName("graft-stateflow").getOrCreate()
-    KafkaSupport.start(spark, bootstrap, executor, checkpoint, config)
+    KafkaSupport.start(session(), bootstrap, executor, checkpoint, config)
       .awaitTermination()
+  }
+
+  /** The job's session, with one state partition per core unless the
+    * submit chose a count. */
+  private[streaming] def session(): SparkSession = {
+    val spark = SparkSession.builder().appName("graft-stateflow").getOrCreate()
+    if (!spark.sparkContext.getConf.contains("spark.sql.shuffle.partitions"))
+      spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toLong)
+    spark
   }
 }

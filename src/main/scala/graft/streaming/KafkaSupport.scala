@@ -14,6 +14,10 @@ import graft.model._
   * `event_id` bytes (KafkaSerializeProto.java:24-30), at-least-once
   * end-to-end (checkpointed source offsets + Spark's at-least-once Kafka
   * sink ≙ CheckpointingMode.AT_LEAST_ONCE + Semantic.AT_LEAST_ONCE).
+  * `internal` carries only in-flight hops: a flow that reaches its
+  * `RETURN` node goes to `client_reply` in the same batch
+  * ([[graft.routing.Routing.egress]]), where the reference writes it to
+  * `internal` once more for ingress to answer.
   *
   * Needs the `spark-sql-kafka` connector on the classpath at runtime (not
   * present in this offline container — exercised there only through

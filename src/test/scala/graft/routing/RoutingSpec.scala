@@ -1,5 +1,7 @@
 package graft.routing
 
+import org.scalacheck.{Arbitrary, Gen}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
@@ -70,6 +72,40 @@ class RoutingSpec extends AnyFunSuite {
     val r = Routing.egress(e)
     assert(r.direction == RouteDirection.INTERNAL)
     assert(r.key == "e8")
+  }
+
+  /** Deterministic 300-sample sweep of a generator. */
+  private def forAll[A](g: Gen[A])(f: A => Unit): Unit =
+    (0 until 300).foreach(i => g.apply(Gen.Parameters.default, Seed(i.toLong)).foreach(f))
+
+  private val genStr = Gen.alphaNumStr.map(_.take(20))
+  private val genFA = for {
+    ns <- genStr; n <- genStr; st <- Gen.oneOf(true, false); k <- genStr
+  } yield FunctionAddress(FunctionType(ns, n, st), k)
+  /** An EventFlow request as a function returns it, at a node of type `nodeType`. */
+  private def genFlow(nodeType: Gen[String]): Gen[Event] = for {
+    id <- genStr; fa <- genFA; cur <- genFA; t <- nodeType
+    payload <- Gen.listOf(Arbitrary.arbByte.arbitrary).map(_.toArray)
+  } yield Event.request(id, fa, Request.EventFlow, payload, Some(EventFlowNode(cur, t)))
+
+  private def wire(r: Route) = (r.direction, r.routeName, r.key, ProtoCodec.encode(r.eventValue).toSeq)
+
+  test("egress: a flow at its RETURN node gets the reply ingress would give a trip later") {
+    forAll(genFlow(Gen.const("RETURN"))) { e =>
+      val looped = Routing.ingress(ProtoCodec.decodeEvent(ProtoCodec.encode(e)))
+      assert(wire(Routing.egress(e)) == wire(Routing.egress(looped.eventValue)), e)
+      assert(Routing.egress(e).direction == RouteDirection.CLIENT)
+      assert(Routing.egress(e).eventValue.reply.contains(Reply.SuccessfulInvocation))
+    }
+  }
+
+  test("egress: a flow at an INVOKE or other non-RETURN node still loops back INTERNAL") {
+    forAll(genFlow(Gen.oneOf("INVOKE", "INVOKE_SPLIT", ""))) { e =>
+      val r = Routing.egress(e)
+      assert(r.direction == RouteDirection.INTERNAL, e)
+      assert(r.key == e.eventId)
+      assert(r.eventValue == e)
+    }
   }
 
   test("egress: non-flow request throws") {

@@ -130,6 +130,18 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  /** Flips the low bit of the byte at `at(bytes)` in `f`; returns the original bytes. */
+  private def flip(f: JPath, at: Array[Byte] => Int): Array[Byte] = {
+    val original = Files.readAllBytes(f)
+    val bytes = original.clone()
+    bytes(at(bytes)) = (bytes(at(bytes)) ^ 1).toByte
+    Files.write(f, bytes)
+    original
+  }
+
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toVector
+
   private def listFiles(dir: JPath): Seq[JPath] =
     Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_)).toVector
 
@@ -164,13 +176,6 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"Spark checksum of $f: $json")
     }
 
-    def flip(f: JPath, at: Array[Byte] => Int): Array[Byte] = {
-      val original = Files.readAllBytes(f)
-      val bytes = original.clone()
-      bytes(at(bytes)) = (bytes(at(bytes)) ^ 1).toByte
-      Files.write(f, bytes)
-      original
-    }
     // a valid offsets file with one wrong digit: only its sidecar can tell
     val offsets = ckpt.resolve("offsets").resolve("2")
     val original = flip(offsets, _.lastIndexWhere(b => b >= '0' && b <= '9'))
@@ -188,8 +193,21 @@ class ForkFreeLocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .maxBy(_.getFileName.toString.takeWhile(_.isDigit).toInt)
     flip(newest, _.length / 2)
     val err = intercept[Exception](runBatches(ckpt.toString, input, keyed, Seq("c4"), replies))
-    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toVector
+    val chain = causes(err)
     assert(chain.exists(e => e.isInstanceOf[ChecksumException] ||
       String.valueOf(e.getMessage).contains("Stream is corrupted")), s"not a corruption error: $chain")
+  }
+
+  test("a flipped digit in the offset log fails the restart instead of resuming elsewhere") {
+    import spark.implicits._
+    val ckpt = Files.createTempDirectory("graft-offsets")
+    val input = MemoryStream[Array[Byte]](spark)
+    val replies = mutable.Buffer.empty[Event]
+    val keyed = FunctionAddress(acct, "off1")
+    runBatches(ckpt.toString, input, keyed, Seq("o1", "o2", "o3"), replies)
+    // the source offset is the file's last number: a still-valid offset
+    flip(ckpt.resolve("offsets").resolve("2"), _.lastIndexWhere(b => b >= '0' && b <= '9'))
+    val err = intercept[Exception](runBatches(ckpt.toString, input, keyed, Seq("o4"), replies))
+    assert(causes(err).exists(_.isInstanceOf[ChecksumException]), s"not a checksum error: ${causes(err)}")
   }
 }

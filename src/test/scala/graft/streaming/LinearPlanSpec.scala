@@ -94,6 +94,24 @@ class LinearPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a 3-hop flow is answered in its third batch; no batch reads a RETURN row") {
+    withHarness(new LocalCounterExecutor) { h =>
+      val hops = Seq("h1", "h2", "h3")
+      h.send(Event.request("h-flow", Event.emptyAddress, Request.EventFlow,
+        hops.tail.map(k => s"global/Account/$k").mkString("|").getBytes("UTF-8"),
+        Some(EventFlowNode(FunctionAddress(acct, hops.head), "INVOKE"))))
+      h.drain()
+      assert(h.clientReplies.map(e => e.eventId -> e.reply) == Seq("h-flow" -> Some(Reply.SuccessfulInvocation)))
+      // one row per batch, and each one a hop that reached its entity
+      val batches = dataBatches(h)
+      assert(batches.map(_.numInputRows) == Seq(1L, 1L, 1L), batches)
+      h.send(hops.map(k => Event.request(s"get-$k", FunctionAddress(acct, k), Request.GetState)): _*)
+      h.drain()
+      assert(h.clientReplies.filter(_.eventId.startsWith("get-"))
+        .map(e => e.funAddress.key -> ByteBuffer.wrap(e.payload).getLong).toMap == hops.map(_ -> 1L).toMap)
+    }
+  }
+
   test("a failed create goes to the client with one backend call and no state row") {
     CallLog.calls.clear()
     withHarness(new CountingExecutor(failCreateOf = "f-bad")) { h =>
