@@ -46,25 +46,6 @@ object CdcOps {
       .withColumn("is_current", col("valid_to").isNull)
   }
 
-  /** Streaming change capture — the incremental LAG-collapse half of
-    * [[scd2]]: one ValueState (the last attribute) per entity, a row
-    * emitted only on change. The emitted set is IDENTICAL to the batch
-    * collapse over everything seen so far (StreamingExtrasSpec pins it);
-    * interval closing stays a query-time LEAD, as in the batch build.
-    * State is O(1) per entity and the entity key is uniform — the same
-    * scale shape as the batch operator's single entity-key shuffle.
-    * Output: (entity, attr, from_us).
-    */
-  def scd2Stream(log: DataFrame, key: String, attr: String, ts: String,
-      tie: String): DataFrame = {
-    import log.sparkSession.implicits._
-    log.select(col(key).cast("long").as("entity"), col(attr).cast("string").as("attr"),
-        unix_micros(col(ts)).as("ts_us"), col(tie).cast("long").as("tie"))
-      .as[(Long, String, Long, Long)]
-      .transform(new graft.streaming.Scd2ChangeProcessor().byKey(_._1))
-      .toDF("entity", "attr", "from_us")
-  }
-
   /** Latest-wins state of an append-only changelog — the read side of a
     * lakehouse MERGE: per key, the row of the most recent change (by
     * `ts`, then `tie` for same-timestamp determinism), dropped entirely
@@ -99,31 +80,6 @@ object CdcOps {
       base.withColumn(opCol, lit("upsert"))
         .unionByName(changes.select(base.columns.map(col) :+ col(opCol): _*)),
       key, ts, tie, opCol)
-
-  /** Streaming changelog MERGE — the incremental twin of
-    * [[changelogState]]/[[applyChangelog]]: per entity, keep only the
-    * newest (ts, tie) stamp in a ValueState and emit each row that
-    * advances it (stale out-of-order updates are suppressed). The last
-    * emitted row per key, deletes dropped, is IDENTICAL to the batch
-    * [[changelogState]] over everything seen so far, regardless of how
-    * the log is split into micro-batches — StreamingExtrasSpec pins it.
-    * Same single-entity-key-shuffle scale shape as the batch build;
-    * state is O(1) per entity.
-    * Input cols: (key, etype, value, ts µs, tie, op).
-    * Output: (entity, etype, value, ts_us, op).
-    */
-  def mergeStream(log: DataFrame, key: String, etype: String, value: String,
-      ts: String, tie: String, opCol: String = "op"): DataFrame = {
-    import log.sparkSession.implicits._
-    log.select(col(key).cast("long").as("entity"),
-        col(etype).cast("string").as("etype"),
-        col(value).cast("double").as("value"),
-        col(ts).cast("long").as("ts_us"), col(tie).cast("long").as("tie"),
-        col(opCol).cast("string").as("op"))
-      .as[(Long, String, Double, Long, Long, String)]
-      .transform(new graft.streaming.MergeStateProcessor().byKey(_._1))
-      .toDF("entity", "etype", "value", "ts_us", "op")
-  }
 
   // ==================== driver-checked query bindings ====================
 
@@ -264,25 +220,6 @@ object CdcOps {
     },
     Some(incrSql))
 
-  /** Streaming twin of [[incrementalAgg]]: the aggregate view maintained
-    * continuously from a changelog stream. Input columns: (key, op ∈
-    * insert|delete, units — exact integer measure, e.g. cents); each
-    * micro-batch applies its signed deltas to per-key ValueState and
-    * emits the updated (key, cnt, units) row. Last-emitted per key
-    * (cnt > 0) ≡ the batch operator over everything seen — pinned in
-    * StreamingExtrasSpec. Output: (key, cnt, units).
-    */
-  def incrementalAggStream(changes: DataFrame, key: String,
-      unitsCol: String, opCol: String = "op"): DataFrame = {
-    import changes.sparkSession.implicits._
-    val sign = when(col(opCol) === "delete", lit(-1L)).otherwise(lit(1L))
-    changes.select(col(key).cast("long").as("k"), sign.as("dc"),
-        (sign * col(unitsCol).cast("long")).as("ds"))
-      .as[(Long, Long, Long)]
-      .transform(new graft.streaming.IncrAggProcessor().byKey(_._1))
-      .toDF("k", "cnt", "units")
-  }
-
   /** Snapshot diff — the audit view of two keyed table versions: per key,
     * `added` (only in `after`), `removed` (only in `before`), or
     * `changed` (present in both, any non-key column differs, null-safe).
@@ -417,34 +354,6 @@ object CdcOps {
         .orderBy(col("user_id"), col("ts"), col("event_id"))
     },
     Some(pitSql))
-
-  /** Streaming twin of [[pitJoin]]: facts and dimension changes as ONE
-    * keyed stream, each fact emitted with the attribute in force at its
-    * own event time ([[graft.streaming.PitJoinProcessor]] holds the
-    * collapsed per-entity change history). The event-time-correct
-    * feature-enrichment join a streaming feature store needs — the
-    * processing-time "join against current dimension" alternative is
-    * exactly the leakage [[pitJoin]]'s scaladoc warns about.
-    * StreamingExtrasSpec pins stream ≡ batch under the ordered-feed
-    * contract. Output: (entity, fact_id, ts_us, attr_at_ts).
-    */
-  def pitJoinStream(facts: DataFrame, dimLog: DataFrame, key: String,
-      attr: String, ts: String, tie: String, factId: String): DataFrame = {
-    import facts.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val d = dimLog.select(col(key).cast("long").as("entity"), lit(0).as("kind"),
-      unix_micros(col(ts)).as("ts_us"), col(tie).cast("long").as("tie"),
-      col(attr).cast("string").as("attr"), lit(-1L).as("fact_id"))
-    val f = facts.select(col(key).cast("long").as("entity"), lit(1).as("kind"),
-      unix_micros(col(ts)).as("ts_us"), col(tie).cast("long").as("tie"),
-      lit(null).cast("string").as("attr"), col(factId).cast("long").as("fact_id"))
-    d.unionByName(f)
-      .as[(Long, Int, Long, Long, String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.PitJoinProcessor,
-        TimeMode.None(), OutputMode.Append())
-      .toDF("entity", "fact_id", "ts_us", "attr_at_ts")
-  }
 
   // -------------------- incremental JOIN view maintenance (delta join)
   /** Incremental maintenance of a JOIN materialized view under

@@ -40,66 +40,6 @@ object DedupOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Streaming exact dedup: keep the FIRST arrival per normalized-text
-    * fingerprint (state-store-backed dropDuplicates — works on a streaming
-    * DataFrame in append mode). Bound the dedup state by calling
-    * `.withWatermark(tsCol, ...)` on the input first; without a watermark
-    * the fingerprint state grows with distinct docs, exactly like any
-    * streaming distinct. All input columns pass through, plus `fp`.
-    */
-  def exactDedupStream(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs
-      .withColumn("fp", md5(trim(regexp_replace(lower(col(textCol)), "\\s+", " ")).cast("binary")))
-      .dropDuplicates("fp")
-
-  /** Streaming NEAR-dup detection — the approximate twin of
-    * [[exactDedupStream]] and the incremental complement of
-    * [[bloomNewDocs]]: MinHash-band bucketing inside `transformWithState`.
-    *
-    * Same index as [[minhashLsh]], maintained incrementally: each doc's
-    * k-perm MinHash signature splits into `bands` band values (map-only,
-    * native kernels); the stream is then keyed by (band, band-value) and a
-    * [[graft.streaming.BandNearDupProcessor]] holds each bucket's
-    * (doc_id, shingle-hash array) list in `ListState`. A new arrival is
-    * exact-verified (shingle Jaccard ≥ `threshold`) against ONLY its
-    * bucket's prior docs — the per-key candidate verify — and appended for
-    * future arrivals. Docs landing in the same micro-batch are processed
-    * in doc-id order, so in-batch pairs are found too.
-    *
-    * Scale shape: state is sharded by the uniform band-hash key (the same
-    * key the batch variant joins on), per-bucket lists stay
-    * candidate-sized by the LSH premise, and `stateTtl` bounds total state
-    * on an unbounded stream — the standard sliding-corpus trade. A pair
-    * sharing several bands is emitted once per shared band; consumers
-    * dedup on (doc_id, dup_of) downstream (cheap: flagged pairs are rare).
-    * Output (append-mode): (doc_id, dup_of, jaccard).
-    */
-  def nearDupStream(docs: DataFrame, k: Int = 16, bands: Int = 4,
-      threshold: Double = 0.8, idCol: String = "doc_id", textCol: String = "text",
-      stateTtl: org.apache.spark.sql.streaming.TTLConfig =
-        org.apache.spark.sql.streaming.TTLConfig.NONE): DataFrame = {
-    import org.apache.spark.sql.streaming.OutputMode
-    require(k % bands == 0, "k must be a multiple of bands")
-    val rows = k / bands
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val banded = docs
-      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
-      .withColumn("sh", GraftFunctions.graft_shingle_hashes(col("text"), 3))
-      .withColumn("sig", GraftFunctions.graft_minhash_affine(col("sh"), k))
-      .select(col("doc_id"), col("sh"),
-        explode(expr(s"transform(sequence(0, ${bands - 1}), b -> " +
-          s"concat(cast(b as string), ':', concat_ws(',', " +
-          s"transform(slice(sig, b * $rows + 1, $rows), x -> cast(x as string)))))"))
-          .as("bkey"))
-      .as[(Long, Array[Long], String)]
-    banded.groupByKey(_._3)
-      .transformWithState(
-        new graft.streaming.BandNearDupProcessor(threshold, stateTtl),
-        graft.streaming.KeyedFold.timeMode(stateTtl), OutputMode.Append())
-      .toDF("doc_id", "dup_of", "jaccard")
-  }
-
   /** (doc_id, sh) with the distinct word-3-gram shingle array MATERIALIZED
     * behind an exchange. The barrier matters: downstream ops reference `sh`
     * many times (explode, signatures, verification), and without a physical

@@ -11,9 +11,7 @@ import OracleFragments.{d2 => od2, sumD => oSumD}
 /** Batch analogues of the streaming plane over the `events` table: tumbling
   * windows, sessionization (the stateful per-key pattern of the reference's
   * InvokeStatefulLambda, cf. /root/reference .../InvokeStatefulLambda.java:61-65),
-  * JSON payload extraction, and per-key top-k. Each has a DuckDB oracle; the
-  * true streaming versions (Structured Streaming + transformWithState) are
-  * exercised in the ScalaTest suites.
+  * JSON payload extraction, and per-key top-k. Each has a DuckDB oracle.
   */
 object EventsQueries {
 
@@ -483,9 +481,8 @@ object EventsQueries {
     * the typed per-key scan: `groupByKey(user).flatMapGroups` sorts one
     * user's events and folds the recurrence imperatively — distributed
     * on the (uniform) entity key, linear in each user's events, memory
-    * bounded by per-entity activity (the sessionize bound). The
-    * streaming twin of this shape is `transformWithState` with s in
-    * ValueState. All arithmetic in exact integer cents; the oracle
+    * bounded by per-entity activity (the sessionize bound). All
+    * arithmetic in exact integer cents; the oracle
     * mirrors the recurrence with a per-user recursive CTE — an
     * independent formulation of the same fold.
     */
@@ -523,26 +520,6 @@ object EventsQueries {
       FROM c JOIN e ON e.user_id = c.user_id AND e.rn = c.rn + 1)
     SELECT user_id, us, s FROM c WHERE s > $CusumH ORDER BY user_id, us"""))
 
-  /** Streaming twin of [[qCusum]]: the same clamped recurrence on
-    * `transformWithState` with ONE long of CUSUM state per entity
-    * ([[graft.streaming.CusumProcessor]]) — constant state however many
-    * events flow, alert rows identical to the batch fold for a
-    * batch-monotone per-key feed (StreamingExtrasSpec pins stream ≡
-    * batch across micro-batch splits).
-    */
-  def cusumAlertsStream(events: DataFrame, k: Long = CusumK,
-      h: Long = CusumH, tsCol: String = "ts", userCol: String = "user_id",
-      idCol: String = "event_id", valueCol: String = "value"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .select(col(userCol).cast("long").as("u"),
-        unix_micros(col(tsCol)).as("us"), col(idCol).cast("long").as("eid"),
-        round(col(valueCol) * 100).cast("bigint").as("cents"))
-      .as[(Long, Long, Long, Long)]
-      .transform(new graft.streaming.CusumProcessor(k, h).byKey(_._1))
-      .toDF("user_id", "us", "s")
-  }
-
   /** EWMA level alerts — the SMOOTHED spend monitor next to [[qCusum]]'s
     * drift detector, at the dyadic smoothing constant α = ½ that keeps
     * EWMA integer-exact: s ← (s + x) div 2 from s = 0, alert while
@@ -551,8 +528,7 @@ object EventsQueries {
     * floor loses < 1 cent per step and both engines floor identically).
     * Same typed per-key fold as CUSUM (the reset-free prefix recurrence
     * is equally inexpressible declaratively), same per-user recursive-
-    * CTE oracle, same constant-state streaming twin
-    * ([[graft.streaming.EwmaProcessor]]).
+    * CTE oracle.
     */
   private val EwmaH = 12000L   // alert level (cents)
 
@@ -602,8 +578,7 @@ object EventsQueries {
     *
     * Same typed per-key fold as CUSUM/EWMA (a reset-free prefix
     * recurrence is inexpressible declaratively), same recursive-CTE
-    * oracle, same constant-state streaming twin
-    * ([[graft.streaming.HoltProcessor]] — TWO longs per entity).
+    * oracle.
     */
   private val qHolt = GraftQuery(
     "qe_holt_trend",
@@ -644,40 +619,6 @@ object EventsQueries {
     SELECT user_id, us, l AS level, b AS trend, l + b AS forecast
     FROM c ORDER BY user_id, us"""))
 
-  /** Streaming twin of [[qHolt]]: two longs of (level, trend) state per
-    * entity on `transformWithState` — StreamingExtrasSpec pins stream ≡
-    * batch across a mid-key micro-batch split.
-    */
-  def holtTrendStream(events: DataFrame,
-      tsCol: String = "ts", userCol: String = "user_id",
-      idCol: String = "event_id", valueCol: String = "value"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .select(col(userCol).cast("long").as("u"),
-        unix_micros(col(tsCol)).as("us"), col(idCol).cast("long").as("eid"),
-        round(col(valueCol) * 100).cast("bigint").as("cents"))
-      .as[(Long, Long, Long, Long)]
-      .transform(new graft.streaming.HoltProcessor().byKey(_._1))
-      .toDF("user_id", "us", "level", "trend", "forecast")
-  }
-
-  /** Streaming twin of [[qEwma]]: one long of smoothed-level state per
-    * entity on `transformWithState` — StreamingExtrasSpec pins stream ≡
-    * batch across a mid-key micro-batch split.
-    */
-  def ewmaAlertsStream(events: DataFrame, h: Long = EwmaH,
-      tsCol: String = "ts", userCol: String = "user_id",
-      idCol: String = "event_id", valueCol: String = "value"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .select(col(userCol).cast("long").as("u"),
-        unix_micros(col(tsCol)).as("us"), col(idCol).cast("long").as("eid"),
-        round(col(valueCol) * 100).cast("bigint").as("cents"))
-      .as[(Long, Long, Long, Long)]
-      .transform(new graft.streaming.EwmaProcessor(h).byKey(_._1))
-      .toDF("user_id", "us", "s")
-  }
-
   /** Token-bucket admission audit — "which requests would a per-user
     * rate limiter have rejected": a bucket of capacity `RlCap` refills
     * at `RlRate` cents per second of event time; each event spends its
@@ -686,9 +627,7 @@ object EventsQueries {
     * behind quota/abuse-control tuning. Integer throughout (refill =
     * rate·⌊Δus/10⁶⌋); the refill-then-spend recurrence is reset-free
     * but CLAMPED above (min with cap), so like CUSUM/EWMA it needs the
-    * typed per-key fold; oracle = per-user recursive CTE; streaming
-    * twin = [[graft.streaming.RateLimitProcessor]] with two longs of
-    * state per entity.
+    * typed per-key fold; oracle = per-user recursive CTE.
     */
   private val RlCap = 20000L   // bucket capacity (cents)
   private val RlRate = 50L     // refill (cents per second)
@@ -739,23 +678,6 @@ object EventsQueries {
       FROM c JOIN e ON e.user_id = c.user_id AND e.rn = c.rn + 1)
     SELECT user_id, us, cents, avail FROM c
     WHERE avail < cents ORDER BY user_id, us"""))
-
-  /** Streaming twin of [[qRateLimit]]: (tokens, last-us) state on
-    * `transformWithState` — StreamingExtrasSpec pins stream ≡ batch
-    * across a mid-key micro-batch split.
-    */
-  def rateLimitStream(events: DataFrame, cap: Long = RlCap,
-      rate: Long = RlRate, tsCol: String = "ts", userCol: String = "user_id",
-      idCol: String = "event_id", valueCol: String = "value"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .select(col(userCol).cast("long").as("u"),
-        unix_micros(col(tsCol)).as("us"), col(idCol).cast("long").as("eid"),
-        round(col(valueCol) * 100).cast("bigint").as("cents"))
-      .as[(Long, Long, Long, Long)]
-      .transform(new graft.streaming.RateLimitProcessor(cap, rate).byKey(_._1))
-      .toDF("user_id", "us", "cents", "avail")
-  }
 
   /** Peak concurrency — the capacity-planning number: how many user
     * sessions were EVER active at once, and when that peak was first
@@ -1000,96 +922,6 @@ object EventsQueries {
       SELECT win_start, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
       FROM w GROUP BY win_start ORDER BY win_start"""))
 
-  /** Streaming twin of [[qSlidingDistinct]]: exact rolling distinct
-    * users over sliding event-time windows, incrementally. Two chained
-    * stateful operators (Spark supports stateful-op chaining under one
-    * aligned watermark): dropDuplicates on (window, user) holds one
-    * state row per distinct membership — the exact-distinct state any
-    * engine needs — then the windowed count aggregates survivors; each
-    * window emits once, when the watermark passes its end. State is
-    * bounded by the watermark delay × distinct users, keyed uniformly —
-    * the same scale story as the batch ×3 fan-out, held incrementally.
-    * StreamingExtrasSpec pins stream ≡ batch on closed windows.
-    */
-  def slidingDistinctStream(events: DataFrame, tsCol: String = "ts",
-      userCol: String = "user_id", watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .select(window(col(tsCol), "3 hours", "1 hour"), col(userCol).as("user_id"))
-      .dropDuplicates("window", "user_id")
-      .groupBy(col("window"))
-      .agg(count(lit(1)).as("n_users"))
-      .select(col("window.start").as("win_start"), col("n_users"))
-
-  /** Streaming sketch twin of the HLL family (qagg_hll_sketch /
-    * qagg_hll_sliding): per-day distinct users maintained as ONE HLL
-    * sketch of state per day on `transformWithState` — constant bytes
-    * per key where [[slidingDistinctStream]]'s exact state is a row per
-    * membership. Emits (epoch_day, estimate) per touched day per batch;
-    * the final estimate per day is bit-identical to a composite-estimate
-    * build over the same register state however the stream was
-    * micro-batched (register max is commutative — StreamingExtrasSpec
-    * pins it), and within sketch tolerance of batch
-    * `hll_sketch_estimate(hll_sketch_agg(user_id, 12))`, whose HIP-based
-    * estimate is insertion-history-dependent.
-    */
-  def hllDailyDistinctStream(events: DataFrame, tsCol: String = "ts",
-      userCol: String = "user_id"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .select(datediff(to_date(col(tsCol)), lit("1970-01-01")).cast("long")
-          .as("day"),
-        col(userCol).cast("long").as("u"))
-      .as[(Long, Long)]
-      .transform(new graft.streaming.HllStateProcessor(12).byKey(_._1))
-      .toDF("day", "approx_users")
-  }
-
-  /** Streaming per-day EXACT distinct users on paged-bitmap state — the
-    * state twin of the `graft_bitmap_distinct` native aggregate
-    * (qagg_bitmap_distinct), sharing its BitmapPages core and wire
-    * format. One serialized page map per day-key (~1 bit per dense id),
-    * and because bitwise OR is commutative/associative/IDEMPOTENT the
-    * final per-day count is pinned BIT-EXACT to batch
-    * `countDistinct(user_id)` under any micro-batching, ordering, or
-    * at-least-once replay — the exact-answer middle ground between
-    * [[slidingDistinctStream]]'s row-per-membership state and
-    * [[hllDailyDistinctStream]]'s constant-but-approximate sketch.
-    */
-  def bitmapDailyDistinctStream(events: DataFrame, tsCol: String = "ts",
-      userCol: String = "user_id"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .select(datediff(to_date(col(tsCol)), lit("1970-01-01")).cast("long")
-          .as("day"),
-        col(userCol).cast("long").as("u"))
-      .as[(Long, Long)]
-      .transform(new graft.streaming.BitmapStateProcessor().byKey(_._1))
-      .toDF("day", "n_users")
-  }
-
-  /** Streaming per-day trending items: the Misra–Gries state twin of the
-    * batch `graft_freq_items` aggregate (qagg_heavy_hitters) — one
-    * ≤k-counter summary of state per day, O(k) bytes however many
-    * distinct items stream through, full summary re-emitted per touched
-    * day per batch. Same shared update/merge core and wire format as the
-    * batch aggregate ([[graft.functions.MGSummary]]), so the est ≤ true /
-    * deficit ≤ N/(k+1) / heavy-retained contract holds at every emission
-    * regardless of micro-batching (StreamingExtrasSpec pins contract +
-    * single-partition golden bit-equality).
-    */
-  def trendingItemsStream(events: DataFrame, k: Int = 16,
-      tsCol: String = "ts", itemCol: String = "item"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .select(datediff(to_date(col(tsCol)), lit("1970-01-01")).cast("long")
-          .as("day"),
-        col(itemCol).cast("string").as("item"))
-      .as[(Long, String)]
-      .transform(new graft.streaming.FreqItemsProcessor(k).byKey(_._1))
-      .toDF("day", "item", "est")
-  }
-
   /** Exact Shapley-value channel attribution (the cooperative-game
     * upgrade over last-touch / [[qAttribution]]'s next-conversion rule,
     * Shapley 1953 as applied to marketing credit): each user's
@@ -1321,10 +1153,7 @@ object EventsQueries {
     * uniform-key aggregation (`array_sort` of (ts, id, char) structs —
     * per-entity state, never a global sort), and the pattern becomes one
     * codegen'd `regexp_count`. Entity sequences are bounded by per-entity
-    * activity, the same premise as sessionization; the streaming twin
-    * ([[cepStream]]) needs only TWO ints of state per entity — the open
-    * stage and the match count — because chain patterns are
-    * backtracking-free.
+    * activity, the same premise as sessionization.
     *
     * Output: (user, n_matches) for entities with >= 1 match.
     */
@@ -1348,32 +1177,6 @@ object EventsQueries {
       .select(col("user"), regexp_count(col("sq"), lit(regex)).as("n_matches"))
       .filter(col("n_matches") > 0)
       .orderBy(col("user"))
-  }
-
-  /** Streaming twin of [[cepPatternCount]]: the same chain pattern run
-    * continuously per entity on `transformWithState` with the
-    * [[graft.streaming.CepProcessor]] DFA (open stage + count — two ints
-    * per entity, O(entities) state). Emits (user, cumulative matches)
-    * per batch; last emission per user ≡ the batch operator over
-    * everything seen, pinned in StreamingExtrasSpec with a match split
-    * across micro-batches. Input frame needs (userCol, tsCol, idCol,
-    * typeCol); event time must arrive per-entity in append order, as
-    * with every streaming twin.
-    */
-  def cepStream(events: DataFrame, stages: Seq[String],
-      userCol: String = "user_id", tsCol: String = "ts",
-      typeCol: String = "event_type", idCol: String = "event_id"): DataFrame = {
-    require(stages.nonEmpty && stages.distinct.size == stages.size)
-    import events.sparkSession.implicits._
-    val stageIdx = stages.zipWithIndex.foldLeft(lit(-1)) { case (acc, (st, i)) =>
-      when(col(typeCol) === st, lit(i + 1)).otherwise(acc)
-    }
-    events.select(col(userCol).cast("long").as("user"),
-        unix_micros(col(tsCol).cast("timestamp")).as("tus"),
-        col(idCol).cast("long").as("eid"), stageIdx.as("stage"))
-      .as[(Long, Long, Long, Int)]
-      .transform(new graft.streaming.CepProcessor(stages.size).byKey(_._1))
-      .toDF("user", "n_matches")
   }
 
   private val CepStages = Seq("view", "click", "purchase")
@@ -1554,23 +1357,6 @@ object EventsQueries {
         MAX(cents) AS high_cents, MIN(cents) AS low_cents,
         MIN(CASE WHEN rrn = 1 THEN cents END) AS close_cents
       FROM r GROUP BY event_type, day ORDER BY event_type, day"""))
-
-  /** Streaming twin of qe_ohlc: running OHLC bars on `transformWithState`
-    * keyed by a caller-encoded (series, bucket) string. Open/close carry
-    * their (us, event_id) coordinates in state, so min/max-by-order
-    * semantics survive ANY micro-batch split — including late data — and
-    * the last emitted bar per key equals the batch aggregation over
-    * everything seen (StreamingExtrasSpec pins it).
-    * Input columns: (key, us, event_id, cents).
-    */
-  def ohlcStream(rows: DataFrame): DataFrame = {
-    import rows.sparkSession.implicits._
-    rows.select(col("key").cast("string"), col("us").cast("long"),
-        col("event_id").cast("long"), col("cents").cast("long"))
-      .as[(String, Long, Long, Long)]
-      .transform(new graft.streaming.OhlcProcessor().byKey(_._1))
-      .toDF("key", "n", "open_cents", "high_cents", "low_cents", "close_cents")
-  }
 
   /** RFM (recency / frequency / monetary) quintile segmentation — the
     * classic user-value featurization. Per user: days since last event
@@ -1903,24 +1689,6 @@ object EventsQueries {
     SELECT day, dau, wau, mau,
       CAST((10000 * dau) // mau AS BIGINT) AS stickiness_bp
     FROM agg ORDER BY day"""))
-
-  /** Streaming twin of qe_rfm's per-user FEATURE stage: maintain each
-    * user's (last event time, frequency, monetary cents) incrementally
-    * via transformWithState ([[graft.streaming.RfmFeatureProcessor]]).
-    * Last emission per user ≡ the batch per-user aggregate over all
-    * input so far (StreamingExtrasSpec pins it). Quintile scoring
-    * (NTILE) remains a periodic batch readout over this feature frame.
-    */
-  def rfmFeaturesStream(events: DataFrame, userCol: String = "user_id",
-      tsCol: String = "ts", valueCol: String = "value"): DataFrame = {
-    import events.sparkSession.implicits._
-    events.select(col(userCol).cast("long").as("u"),
-        unix_micros(col(tsCol)).as("tm"),
-        expr(s"CAST(round($valueCol * 100) AS BIGINT)").as("cents"))
-      .as[(Long, Long, Long)]
-      .transform(new graft.streaming.RfmFeatureProcessor().byKey(_._1))
-      .toDF("user_id", "last_micros", "f", "m")
-  }
 
   /** Frequent sequential 2-patterns (GSP/PrefixSpan's length-2 core):
     * for every ordered pair of distinct event types (a → b), the number

@@ -338,24 +338,6 @@ object MultimodalOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Streaming twin of [[sceneCuts]]: the cut rule runs incrementally on
-    * `transformWithState` keyed by asset, carrying only the previous
-    * frame's histogram — a cut split across micro-batches is still
-    * detected (StreamingExtrasSpec pins stream ≡ batch across a split).
-    * Input columns: (doc_id, frame_idx, flen, hist).
-    */
-  def sceneCutStream(frames: DataFrame): DataFrame = {
-    import frames.sparkSession.implicits._
-    frames.select(col("doc_id").cast("long"), col("frame_idx").cast("int"),
-        col("flen").cast("int"), col("hist").cast("array<long>"))
-      .as[(Long, Int, Int, Seq[Long])]
-      .transform(new graft.streaming.SceneCutProcessor().byKey(_._1))
-      .toDF("doc_id", "n_frames", "n_cuts", "first_cut_raw")
-      .withColumn("first_cut",
-        when(col("first_cut_raw") >= 0, col("first_cut_raw")))
-      .drop("first_cut_raw")
-  }
-
   private val SceneStride = 64
 
   private val qSceneCuts = GraftQuery(

@@ -2284,105 +2284,6 @@ object SimilarityOps {
       .select(col("src"), col("nbr"), col("cosine"))
   }
 
-  /** Streaming maintenance twin of the navigable ANN graph — the
-    * incremental-insert path for [[knnGraph]] + [[crossCellEdges]]
-    * (HNSW's insert, re-expressed on engine-managed per-key state):
-    * each arriving vector is routed to its primary cell (as a MEMBER)
-    * and its `xCells` secondary cells (as a cross-link VISITOR), both
-    * from the same one-pass dot-score assignment the batch build uses,
-    * and a [[graft.streaming.GraphAnnInsertProcessor]] per quantizer
-    * cell maintains every resident's exact top-k adjacency in RocksDB
-    * as inserts arrive.
-    *
-    * Because the batch graph is cell-local by construction, the
-    * maintained state equals the batch rebuild over the same arrivals
-    * EDGE FOR EDGE (same tie rule, same cosines — pinned in
-    * StreamingExtrasSpec), so search recall over the streamed graph is
-    * identical to the bulk path's, not merely within ε. The codebook
-    * rides the plan as a literal (C ≤ [[CentroidLiteralMax]]) — the
-    * deployment contract is the IVF one: retrain periodically, restart
-    * the query with the new codebook (state keyed by cell id must not
-    * outlive its quantizer).
-    *
-    * Output (append mode, change-log): (cell, src, member, nbrs,
-    * cosines, alive) — src's new adjacency within that cell; keep the
-    * LATEST row per (cell, src) and drop rows whose latest emission has
-    * alive = false (a tombstone). Member rows are the intra-cell kNN
-    * edges, visitor rows the cross-cell links; symmetrize downstream
-    * exactly as [[graphAnnSearch]]'s callers do.
-    *
-    * Deletes (r13): pass `deleteCol` — rows with the flag true remove
-    * their id from the graph. A tombstone carries the SAME vector as
-    * its insert (it must route to the identical primary + secondary
-    * cells); the processor removes the resident, emits alive = false,
-    * and re-links every survivor that pointed at a removed member by an
-    * exact cell-local rescan, so the maintained graph equals the batch
-    * rebuild over the survivor set under any insert/delete interleaving
-    * (pinned in StreamingExtrasSpec). TTL expiry is INCOHERENT by
-    * construction (r13 verdict): RocksDB drops expired MapState entries
-    * without the re-link, so survivors keep adjacency edges into
-    * vanished residents until some later arrival rewrites them.
-    * Tombstones are therefore the ONLY supported expiry route — a
-    * non-NONE `stateTtl` throws unless the caller passes
-    * `allowIncoherentTtl = true` to opt into the documented staleness
-    * (acceptable when the consumer re-validates neighbors at read
-    * time, e.g. a serving layer that drops dead ids from beam results).
-    */
-  def graphAnnStream(vectors: org.apache.spark.sql.DataFrame,
-      cents: Seq[Seq[Double]],
-      k: Int = KnnK, xCells: Int = GXCells, xK: Int = GXK,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      stateTtl: org.apache.spark.sql.streaming.TTLConfig =
-        org.apache.spark.sql.streaming.TTLConfig.NONE,
-      deleteCol: String = "",
-      allowIncoherentTtl: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
-    require(stateTtl == TTLConfig.NONE || allowIncoherentTtl,
-      "graphAnnStream: TTL expiry drops residents WITHOUT re-linking " +
-        "survivors (orphan adjacency edges) — use explicit tombstones " +
-        "via deleteCol for coherent expiry, or pass allowIncoherentTtl " +
-        "= true to accept stale edges until the next arrival rewrites them")
-    require(cents.size <= CentroidLiteralMax,
-      s"graphAnnStream ships the codebook as a plan literal; C = " +
-        s"${cents.size} exceeds $CentroidLiteralMax — shrink the " +
-        "codebook or shard the stream (the large-C broadcast-join " +
-        "assignment path needs a batch aggregation)")
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    // null-id rows are dropped (a null would kill the query inside the
-    // primitive-Long deserializer); zero-norm vectors are dropped too —
-    // their cosines are NaN, carrying no geometry (the batch build
-    // ranks NaN first, a quirk not worth reproducing into state)
-    // deleteCol (r13): rows with the flag true are tombstones — they
-    // carry the SAME vector as the insert (a delete must route to the
-    // identical primary + secondary cells), and the processor removes
-    // the resident and re-links survivors exactly. Empty = insert-only.
-    val del =
-      if (deleteCol.isEmpty) lit(false)
-      else coalesce(col(deleteCol).cast("boolean"), lit(false))
-    // prep() inlined with the tombstone flag carried through (prep
-    // projects id/vec only; assignWithSecondaries preserves extras)
-    val prepped = vectors
-      .select(col(idCol).as("vec_id"),
-        col(vecCol).cast("array<double>").as("v"), del.as("_del"))
-      .withColumn("nrm", sqrt(graft_dot(col("v"), col("v"))))
-    val routed = assignWithSecondaries(prepped, cents, xCells)
-      .filter(col("vec_id").isNotNull && col("nrm") > 0.0)
-      .select(col("vec_id").cast("long").as("vec_id"), col("v"), col("nrm"),
-        col("_del"),
-        explode(expr(
-          """concat(array(struct(CAST(cell AS BIGINT) AS c, true AS m)),
-             transform(xcells, x -> struct(x AS c, false AS m)))""")).as("r"))
-      .select(col("r.c").as("cell"), col("vec_id"),
-        col("r.m").as("member"), col("v"), col("nrm"), col("_del"))
-      .as[(Long, Long, Boolean, Array[Double], Double, Boolean)]
-    routed.groupByKey(_._1)
-      .transformWithState(
-        new graft.streaming.GraphAnnInsertProcessor(k, xK, stateTtl),
-        graft.streaming.KeyedFold.timeMode(stateTtl), OutputMode.Append())
-      .toDF("cell", "src", "member", "nbrs", "cosines", "alive")
-  }
-
   /** One-scan cell assignment shared by the kNN-graph and cross-edge
     * builders: primary cell (argmax) PLUS the GXCells next-best cells,
     * all from a single codegen'd dot-score vector, checkpointed — the
@@ -2499,41 +2400,6 @@ object SimilarityOps {
       perRound += beamDf
     }
     perRound.toList
-  }
-
-  /** Beam search over a STREAM-MAINTAINED graph — the serve side of
-    * [[graphAnnStream]] (r13 verdict task 8: bm25Stream got
-    * bm25RankFromPostings; this closes the same maintain-but-can't-serve
-    * asymmetry for the ANN tier).
-    *
-    * `state` is the maintained snapshot of the change-log: the LATEST
-    * row per (cell, src) — exactly what the documented consumer keeps.
-    * Tombstoned rows (latest emission alive = false) are dropped here;
-    * live member rows contribute the intra-cell kNN adjacency, visitor
-    * rows the cross-cell links, and both are symmetrized exactly as the
-    * batch callers symmetrize [[knnGraph]] ∪ [[crossCellEdges]].
-    * `residents` carries the live ids' vectors (the ingest side owns
-    * them — the change-log intentionally ships adjacency, not
-    * embeddings); entries are the same `id % entryMod == 0` sample the
-    * batch walker seeds from. With the r13 pin that the maintained
-    * graph EQUALS the batch rebuild edge for edge, this search is
-    * bit-identical to [[graphAnnSearch]] over a batch-built index on
-    * the same residents (pinned in StreamingExtrasSpec).
-    */
-  def graphAnnSearchFromState(state: org.apache.spark.sql.DataFrame,
-      residents: org.apache.spark.sql.DataFrame,
-      queries: org.apache.spark.sql.DataFrame,
-      k: Int, beam: Int = GBeam, rounds: Int = GRounds,
-      entryMod: Long = GEntryMod.toLong, entryK: Int = GEntryK,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): org.apache.spark.sql.DataFrame = {
-    val base = state.filter(col("alive"))
-      .select(col("src"), explode(col("nbrs")).as("nbr"))
-    val sym = base.union(
-      base.select(col("nbr").as("src"), col("src").as("nbr")))
-    val entries = residents.filter(col(idCol) % entryMod === 0)
-    graphAnnSearch(residents, queries, entries, sym, k, beam, rounds,
-      entryK, idCol, vecCol)
   }
 
   /** Beam search — the top-k cut of [[graphAnnBeamsAll]]'s final round. */

@@ -4421,38 +4421,6 @@ object StatTests {
         CAST(cap AS BIGINT) AS cap
       FROM per, cap GROUP BY variant, cap ORDER BY variant"""))
 
-  /** Streaming SRM monitor — [[sampleRatioMismatch]] as a per-experiment
-    * transformWithState twin (two longs of state per key, the
-    * CUSUM/EWMA/Holt/rate-limit monitor family): unit-assignment events
-    * stream in keyed by experiment, each batch updates the two arm
-    * counts and re-emits the current (users_a, users_b, chisq_micro,
-    * srm_detected) row — latest emission per key wins. Counts are exact
-    * BigInt (the batch DECIMAL(38,0) discipline), so stream ≡ batch on
-    * everything seen, pinned across batch splits in
-    * StreamingExtrasSpec.
-    * Input: (keyCol, variantCol). Output: (exp_key, users_a, users_b,
-    * chisq_micro, srm_detected).
-    */
-  def srmStream(units: DataFrame, keyCol: String, variantCol: String,
-      stateTtl: org.apache.spark.sql.streaming.TTLConfig =
-        org.apache.spark.sql.streaming.TTLConfig.NONE): DataFrame = {
-    val spark = units.sparkSession
-    import spark.implicits._
-    // null key/variant rows are dropped — the batch twin counts a null
-    // variant in NEITHER arm (both when-branches miss), and a null here
-    // would kill the query deserializing into a primitive Long. The arm
-    // split happens BEFORE any numeric cast: the batch twin's predicate
-    // is `=!= 0` on the raw column, so a fractional variant in (-1,1)
-    // (e.g. 0.5) must land in arm B — casting first would truncate it
-    // to 0 and misfile it in arm A (r12 ADVICE)
-    units.select(col(keyCol).cast("string").as("k"),
-        (col(variantCol) =!= 0).cast("long").as("v"))
-      .filter(col("k").isNotNull && col("v").isNotNull)
-      .as[(String, Long)]
-      .transform(new graft.streaming.SrmProcessor(stateTtl).byKey(_._1))
-      .toDF("exp_key", "users_a", "users_b", "chisq_micro", "srm_detected")
-  }
-
   val queries: Seq[GraftQuery] =
     Seq(qChisq, qKs, qBoot, qGini, qLinReg, qPettitt, qWMedian, qMwu,
       qBenford, qPareto, qRuns, qSpearman, qKendall, qTheilSen, qCramersV,

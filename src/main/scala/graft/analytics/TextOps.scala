@@ -12,7 +12,7 @@ import Nlp._
   * column) plus the driver-checked query bindings over `documents`. All
   * map-only (no shuffle, NO sort), codegen-friendly, each with a DuckDB
   * oracle — map-only means every function here also composes with
-  * `readStream` (see StreamingExtrasSpec's streaming text-pipeline test).
+  * `readStream` (StreamingExtrasSpec runs `qualityScore` on a stream).
   */
 object TextOps {
 
@@ -209,8 +209,6 @@ object TextOps {
     * per training doc.
     */
   // Base pass: normalized fingerprint + token array, all codegen'd.
-  // Shared by the batch check and the streaming twin so the hash
-  // domains cannot drift.
   private def contamBase(df: org.apache.spark.sql.DataFrame) = df
     .withColumn("nrm", trim(regexp_replace(lower(col("text")), "\\s+", " ")))
     .withColumn("fp60", expr(h60("nrm")))
@@ -235,17 +233,14 @@ object TextOps {
       benchmark: org.apache.spark.sql.DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       benchTextCol: String = "text", window: Int = 8): org.apache.spark.sql.DataFrame = {
-    def base(df: org.apache.spark.sql.DataFrame) = contamBase(df)
-    def windowHashes(b: org.apache.spark.sql.DataFrame) =
-      contamWindowHashes(b, window)
-    val tn = base(norm(train, idCol, textCol))
-    val bn = base(
+    val tn = contamBase(norm(train, idCol, textCol))
+    val bn = contamBase(
       benchmark.select(col(benchTextCol).as("text"), lit(0L).as("doc_id")))
     val bfp = bn.select(col("fp60").as("bfp")).distinct()
-    val bwh = windowHashes(bn).select(col("h").as("bh")).distinct()
+    val bwh = contamWindowHashes(bn, window).select(col("h").as("bh")).distinct()
     val exact = tn.join(broadcast(bfp), col("fp60") === col("bfp"), "left_semi")
       .select(col("doc_id")).withColumn("e", lit(true))
-    val part = windowHashes(tn)
+    val part = contamWindowHashes(tn, window)
       .join(broadcast(bwh), col("h") === col("bh"), "left_semi")
       .select(col("doc_id")).distinct().withColumn("p", lit(true))
     tn.select(col("doc_id"))
@@ -256,59 +251,6 @@ object TextOps {
         coalesce(col("p"), lit(false)).as("partial_contam"),
         (coalesce(col("e"), lit(false)) || coalesce(col("p"), lit(false)))
           .as("contaminated"))
-  }
-
-  /** Streaming INCREMENTAL contamination — the [[contaminationCheck]]
-    * twin for the real deployment shape: training docs stream in while
-    * the benchmark suite also EVOLVES (new eval sets land after docs
-    * were already ingested). Both sides map to the identical hash
-    * domains as the batch check (normalized-text fp60 for exact,
-    * `window`-token shingle h60 for partial — the shared
-    * [[contamBase]]/[[contamWindowHashes]] exprs), the union is keyed
-    * by tagged hash, and a [[graft.streaming.ContaminationProcessor]]
-    * holds per-hash (benchmark-seen, train-doc list) state: a train
-    * arrival on a benchmark-marked hash flags immediately; a LATE
-    * benchmark arrival retro-flags every stored doc — so the flag SET
-    * converges to the batch result under any interleaving
-    * (StreamingExtrasSpec pins stream ≡ batch across a split with a
-    * late benchmark).
-    *
-    * Scale shape: state shards on the uniform 60-bit hash key; the
-    * train side stores one long per (window, doc) occurrence — the
-    * price of retroactivity (the batch check broadcasts the benchmark
-    * instead because it has it all up front); `stateTtl` bounds state
-    * on unbounded streams, trading away retro-flags older than the TTL.
-    *
-    * Output (append): (doc_id, kind) — kind 'e' (exact) / 'p'
-    * (partial), one row per flag event; consumers dedup on both.
-    */
-  def contaminationStream(train: org.apache.spark.sql.DataFrame,
-      benchmark: org.apache.spark.sql.DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      benchTextCol: String = "text", window: Int = 8,
-      stateTtl: org.apache.spark.sql.streaming.TTLConfig =
-        org.apache.spark.sql.streaming.TTLConfig.NONE): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.streaming.OutputMode
-    val spark = train.sparkSession
-    import spark.implicits._
-    def rows(df: org.apache.spark.sql.DataFrame, bench: Boolean) = {
-      val b = contamBase(df)
-      b.select(concat(lit("e:"), col("fp60")).as("k"),
-          lit(bench).as("bench"), col("doc_id"))
-        .unionByName(contamWindowHashes(b, window)
-          .select(concat(lit("p:"), col("h")).as("k"),
-            lit(bench).as("bench"), col("doc_id")))
-    }
-    val tagged = rows(norm(train, idCol, textCol), bench = false)
-      .unionByName(rows(
-        norm(benchmark.select(col(benchTextCol).as("text"),
-          lit(0L).as("doc_id")), "doc_id", "text"), bench = true))
-      .as[(String, Boolean, Long)]
-    tagged.groupByKey(_._1)
-      .transformWithState(
-        new graft.streaming.ContaminationProcessor(stateTtl),
-        graft.streaming.KeyedFold.timeMode(stateTtl), OutputMode.Append())
-      .toDF("doc_id", "kind")
   }
 
   /** Within-document repetition removal, C4/Gopher-style: split the text on
@@ -684,51 +626,16 @@ object TextOps {
     *
     * Output: (doc_id, w, skey) ascending by (skey, doc_id).
     */
-  /** The priority-sampling sort key, shared by the batch and streaming
-    * samplers so their chosen sets are identical on identical input:
-    * (30 salted hash bits of the id) · 10⁹ DIV w, exact integers only.
-    */
-  private[analytics] def prioritySkey(idCol: String, wCol: String,
-      salt: String): org.apache.spark.sql.Column =
-    expr(s"((${h60(s"concat('$salt', cast($idCol as string))")} & 1073741823)" +
-      s" * 1000000000) DIV $wCol")
-
   def weightedSample(docs: org.apache.spark.sql.DataFrame, k: Int,
       weight: org.apache.spark.sql.Column, idCol: String = "doc_id",
       salt: String = "wsample"): org.apache.spark.sql.DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     docs.select(col(idCol).as("doc_id"), weight.cast("long").as("w"))
       .filter(col("w") >= 1)
-      .withColumn("skey", prioritySkey("doc_id", "w", salt))
+      .withColumn("skey", expr(s"((${h60(s"concat('$salt', cast(doc_id as string))")}" +
+        " & 1073741823) * 1000000000) DIV w"))
       .orderBy(col("skey"), col("doc_id")).limit(k)
       .select(col("doc_id"), col("w"), col("skey"))
-  }
-
-  /** Streaming per-stratum weighted reservoir — the incremental twin of
-    * [[weightedSample]]: each stratum keeps the k smallest priority keys
-    * across micro-batches in `transformWithState` ListState (O(k) state
-    * per stratum, uniform stratum keys). Because the priority key is the
-    * same deterministic [[prioritySkey]], the maintained reservoir is
-    * IDENTICAL to running the batch sampler over everything seen so far —
-    * pinned by StreamingExtrasSpec. Re-deliveries (at-least-once sources)
-    * dedupe inside the merge. Emits the full post-batch reservoir
-    * snapshot per stratum: (stratum, doc_id, w, skey).
-    */
-  def weightedReservoirStream(docs: org.apache.spark.sql.DataFrame, k: Int,
-      stratumCol: String = "stratum", idCol: String = "doc_id",
-      wCol: String = "w", salt: String = "wsample"): org.apache.spark.sql.DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    import docs.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    docs.select(col(stratumCol).cast("string").as("stratum"),
-        col(idCol).cast("long").as("doc_id"), col(wCol).cast("long").as("w"))
-      .filter(col("w") >= 1)
-      .withColumn("skey", prioritySkey("doc_id", "w", salt))
-      .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.WeightedReservoirProcessor(k),
-        TimeMode.None(), OutputMode.Append())
-      .toDF("stratum", "doc_id", "w", "skey")
   }
 
   private val WeightedK = 50

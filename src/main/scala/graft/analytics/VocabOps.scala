@@ -130,102 +130,6 @@ object VocabOps {
       .limit(topK)
   }
 
-  // ------------------------- streaming BM25 index maintenance (r13)
-  /** Incremental inverted-index + corpus-stats upkeep under continuous
-    * document ingest — the streaming twin of [[bm25Rank]]'s index side
-    * (per-term postings, df, dl, n_docs, sum_dl), on
-    * [[graft.streaming.Bm25PostingsProcessor]].
-    *
-    * Routing is map-only (no streaming aggregation): each doc emits one
-    * posting row per QUERY term it contains — tf computed in-row as
-    * `size(filter(toks, x -> x = term))` over the small literal term
-    * set — plus one stats row to shard `hash(doc_id) % shards`, so the
-    * global (n_docs, sum_dl) never rides a single hot key.
-    *
-    * Output change-log (append): (key, doc_id, tf, dl) — term keys
-    * (`t:<term>`) upsert postings (immutable per doc; keep any), shard
-    * keys (`s:<n>`) re-emit that shard's running (n_docs, sum_dl) as
-    * (key, -1, n, s) (keep the LATEST per shard, then SUM the shards).
-    * Feed the latest state into [[bm25RankFromPostings]] for a ranking
-    * that equals the batch [[bm25Rank]] bit for bit (pinned in
-    * StreamingExtrasSpec with a 10⁶-posting soak).
-    *
-    * TTL caveat (r13 ADVICE, mirroring [[SimilarityOps.graphAnnStream]]):
-    * with a non-NONE TTL the `seenDocs` replay guard and the
-    * `corpusStats` counters expire INDEPENDENTLY — an at-least-once
-    * redelivery after a seen-entry expires re-increments n_docs/sum_dl
-    * while the stats value persists, silently drifting the corpus stats
-    * (and an expired posting re-emits). A non-NONE `stateTtl` therefore
-    * throws unless `allowIncoherentTtl = true` opts into the documented
-    * drift (acceptable when ingest is exactly-once upstream or stats
-    * are periodically rebuilt from a batch scan).
-    */
-  def bm25Stream(docs: DataFrame, terms: Seq[String],
-      idCol: String = "doc_id", textCol: String = "text", shards: Int = 64,
-      stateTtl: org.apache.spark.sql.streaming.TTLConfig =
-        org.apache.spark.sql.streaming.TTLConfig.NONE,
-      allowIncoherentTtl: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
-    require(stateTtl == TTLConfig.NONE || allowIncoherentTtl,
-      "bm25Stream: TTL expires the seenDocs replay guard and the " +
-        "corpusStats counters independently — redelivery after a " +
-        "seen-entry expires double-counts n_docs/sum_dl. Pass " +
-        "allowIncoherentTtl = true to accept the drift, or keep " +
-        "TTLConfig.NONE and expire via periodic batch rebuilds")
-    require(terms.nonEmpty, "bm25Stream needs at least one query term")
-    require(terms.forall(t => t.nonEmpty && t.forall(c => c >= 'a' && c <= 'z')),
-      s"query terms must be [a-z]+ (the tokenizer's alphabet): $terms")
-    require(shards >= 1, s"shards must be >= 1, got $shards")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val toks = norm(docs, idCol, textCol)
-      .filter(col("doc_id").isNotNull)
-      .select(col("doc_id").cast("long").as("doc_id"),
-        expr(toksExpr).as("toks"))
-      .withColumn("dl", size(col("toks")).cast("long"))
-    val perTerm = terms.map(t =>
-      struct(lit(t).as("token"),
-        expr(s"cast(size(filter(toks, x -> x = '$t')) as bigint)").as("tf")))
-    val posts = toks
-      .select(col("doc_id"), col("dl"), explode(array(perTerm: _*)).as("p"))
-      .filter(col("p.tf") > 0)
-      .select(concat(lit("t:"), col("p.token")).as("k"), col("doc_id"),
-        col("p.tf").as("a"), col("dl").as("b"))
-    val statsRows = toks.select(
-      concat(lit("s:"), pmod(xxhash64(col("doc_id")), lit(shards.toLong))
-        .cast("string")).as("k"),
-      col("doc_id"), lit(0L).as("a"), col("dl").as("b"))
-    posts.unionByName(statsRows)
-      .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new graft.streaming.Bm25PostingsProcessor(stateTtl),
-        graft.streaming.KeyedFold.timeMode(stateTtl), OutputMode.Append())
-      .toDF("key", "doc_id", "tf", "dl")
-  }
-
-  /** Rank documents from a MAINTAINED index — the read side of
-    * [[bm25Stream]]: `postings` is the latest (token, doc_id, tf, dl)
-    * state, `stats` one row (n_docs, sum_dl) (sum the shard rows).
-    * Reuses the batch scorer's exact float expression tree and
-    * sorted-token fold, so the result is bit-identical to [[bm25Rank]]
-    * over the same corpus. Output: (doc_id, n_terms, score) top `topK`.
-    */
-  def bm25RankFromPostings(postings: DataFrame, stats: DataFrame,
-      k1: Double = 1.2, b: Double = 0.75, topK: Int = 10): DataFrame = {
-    val dfreq = postings.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    postings.join(broadcast(dfreq), "token")
-      .crossJoin(broadcast(stats))
-      .withColumn("ts", expr(bm25TermExpr(k1, b)))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-        sort_array(collect_list(struct(col("token"), col("ts")))).as("xs"))
-      .withColumn("score",
-        expr("aggregate(xs, cast(0 as double), (acc, x) -> acc + x.ts)"))
-      .select(col("doc_id"), col("n_terms"), col("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(topK)
-  }
-
   // Declared before prfSql interpolates it (object init order).
   private val Bm25Terms = Seq("spark", "query", "dup")
 

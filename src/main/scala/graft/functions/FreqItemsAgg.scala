@@ -100,10 +100,8 @@ case class FreqItemsMG(
     copy(child = c)
 }
 
-/** The Misra–Gries core shared by the batch aggregate ([[FreqItemsMG]])
-  * and the streaming state twin (`graft.streaming.FreqItemsProcessor`):
-  * one update rule, one merge rule, one wire format — so the streaming
-  * per-key state IS a batch-compatible summary with the same
+/** The Misra–Gries core of the batch aggregate ([[FreqItemsMG]]): one
+  * update rule, one merge rule, one wire format, with the
   * est ≤ true / deficit ≤ N/(k+1) contract.
   */
 object MGSummary {

@@ -66,7 +66,9 @@ object StateflowPipeline {
     * Per-key FIFO: the groupByKey shuffle loses arrival order, so rows
     * carry an ingress sequence (Kafka (partition,offset) analogue) and
     * are re-sorted inside the group — Flink's keyed-order guarantee (the
-    * reference relies on it for read-modify-write state).
+    * reference relies on it for read-modify-write state). Per key and
+    * micro-batch the state is read once, threaded through the sorted
+    * invokes and written once.
     *
     * Routes answered before the keyed operator (egress-routed at ingress
     * or by a failed create) pass through as they are: only INTERNAL rows
@@ -74,24 +76,30 @@ object StateflowPipeline {
     */
   final class StatefulInvokeProcessor(executor: FunctionExecutor,
       stateTtl: TTLConfig = TTLConfig.NONE)
-      extends KeyedFold[String, Sequenced, Array[Byte], Array[Byte], WireRoute](
-        "operatorState", Encoders.BINARY, Ordering.by(_.seq), stateTtl) {
+      extends StatefulProcessor[String, Sequenced, WireRoute] {
 
-    protected def load(stored: Option[Array[Byte]]): Array[Byte] =
-      stored.getOrElse(Array.emptyByteArray)
-    protected def store(acc: Array[Byte]): Array[Byte] = acc
+    @transient private var state: ValueState[Array[Byte]] = _
 
-    protected def step(key: String, acc: Array[Byte], row: Sequenced,
-        emit: WireRoute => Unit): Array[Byte] = {
-      val reply = executor.invoke(
-        EventRequestReply(ProtoCodec.decodeEvent(row.event), acc, row.routeName))
-      emit(egress(reply.event))
-      reply.state
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[Array[Byte]]("operatorState", Encoders.BINARY, stateTtl)
+
+    override def handleInputRows(key: String, rows: Iterator[Sequenced],
+        timerValues: TimerValues): Iterator[WireRoute] = {
+      val (invokes, answered) = rows.toVector.partition(_.direction == RouteDirection.INTERNAL)
+      val passed = answered.map(r => WireRoute(r.direction, r.routeName, r.key, r.event))
+      if (invokes.isEmpty) passed.iterator
+      else {
+        var blob = if (state.exists()) state.get() else Array.emptyByteArray
+        val replies = invokes.sortBy(_.seq).map { r =>
+          val reply = executor.invoke(
+            EventRequestReply(ProtoCodec.decodeEvent(r.event), blob, r.routeName))
+          blob = reply.state
+          egress(reply.event)
+        }
+        state.update(blob)
+        (passed ++ replies).iterator
+      }
     }
-
-    override protected def passThrough(row: Sequenced): Option[WireRoute] =
-      Option.when(row.direction != RouteDirection.INTERNAL)(
-        WireRoute(row.direction, row.routeName, row.key, row.event))
   }
 
   /** `route` as a plan row. */
@@ -233,8 +241,12 @@ object StateflowPipeline {
       // per operator name): two operators invoked with the same entity key
       // must not share a state blob. routeName is "ns/name" (no NUL),
       // so the composite is collision-free.
-      .transform(new StatefulInvokeProcessor(executor, config.stateTtl)
-        .byKey(r => r.routeName + "\u0000" + r.key))
+      .groupByKey(r => r.routeName + "\u0000" + r.key)
+      // a TTL'd state expires on processing time; without a TTL the
+      // operator is time-agnostic
+      .transformWithState(new StatefulInvokeProcessor(executor, config.stateTtl),
+        if (config.stateTtl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime(),
+        OutputMode.Append())
   }
 
   /** Start the job: the topology over `events` with keyed state on the
