@@ -23,12 +23,8 @@ object LocalSession {
     * fall off whole-stage codegen at the default maxFields=100. `conf`
     * entries are set last.
     *
-    * SPARK_GRAFT_TMPFS=1 points spark.local.dir at tmpfs, so shuffle
-    * spill and evicted memo blocks (see SPARK_GRAFT_MEMO_SER in Memo)
-    * never touch this box's virtual disk, whose writeback variance
-    * (18–80 s on a 1.5 GB materialization, pure iowait) is the sf10
-    * measurement noise floor. Off by default: the committed bench
-    * artifact's calibration is the plain profile.
+    * Spark's own SPARK_LOCAL_DIRS places shuffle spill and evicted memo
+    * blocks (on tmpfs, for example: see SPARK_GRAFT_MEMO_SER in Memo).
     *
     * spark.sql.join.preferSortMergeJoin=false was A/B-tested in Bench
     * (r15) and rejected: at sf0.1 every sampled static plan stayed
@@ -42,16 +38,9 @@ object LocalSession {
       if (!graftSql) Nil
       else Seq("spark.sql.codegen.maxFields" -> "200",
         "spark.sql.extensions" -> "graft.functions.GraftExtensions")
-    val localDir =
-      if (!sys.env.get("SPARK_GRAFT_TMPFS").contains("1")) Nil
-      else {
-        val d = "/dev/shm/graft-spark-local"
-        new java.io.File(d).mkdirs()
-        Seq("spark.local.dir" -> d)
-      }
     val spark = (Seq("spark.sql.shuffle.partitions" -> cpus,
         "spark.sql.session.timeZone" -> "UTC",
-        "spark.ui.enabled" -> "false") ++ localDir ++ sql ++ conf)
+        "spark.ui.enabled" -> "false") ++ sql ++ conf)
       .foldLeft(SparkSession.builder().master(s"local[$cpus]")) {
         case (b, (k, v)) => b.config(k, v)
       }

@@ -210,63 +210,9 @@ object CurationOps {
           col("n_stopwords") >= minStopwords).as("kept"))
   }
 
-  /** The full Dolma/C4-style curation recipe as ONE composed call — the
-    * user-story entry point proving the tier composes: PII redaction →
-    * within-doc line dedup → C4 line filtering → Unicode/case/whitespace
-    * normalization → corpus-wide exact dedup → quality scoring, with a
-    * final keep decision. Every stage is the already-oracle-checked
-    * operator; this function only wires columns (OpsApiSpec pins the
-    * end-to-end behavior).
-    *
-    * Scale: stages 1–4 are map-only; exact dedup is the single corpus
-    * shuffle (uniform md5 key); quality is map-only again. The final
-    * assembly references the cleaned-text lineage from three branches
-    * (spine, dedup, quality), and Spark does not share subplans across
-    * joins — at real scale pass `materialize` (e.g. `_.persist(...)`, or
-    * a write-read through the lake, which is how production pipelines
-    * stage between the map tier and the shuffle tier) so the regex-heavy
-    * map tier executes once instead of once per branch. The default
-    * identity keeps the plan dependency-free for the optimizer and is
-    * right for one-pass sizes.
-    * Output: (doc_id, clean_text, n_pii, is_dup, quality, kept).
-    */
-  def curationPipeline(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", minQuality: Double = 0.0,
-      lineSep: String = "\n",
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
-    val pii = materialize(piiRedact(docs, idCol, textCol)
-      .select(col("doc_id"),
-        (col("n_emails") + col("n_ips") + col("n_phones")).as("n_pii"),
-        col("redacted_text")))
-    val ld = TextOps.lineDedup(pii, idCol = "doc_id",
-        textCol = "redacted_text", lineSep = lineSep)
-      .select(col("doc_id"), col("clean_text").as("deduped_text"))
-    val c4 = c4LineFilter(ld, idCol = "doc_id", textCol = "deduped_text",
-        lineSep = lineSep)
-      .select(col("doc_id"), col("clean_text").as("filtered_text"))
-    val nt = materialize(MixOps.normalizeText(c4, idCol = "doc_id",
-        textCol = "filtered_text")
-      .select(col("doc_id"), col("norm_text")))
-    val ed = DedupOps.exactDedup(nt, idCol = "doc_id", textCol = "norm_text")
-      .select(col("doc_id"), col("is_dup"))
-    // quality is undefined (NULL) for docs cleaned down to nothing — they
-    // are dropped by the kept predicate anyway, and scoring them would
-    // divide by a zero token count under ANSI mode
-    val qs = TextOps.qualityScore(nt.filter(col("norm_text") =!= ""),
-        idCol = "doc_id", textCol = "norm_text")
-      .select(col("doc_id"), col("quality"))
-    nt.join(pii.select(col("doc_id"), col("n_pii")), "doc_id")
-      .join(ed, "doc_id")
-      .join(qs, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("norm_text").as("clean_text"), col("n_pii"),
-        col("is_dup"), col("quality"),
-        (!col("is_dup") && col("norm_text") =!= "" &&
-          col("quality") >= minQuality).as("kept"))
-  }
-
   /** The WEB-crawl curation recipe as one composed call — the CCNet /
-    * RefinedWeb front half that precedes [[curationPipeline]]'s text
-    * half: URL-level dedup first (cheapest key, kills whole fetches
+    * RefinedWeb front half that precedes the text-cleaning half:
+    * URL-level dedup first (cheapest key, kills whole fetches
     * before any text work), then the Gopher document scorecard, then
     * exact content dedup of what survives. Every stage is the
     * already-oracle-checked operator; this wires columns and the

@@ -250,7 +250,7 @@ object DedupOps {
     * doc, majority vote in the native SimHash60 expression (codegen'd
     * tight loop; the pure array-lambda form recomputed the hash array per
     * bit — 60×). Shared scan of [[simhashPairs]] and
-    * [[simhashClusterEdges]] (memoized per sf at the binding layer).
+    * [[clusterEdgesFromSigs]] (memoized per sf at the binding layer).
     */
   private[analytics] def simhashSigsOf(docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
@@ -379,15 +379,9 @@ object DedupOps {
     * known, but membership edges are hamming-0 by construction and the
     * point is clusters): (d1 < d2). Feed to [[nearDupClusters]] /
     * [[ccStars]]; use [[simhashPairs]] when the pair LIST is the answer.
-    */
-  def simhashClusterEdges(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", maxHamming: Int = 6,
-      blockT: Int = 8192): DataFrame =
-    clusterEdgesFromSigs(simhashSigsOf(docs, idCol, textCol), maxHamming,
-      blockT)._1
-
-  /** [[simhashClusterEdges]] over a prepared (doc_id, simhash) frame,
-    * returning the edge frame plus the skipped-checks accumulator:
+    *
+    * Takes a prepared (doc_id, simhash) frame ([[simhashSigsOf]]) and
+    * returns the edge frame plus the skipped-checks accumulator:
     * candidate pairs whose hamming check the FOREST phase elided because
     * both ends were already connected (≈ count, accumulators can
     * over-count on task retries). It bounds only the forest phase's
@@ -402,7 +396,6 @@ object DedupOps {
     require(maxHamming >= 1 && maxHamming < 60)
     require(blockT >= 2, s"blockT must be >= 2, got $blockT")
     val spark = rawSigs.sparkSession
-    import spark.implicits._
     val skipped = spark.sparkContext.longAccumulator("simhashClusterEdges.skippedChecks")
     // one exchange on simhash feeds both the rep aggregation and the
     // membership join (hot identical-sig keys are map-side combined by
@@ -594,31 +587,15 @@ object DedupOps {
       .select(col("h").as("span_hash"), col("n_docs"), col("n_occ"))
       .orderBy(col("span_hash"))
 
-  /** Drop near-duplicates given a pair list (d1 < d2, as produced by
-    * [[ngramJaccard]] / [[simhashPairs]] / [[minhashLsh]] /
-    * [[embeddingNearDup]]): keeps the LOWER id of each pair (the same
-    * canonical-minimum convention as [[exactDedup]]). GREEDY, not a
-    * transitive closure: in a chain a–b, b–c, both b and c are dropped
-    * even if a–c alone wouldn't pair — the standard fast policy for
-    * near-dup pruning (full clustering needs iterative connected
-    * components, which Spark expresses via GraphX/iteration, out of scope
-    * for a single pass). One broadcast-able anti-join when the pair list
-    * is small; a shuffle anti-join otherwise.
-    */
-  def dropNearDups(docs: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
-    docs.join(pairs.select(col("d2").as("__drop")),
-      col(idCol) === col("__drop"), "left_anti")
-
   /** Transitive near-dup clustering: connected components over a pair
     * list via min-label propagation TO FIXPOINT — each doc ends up labeled
-    * with the smallest doc id reachable through any chain of pairs (the
-    * full version of [[dropNearDups]]'s greedy policy). Each iteration is
-    * one neighbor-min join + groupBy, one pointer-jump (label-of-label)
-    * join, and a count action for convergence detection; the pointer jump
-    * shortcuts labels exponentially, so iterations needed are
-    * O(log diameter), not O(diameter) (a 2000-hop chain converges in ~13
-    * rounds — OpsApiSpec pins a 200-hop chain). Lineage is cut with a
+    * with the smallest doc id reachable through any chain of pairs. Each
+    * iteration is one neighbor-min join + groupBy, one pointer-jump
+    * (label-of-label) join, and a count action for convergence
+    * detection; the pointer jump shortcuts labels exponentially, so
+    * iterations needed are O(log diameter), not O(diameter) (a 2000-hop
+    * chain converges in ~13 rounds — OpsApiSpec pins a 200-hop chain).
+    * Lineage is cut with a
     * localCheckpoint each round so the plan stays flat.
     */
   def nearDupClusters(pairs: DataFrame, maxIter: Int = 100,
@@ -864,12 +841,8 @@ object DedupOps {
     WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
     ORDER BY d1, d2"""))
 
-  // Shared Spark/DuckDB expression twins for cosine math (sequential
-  // left-folds over index order in BOTH engines → bit-identical doubles).
-  private[analytics] val dotFold =
-    "aggregate(zip_with(va, vb, (x, y) -> x * y), cast(0 as double), (acc, v) -> acc + v)"
-  private[analytics] def normFold(v: String): String =
-    s"aggregate($v, cast(0 as double), (acc, x) -> acc + x * x)"
+  // Shared DuckDB cosine math (sequential left-folds over index order,
+  // the order Spark's `aggregate` folds in → bit-identical doubles).
   private[analytics] val dotFoldSql =
     "list_reduce(list_transform(generate_series(1, 64), i -> va[i] * vb[i]), (a, b) -> a + b)"
   private[analytics] def normFoldSql(v: String): String =
@@ -921,7 +894,7 @@ object DedupOps {
   // clusters-only edge budget (r14): linear edge set, closure identical
   // to the full pair list's — with the loud flag when pair rows were
   // actually elided (the collision-dense regime the budget exists for)
-  private def clusterEdgesMemo(s: org.apache.spark.sql.SparkSession,
+  private[analytics] def clusterEdgesMemo(s: org.apache.spark.sql.SparkSession,
       dir: String) = {
     var acc: Option[org.apache.spark.util.LongAccumulator] = None
     val edges = Memo.cached(s, s"simhashClusterEdges:$dir") {

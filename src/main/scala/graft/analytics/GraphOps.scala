@@ -92,7 +92,7 @@ object GraphOps {
   // Memoized per (session, dir): all seven qg_* bindings start from this
   // frame, and the orders⋈lineitem distinct is the expensive common
   // prefix — materialize it once (Memo) instead of once per binding.
-  private def tradeEdges(s: org.apache.spark.sql.SparkSession, dir: String) =
+  private[analytics] def tradeEdges(s: org.apache.spark.sql.SparkSession, dir: String) =
     Memo.cached(s, s"tradeEdges:$dir") {
       val e0 = Tables.orders(s, dir)
         .join(Tables.lineitem(s, dir),
@@ -1189,27 +1189,9 @@ object GraphOps {
     Some(walkSql))
 
   // ------------------------------------- harmonic centrality (sampled)
-  /** Harmonic centrality from a SAMPLED source set (Boldi & Vigna 2014,
-    * the centrality that stays well-defined on disconnected graphs):
-    * H(v) = Σ_s 1/d(s, v) over sources s ≠ v that reach v, here in exact
-    * micro-floors ⌊10⁶/d⌋. Exact closeness/harmonic needs all-pairs BFS;
-    * the standard scale treatment fixes a deterministic landmark sample
-    * S and sums over it — error bounds are Hoeffding-style in |S|, and
-    * the work is |S| simultaneous BFS frontiers, NOT all-pairs.
-    *
-    * The per-source labels ride the [[reachability]] loop with a
-    * composite (root, node) key: per hop one frontier⋈edges hash join +
-    * distinct + anti-join against visited, frontier checkpointed, visited
-    * a union of materialized frontiers. Frontier size is bounded by
-    * |S|·|nodes| in the worst case and in practice by |S|·(hop
-    * neighborhood); everything is equi-keyed on node ids.
-    *
-    * Output: (node, h_micro, n_reached) for the `topK` most central
-    * nodes, h desc / node asc.
-    */
   /** Per-(landmark, node) BFS hop distances AND shortest-path counts —
-    * the shared substrate of [[harmonicCentrality]], the eccentricity
-    * readout, and [[boundedBetweenness]]'s forward phase (one traversal
+    * the shared substrate of qg_harmonic, the eccentricity readout,
+    * and qg_betweenness's forward phase (one traversal
     * serves all three; the binding memoizes it). Same loop as
     * [[reachability]] with a composite (root, node) key; σ(root, v) =
     * Σ σ of the level-(h−1) predecessors (Brandes' forward counting).
@@ -1252,15 +1234,6 @@ object GraphOps {
     out
   }
 
-  def harmonicCentrality(edgesIn: DataFrame, seeds: DataFrame,
-      maxHops: Int = 4, srcCol: String = "src", dstCol: String = "dst",
-      seedCol: String = "node"): DataFrame =
-    landmarkDistances(edgesIn, seeds, maxHops, srcCol, dstCol, seedCol)
-      .groupBy(col("node"))
-      .agg(sum(when(col("d") > 0, expr("1000000L div d")).otherwise(0L))
-          .as("h_micro"),
-        sum(when(col("d") > 0, 1L).otherwise(0L)).as("n_reached"))
-
   private val HarmHops = 4
   private val HarmTopK = 100
 
@@ -1302,6 +1275,24 @@ object GraphOps {
   def warmLandmarkBfs(s: org.apache.spark.sql.SparkSession,
       dir: String): Unit = landmarkBfs(s, dir).count(): Unit
 
+  /** Harmonic centrality from a SAMPLED source set (Boldi & Vigna 2014,
+    * the centrality that stays well-defined on disconnected graphs):
+    * H(v) = Σ_s 1/d(s, v) over sources s ≠ v that reach v, here in exact
+    * micro-floors ⌊10⁶/d⌋. Exact closeness/harmonic needs all-pairs BFS;
+    * the standard scale treatment fixes a deterministic landmark sample
+    * S and sums over it — error bounds are Hoeffding-style in |S|, and
+    * the work is |S| simultaneous BFS frontiers, NOT all-pairs.
+    *
+    * The per-source labels ride the [[reachability]] loop with a
+    * composite (root, node) key: per hop one frontier⋈edges hash join +
+    * distinct + anti-join against visited, frontier checkpointed, visited
+    * a union of materialized frontiers. Frontier size is bounded by
+    * |S|·|nodes| in the worst case and in practice by |S|·(hop
+    * neighborhood); everything is equi-keyed on node ids.
+    *
+    * Output: (node, h_micro, n_reached) for the HarmTopK most central
+    * nodes, h desc / node asc.
+    */
   private val qHarmonic = GraftQuery(
     "qg_harmonic",
     (s, dir) => landmarkBfs(s, dir)
@@ -1351,6 +1342,24 @@ object GraphOps {
     FROM ecc ORDER BY root"""))
 
   // --------------------------- bounded betweenness (sampled Brandes)
+  /** The per-root shortest-path DAG (root, v → w with d_w = d_v + 1,
+    * both σ's attached) — the frame the backward sweep iterates; built
+    * once and checkpointed (the binding memoizes it per session). Each
+    * backward round joins only its level's slice of this frame against
+    * the level-below δ, so per-round cost is DAG-slice-sized rather than
+    * edges-sized (the per-level edge joins took 8.4 s before the DAG).
+    */
+  def pathDag(bfs: DataFrame, edges: DataFrame): DataFrame = bfs
+    .select(col("root"), col("node").as("v"), col("d").as("dv"),
+      col("sigma").as("sv"))
+    .join(edges, edges("src") === col("v"))
+    .select(col("root"), col("v"), col("dv"), col("sv"), col("dst").as("w"))
+    .join(bfs.select(col("root"), col("node").as("w"), col("d").as("dw"),
+      col("sigma").as("sw")), Seq("root", "w"))
+    .filter(col("dw") === col("dv") + 1)
+    .select(col("root"), col("v"), col("dv"), col("sv"), col("w"), col("sw"))
+    .localCheckpoint()
+
   /** Bounded-distance betweenness centrality from a landmark sample —
     * Brandes' dependency accumulation (2001) restricted to shortest
     * paths from |S| deterministic sources within `maxHops` (Borgatti's
@@ -1375,51 +1384,12 @@ object GraphOps {
     * O(|S|·reached), all equi-keyed — the MapReduce-standard exact
     * algorithm, never an all-pairs or per-path materialization.
     *
-    * Output: (node, bc_micro) for the topK most-between nodes,
-    * bc desc / node asc.
+    * The forward phase is [[landmarkDistances]], memoized per sf and
+    * shared with qg_harmonic/qg_ecc; [[pathDag]] turns it into the
+    * shortest-path DAG, and this runs the backward sweep over it.
+    * Output: (node, bc_micro) for every reached node; the
+    * binding keeps the BcTopK most-between, bc desc / node asc.
     */
-  def boundedBetweenness(edgesIn: DataFrame, seeds: DataFrame,
-      maxHops: Int = 4, srcCol: String = "src", dstCol: String = "dst",
-      seedCol: String = "node"): DataFrame = {
-    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val edges = edgesIn.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().localCheckpoint()
-    betweennessFromBfs(
-      landmarkDistances(edgesIn, seeds, maxHops, srcCol, dstCol, seedCol),
-      edges, maxHops)
-  }
-
-  /** Backward (dependency-accumulation) phase over an already-built
-    * [[landmarkDistances]] frame — lets the binding reuse the memoized
-    * BFS shared with qg_harmonic/qg_ecc. `edges` must carry (src, dst).
-    *
-    * The shortest-path DAG edges (root, v→w with d_w = d_v+1, both σ's
-    * attached) are materialized ONCE up front; each backward round then
-    * joins only its level's slice of that frame against the level-below
-    * δ — per-round cost drops from an edges-sized join to a
-    * DAG-slice-sized one (the first bench run showed the per-level edge
-    * joins dominating: 8.4 s → the DAG build + three small joins).
-    */
-  def betweennessFromBfs(bfs: DataFrame, edges: DataFrame,
-      maxHops: Int): DataFrame =
-    betweennessFromDag(pathDag(bfs, edges), bfs, maxHops)
-
-  /** The per-root shortest-path DAG (root, v → w with d_w = d_v + 1,
-    * both σ's attached) — the frame the backward sweep iterates; built
-    * once and checkpointed (the binding memoizes it per session).
-    */
-  def pathDag(bfs: DataFrame, edges: DataFrame): DataFrame = bfs
-    .select(col("root"), col("node").as("v"), col("d").as("dv"),
-      col("sigma").as("sv"))
-    .join(edges, edges("src") === col("v"))
-    .select(col("root"), col("v"), col("dv"), col("sv"), col("dst").as("w"))
-    .join(bfs.select(col("root"), col("node").as("w"), col("d").as("dw"),
-      col("sigma").as("sw")), Seq("root", "w"))
-    .filter(col("dw") === col("dv") + 1)
-    .select(col("root"), col("v"), col("dv"), col("sv"), col("w"), col("sw"))
-    .localCheckpoint()
-
-  /** Backward sweep over a prebuilt [[pathDag]]. */
   def betweennessFromDag(dag: DataFrame, bfs: DataFrame,
       maxHops: Int): DataFrame = {
     // δ recurrence over the DAG ONLY (r8 rework): both σ's ride each DAG
@@ -2082,7 +2052,7 @@ object GraphOps {
     * keyed on the ORDER id, so fan-out is bounded by per-order line
     * count — never a supplier-pair scan.
     */
-  private def dominanceEdges(s: org.apache.spark.sql.SparkSession,
+  private[analytics] def dominanceEdges(s: org.apache.spark.sql.SparkSession,
       dir: String) = {
     val ol = Tables.lineitem(s, dir)
       .groupBy(col("l_orderkey").as("ok"), col("l_suppkey").as("sp"))
@@ -2287,20 +2257,11 @@ object GraphOps {
 
   def minimumSpanningForest(edgesIn: DataFrame, maxRounds: Int = 24,
       localBudget: Long = MstLocalSolveEdgeBudget): DataFrame = {
-    val dbg = sys.env.contains("GRAFT_MST_DEBUG")
-    var t0 = System.nanoTime()
-    def mark(tag: String): Unit = if (dbg) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[mst] $tag%-22s ${(t1 - t0) / 1e9}%.2fs")
-      t0 = t1
-    }
     val e = ekeyedEdges(edgesIn, "minimumSpanningForest")
-    mark("ekeyedEdges")
     val spark = e.sparkSession
     val nodes = e.select(col("a").as("node"))
       .unionByName(e.select(col("b").as("node"))).distinct().localCheckpoint()
     var comp = nodes.withColumn("c", col("node"))
-    mark("nodes+comp init")
     val allPicks = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // the loop iterates on the CONTRACTED graph g (lo < hi component
     // pair, min ekey) — the node-level edge list is read exactly once
@@ -2314,7 +2275,6 @@ object GraphOps {
       if (r >= maxRounds) throw new IllegalStateException(
         s"minimumSpanningForest: did not converge in $maxRounds rounds")
       val m = g.count()
-      mark(s"round $r count m=$m")
       if (m == 0L) done = true
       else if (m <= localBudget) {
         // local Kruskal tail (see scaladoc): ascending-ekey pass with a
@@ -2342,7 +2302,6 @@ object GraphOps {
         val lbl = broadcast(spark.createDataFrame(merged).toDF("oc", "nc"))
         comp = comp.join(lbl, comp("c") === col("oc"), "left")
           .select(col("node"), coalesce(col("nc"), col("c")).as("c"))
-        mark(s"round $r local solve")
         done = true
       } else {
         // distributed round: each component's min cross edge, read off
@@ -2356,10 +2315,8 @@ object GraphOps {
             .agg(min(struct(col("ekey"), col("oc"))).as("m"))
             .select(col("cc"), col("m.ekey").as("ekey"),
               col("m.oc").as("partner")), 8)
-        mark(s"round $r picks")
         allPicks += picks.select(col("ekey"))
         val lbl = resolvePickForest(picks, picks.count(), localBudget)
-        mark(s"round $r resolve")
         comp = Scans.rebaseSwap(
           comp.join(lbl, comp("c") === col("oc"), "left")
             .select(col("node"), coalesce(col("nc"), col("c")).as("c")),
@@ -2379,7 +2336,6 @@ object GraphOps {
               greatest(col("clo"), col("chi")).as("hi"))
             .agg(min(col("ekey")).as("ekey")),
           g, 8)
-        mark(s"round $r recontract")
         r += 1
       }
     }
@@ -2397,9 +2353,7 @@ object GraphOps {
       else chosen.agg(count(lit(1)).as("mst_edges"),
         sum(col("w")).cast("bigint").as("total_w"),
         max(col("w")).cast("bigint").as("max_w"))
-    val out = nN.crossJoin(broadcast(nC)).crossJoin(broadcast(ch))
-    if (dbg) { out.collect(); mark("epilogue") }
-    out
+    nN.crossJoin(broadcast(nC)).crossJoin(broadcast(ch))
   }
 
   // Oracle: Borůvka unrolled to a fixed round count (idempotent once

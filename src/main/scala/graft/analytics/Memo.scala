@@ -52,8 +52,8 @@ object Memo {
     * cheap next to virtual-disk writeback, but nonzero, which is why
     * it is a profile (rehearsal/sf10 runs) and not the default (bench
     * at sf0.1, where every memo fits in memory deserialized anyway).
-    * Pair with SPARK_GRAFT_TMPFS=1 (Bench) to take shuffle spill off
-    * the virtual disk too.
+    * Pair with SPARK_LOCAL_DIRS on tmpfs to take shuffle spill off the
+    * virtual disk too.
     */
   def cached(spark: SparkSession, key: String, checkpoint: Boolean = true)(
       build: => DataFrame): DataFrame =

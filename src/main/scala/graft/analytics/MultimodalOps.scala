@@ -175,7 +175,6 @@ object MultimodalOps {
   private val qBinaryMeta = GraftQuery(
     "qm_binary_metadata",
     (s, dir) => {
-      import s.implicits._
       decodeAll(binaryAssets(s, dir), new StubMediaDecoder).toDF()
         .select(col("doc_id"), col("byte_len"), col("magic"), col("kind"),
           col("checksum"), col("width"), col("height"))

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -65,30 +65,20 @@ object PairOps {
   }
 
   // ------------------------------------------------ curriculum batches
-  /** Curriculum batch assignment: order the corpus by a difficulty
-    * signal (Flesch–Kincaid grade, [[TextOps.readability]]) and cut it
-    * into `nBatches` equal-population batches — batch 0 is fed first
+  /** Curriculum batch assignment: cut a corpus ranked by a difficulty
+    * signal (Flesch–Kincaid grade, [[TextOps.readability]]) into
+    * `nBatches` equal-population batches — batch 0 is fed first
     * (easiest), batch B−1 last. The global ordering rides the existing
     * distributed percentile machinery ([[TextOps.percentileRank]] —
     * value-collapse + two-level cumsum, no global sort window), so batch
-    * = ⌊(pct_bp − 1)·B / 10⁴⌋ is a map over the ranked frame.
+    * = ⌊(pct_bp − 1)·B / 10⁴⌋ is a map over the ranked frame; the
+    * binding reuses the memoized readability percentiles the
+    * qt_readability_percentile binding builds.
     *
     * Output is the per-batch ramp card (what a training engineer checks
     * before launching): (batch, n_docs, min_fk_micro, max_fk_micro,
     * mean_fk_micro floored) ordered by batch — difficulty must ascend
     * monotonically through the batches by construction.
-    */
-  def curriculumBatches(docs: DataFrame, nBatches: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val diff = TextOps.readability(docs, idCol, textCol)
-      .select(col("doc_id"), col("fk_grade_micro"))
-    curriculumFromRanked(
-      TextOps.percentileRank(diff, "doc_id", "fk_grade_micro"), nBatches)
-  }
-
-  /** [[curriculumBatches]] from an already-ranked (value, pct_bp) frame —
-    * lets the binding reuse the memoized readability percentiles the
-    * qt_readability_percentile binding builds.
     */
   def curriculumFromRanked(ranked: DataFrame, nBatches: Int): DataFrame = {
     require(nBatches >= 2, s"nBatches must be >= 2, got $nBatches")

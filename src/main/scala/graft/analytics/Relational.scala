@@ -1,12 +1,12 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.api.GraftQuery
 import Exact._
-import OracleFragments.{d2 => od2, one => oone, discPrice => oRev, charge => oCharge, sumD => oSumD, avgD => oAvgD}
+import OracleFragments.{d2 => od2, discPrice => oRev, charge => oCharge, sumD => oSumD, avgD => oAvgD}
 
 /** TPC-H-style relational queries over the driver tables.
   *

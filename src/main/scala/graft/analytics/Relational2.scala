@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.GraftQuery
 import Exact._
-import OracleFragments.{d2 => od2, discPrice => oRev, sumD => oSumD, avgD => oAvgD}
+import OracleFragments.{d2 => od2, discPrice => oRev, sumD => oSumD}
 
 /** Second coverage batch: statistical aggregates with engine-exact math,
   * arg-min/max, string/date scalar functions, array aggregation, grouping

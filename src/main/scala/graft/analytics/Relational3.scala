@@ -421,9 +421,20 @@ object Relational3 {
     FROM m GROUP BY l_returnflag, metric ORDER BY l_returnflag, metric"""))
 
   // ------------------------------------------- market-basket co-occurrence
-  /** Top-k co-occurring items per item ("bought together"): distinct
-    * (basket, item) pairs self-joined on the basket key, pair counts, then
-    * a per-item top-k. The workhorse of co-visitation / co-purchase
+  /** (item, co_item, n_groups) co-occurrence counts, both directions, from
+    * a distinct (g, item) basket frame — the shared heart of
+    * [[coOccurrenceTopKFrom]], [[assocRules]] and the densest-subgraph
+    * binding.
+    */
+  private[analytics] def coOccurrencePairs(b: DataFrame): DataFrame =
+    b.as("a")
+      .join(b.as("b"), col("a.g") === col("b.g") && col("a.item") =!= col("b.item"))
+      .groupBy(col("a.item").as("item"), col("b.item").as("co_item"))
+      .agg(count(lit(1)).as("n_groups"))
+
+  /** Top-k co-occurring items per item ("bought together") over
+    * [[coOccurrencePairs]]: distinct (basket, item) pairs self-joined on
+    * the basket key, pair counts, then a per-item top-k. The workhorse of co-visitation / co-purchase
     * recommendation candidate generation.
     *
     * Scale shape: the self-join is keyed on the basket id and fans out
@@ -438,25 +449,7 @@ object Relational3 {
     * Output: (item, co_item, n_groups, rk) with rk ∈ [1, k], ties broken
     * by co_item for cross-engine determinism.
     */
-  def coOccurrenceTopK(rows: DataFrame, groupCol: String, itemCol: String,
-      k: Int = 3): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val b = rows.select(col(groupCol).as("g"), col(itemCol).as("item")).distinct()
-    coOccurrenceTopKFrom(coOccurrencePairs(b), k)
-  }
-
-  /** (item, co_item, n_groups) co-occurrence counts, both directions, from
-    * a distinct (g, item) basket frame — the shared heart of
-    * [[coOccurrenceTopK]], [[assocRules]] and the densest-subgraph
-    * binding.
-    */
-  private def coOccurrencePairs(b: DataFrame): DataFrame =
-    b.as("a")
-      .join(b.as("b"), col("a.g") === col("b.g") && col("a.item") =!= col("b.item"))
-      .groupBy(col("a.item").as("item"), col("b.item").as("co_item"))
-      .agg(count(lit(1)).as("n_groups"))
-
-  private def coOccurrenceTopKFrom(pairs: DataFrame, k: Int): DataFrame = {
+  private[analytics] def coOccurrenceTopKFrom(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("item"))
       .orderBy(col("n_groups").desc, col("co_item"))
     pairs.withColumn("rk", row_number().over(w))
@@ -628,7 +621,7 @@ object Relational3 {
     * baskets, bp), confidence (directional P(B|A), bp), and lift
     * (10⁶·nAB·N DIV (nA·nB) — >10⁶ means positively associated). The
     * metrics layer over the same per-basket pair fan-out as
-    * [[coOccurrenceTopK]], plus two item-key count joins and one 1-row
+    * [[coOccurrencePairs]], plus two item-key count joins and one 1-row
     * broadcast total. `minPairs` prunes the rule tail before the metric
     * joins — the standard min-support pass.
     *

@@ -119,12 +119,9 @@ object SimilarityOps {
       df.join(cells, "vec_id")
     }
 
-  private def prep(df: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String) =
+  private[analytics] def prep(df: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String) =
     df.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(graft_dot(col("v"), col("v"))))
-
-  private def vectors(s: org.apache.spark.sql.SparkSession, dir: String) =
-    prep(Tables.embeddings(s, dir), "vec_id", "embedding")
 
   private def topK(pairs: org.apache.spark.sql.DataFrame, k: Int) = {
     val w = Window.partitionBy(col("query_id"))
@@ -769,8 +766,6 @@ object SimilarityOps {
 
   /** md5-seeded PQ codebooks w(m)(c) ∈ [-1,1]^SubDim — deterministic
     * literals both engines share, same construction as [[centroids]].
-    * [[pqTrainCodebooks]] refines them per subspace with the exact
-    * quantized Lloyd loop when a data-fit codebook is wanted.
     */
   private[analytics] def pqCodebooks: Seq[Seq[Seq[Double]]] =
     (0 until SubM).map(m => (0 until PqK).map(c =>
@@ -838,28 +833,6 @@ object SimilarityOps {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("cand_id"), col("adc"))
       .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Per-subspace Lloyd training for the PQ codebooks: [[trainCentroids]]
-    * (the exact quantized-BIGINT k-means loop) run independently on each
-    * `SubDim`-dim subvector slice — the standard PQ training procedure.
-    * Corpus is scanned once per (subspace, iteration); driver traffic is
-    * PqK·SubDim doubles per round.
-    */
-  def pqTrainCodebooks(corpus: org.apache.spark.sql.DataFrame,
-      init: Seq[Seq[Seq[Double]]] = pqCodebooks, iters: Int = IvfIters,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Seq[Seq[Seq[Double]]] = {
-    require(init.nonEmpty && init.forall(_.nonEmpty), "empty PQ codebook")
-    val subDim = init.head.head.size
-    // same uniform-geometry pin as [[pqTopK]]: both compute subspace m's
-    // slice offset as m·subDim, so trained books stay aligned with scoring
-    require(init.forall(_.forall(_.size == subDim)),
-      s"PQ codebooks must share one subspace width (head = $subDim)")
-    init.indices.map { m =>
-      val sub = corpus.select(col(idCol).as("vec_id"),
-        expr(s"slice(cast($vecCol as array<double>), ${m * subDim + 1}, $subDim)").as("v"))
-      trainCentroids(sub, init(m), iters, "vec_id", "v")
-    }
   }
 
   private val pqBooksSql = pqCodebooks.map(_.map(_.mkString("[", ", ", "]"))
@@ -2123,24 +2096,11 @@ object SimilarityOps {
     * by the uniform source id. nprobe is 1 by construction (a vector's
     * own cell); boundary-crossing true neighbors are the standard recall
     * trade, tunable by raising C iterations or unioning a second probe.
-    * Output: (src, rank, nbr, cosine).
+    * Runs over a (vec_id, v, nrm, cell) assignment frame — ONE body, so
+    * the tie rule / cut / filter cannot drift from the shared
+    * `knnEdgeCtes` oracle. Output: (src, rank, nbr, cosine).
     */
-  def knnGraph(corpus: org.apache.spark.sql.DataFrame, k: Int,
-      cents: Seq[Seq[Double]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): org.apache.spark.sql.DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(cents.nonEmpty, "knnGraph requires a trained coarse quantizer " +
-      "(size it with semDedupCellCount(n), train with trainCentroids)")
-    knnEdgesFrom(withArgmaxCell(prep(corpus, idCol, vecCol), cents)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell")), k)
-  }
-
-  /** The intra-cell pair join + per-source rank cut over a (vec_id, v,
-    * nrm, cell) assignment frame — ONE body shared by the public
-    * [[knnGraph]] and [[knnEdgesMemo]] so the tie rule / cut / filter
-    * cannot drift from the shared `knnEdgeCtes` oracle.
-    */
-  private def knnEdgesFrom(assigned: org.apache.spark.sql.DataFrame,
+  private[analytics] def knnEdgesFrom(assigned: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame = {
     val lo = assigned.select(col("cell"), col("vec_id").as("src"),
       col("v").as("va"), col("nrm").as("na"))
@@ -2191,38 +2151,6 @@ object SimilarityOps {
     ORDER BY src, rank"""
 
   // -------------------- cross-cell long-range edges (HNSW navigability)
-  /** Long-range edges that make the quantizer-local kNN graph NAVIGABLE —
-    * the HNSW/DiskANN structural insight (Malkov & Yashunin 2018 §4.1):
-    * greedy/beam routing needs links that cross the coarse partition.
-    * [[knnGraph]]'s edges live strictly inside one quantizer cell, so a
-    * beam could only ever reach clusters it was seeded in; the r8–r10
-    * search compensated with a corpus-scaled entry set (one entry per 10
-    * vectors — an O(n/10) scored frontier per query). These edges fix the
-    * GRAPH instead: every vector also links to its `xK` nearest neighbors
-    * inside each of its `xCells` next-best quantizer cells (score ranks
-    * 2..xCells+1), so routing hops across cell boundaries and a small
-    * fixed entry set suffices (recall 0.45 → 0.94 at 24 entries, sf0.1).
-    *
-    * Scale shape: the (vector, secondary-cell) frame is n·xCells rows;
-    * the candidate join is blocked per cell exactly like [[knnGraph]]'s
-    * intra-cell join; the per-(src, cell) top-xK window rides the same
-    * uniform src keys. Total added edges: n·xCells·xK — the edge list
-    * stays n·const. Cell ranks come from the same dot-score vector the
-    * argmax assignment reads (literal path: an array_sort on codegen'd
-    * scores, no shuffle) or from the broadcast codebook join (large-C
-    * path, same volume [[withArgmaxCell]] already processes).
-    *
-    * Output: (src, nbr, cosine) — union with the primary edges and
-    * symmetrize before searching.
-    */
-  def crossCellEdges(corpus: org.apache.spark.sql.DataFrame,
-      cents: Seq[Seq[Double]], xCells: Int, xK: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      literalMax: Int = CentroidLiteralMax): org.apache.spark.sql.DataFrame =
-    crossEdgesFrom(assignWithSecondaries(
-      prep(corpus, idCol, vecCol), cents, xCells, literalMax), xK)
-      .select(col("src"), col("nbr"), col("cosine"))
-
   /** (vec_id, v, nrm, cell, xcells): primary cell (argmax) plus the
     * `xCells` next-best cells from ONE dot-score pass — ties break to
     * the smaller cell id, the same rule as [[withArgmaxCell]] and the
@@ -2231,7 +2159,7 @@ object SimilarityOps {
     * broadcast codebook join with a per-vector window (n·C rows — the
     * volume the assignment join already processes).
     */
-  private def assignWithSecondaries(p: org.apache.spark.sql.DataFrame,
+  private[analytics] def assignWithSecondaries(p: org.apache.spark.sql.DataFrame,
       cents: Seq[Seq[Double]], xCells: Int,
       literalMax: Int = CentroidLiteralMax): org.apache.spark.sql.DataFrame = {
     require(xCells >= 1, s"xCells must be >= 1, got $xCells")
@@ -2265,11 +2193,33 @@ object SimilarityOps {
     }
   }
 
-  /** The cross-edge join + per-(src, cell) top-xK cut over an
-    * [[assignWithSecondaries]] frame. Output keeps `cosine` for the
-    * public operator; the memo drops it.
+  /** Long-range edges that make the quantizer-local kNN graph NAVIGABLE —
+    * the HNSW/DiskANN structural insight (Malkov & Yashunin 2018 §4.1):
+    * greedy/beam routing needs links that cross the coarse partition.
+    * [[knnEdgesFrom]]'s edges live strictly inside one quantizer cell, so a
+    * beam could only ever reach clusters it was seeded in; the r8–r10
+    * search compensated with a corpus-scaled entry set (one entry per 10
+    * vectors — an O(n/10) scored frontier per query). These edges fix the
+    * GRAPH instead: every vector also links to its `xK` nearest neighbors
+    * inside each of its `xCells` next-best quantizer cells (score ranks
+    * 2..xCells+1), so routing hops across cell boundaries and a small
+    * fixed entry set suffices (recall 0.45 → 0.94 at 24 entries, sf0.1).
+    *
+    * Scale shape: the (vector, secondary-cell) frame is n·xCells rows;
+    * the candidate join is blocked per cell exactly like [[knnEdgesFrom]]'s
+    * intra-cell join; the per-(src, cell) top-xK window rides the same
+    * uniform src keys. Total added edges: n·xCells·xK — the edge list
+    * stays n·const. Cell ranks come from the same dot-score vector the
+    * argmax assignment reads (literal path: an array_sort on codegen'd
+    * scores, no shuffle) or from the broadcast codebook join (large-C
+    * path, same volume [[withArgmaxCell]] already processes).
+    *
+    * Runs over an [[assignWithSecondaries]] frame: the join + per-(src,
+    * cell) top-xK cut. Output: (src, nbr, cosine) — union with the
+    * primary edges and symmetrize before searching (the memo drops
+    * `cosine`).
     */
-  private def crossEdgesFrom(a: org.apache.spark.sql.DataFrame,
+  private[analytics] def crossEdgesFrom(a: org.apache.spark.sql.DataFrame,
       xK: Int): org.apache.spark.sql.DataFrame = {
     require(xK >= 1, s"xK must be >= 1, got $xK")
     val sec = a.select(col("vec_id").as("src"), col("v").as("va"),
@@ -2289,7 +2239,7 @@ object SimilarityOps {
     * all from a single codegen'd dot-score vector, checkpointed — the
     * "assignment stage table" both edge builds join against. Building
     * the secondary ranks here (instead of a second corpus scan inside
-    * [[crossCellEdges]]) is what keeps the navigable-graph build at
+    * [[crossEdgesFrom]]) is what keeps the navigable-graph build at
     * roughly the r10 primary-only cost.
     */
   private def annAssignedMemo(s: org.apache.spark.sql.SparkSession,
@@ -2300,8 +2250,8 @@ object SimilarityOps {
 
   /** Session-memoized kNN graph — built once, read by qs_knn_graph and
     * walked by qs_graph_ann (the same "index built once, queried many
-    * times" economics a real deployment has). Same join/window as the
-    * public [[knnGraph]], reading the shared assignment stage table.
+    * times" economics a real deployment has). [[knnEdgesFrom]] over the
+    * shared assignment stage table.
     */
   private[graft] def knnEdgesMemo(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -2309,8 +2259,8 @@ object SimilarityOps {
       knnEdgesFrom(annAssignedMemo(s, dir)
         .select(col("vec_id"), col("v"), col("nrm"), col("cell")), KnnK))
 
-  /** Session-memoized cross-cell long-range edges ([[crossCellEdges]]
-    * semantics), built from the same assignment stage table — no second
+  /** Session-memoized cross-cell long-range edges ([[crossEdgesFrom]]),
+    * built from the same assignment stage table — no second
     * corpus scan.
     */
   private[graft] def crossEdgesMemo(s: org.apache.spark.sql.SparkSession,
@@ -2355,9 +2305,9 @@ object SimilarityOps {
       entries: org.apache.spark.sql.DataFrame,
       edges: org.apache.spark.sql.DataFrame,
       beam: Int, rounds: Int,
-      entryK: Int = 0,
+      entryK: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      allBeams: Boolean = false): List[org.apache.spark.sql.DataFrame] = {
+      allBeams: Boolean): List[org.apache.spark.sql.DataFrame] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // entryK: how many scored entry points seed the beam (HNSW-style
     // descent keeps this well below the working beam width; 0 = beam)
@@ -2416,7 +2366,7 @@ object SimilarityOps {
       entryK, idCol, vecCol, allBeams = false).last, k)
   }
 
-  // r11 retune (HNSW 2-layer): with [[crossCellEdges]] making the graph
+  // r11 retune (HNSW 2-layer): with [[crossEdgesFrom]] making the graph
   // navigable, the search no longer buys recall with a huge entry set
   // and a wide beam — a small entry layer plus beam 40 reaches recall
   // 0.94 at sf0.1, vs 0.87 for the r10 setup (200 entries, beam 60, 3
@@ -2495,7 +2445,7 @@ object SimilarityOps {
           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rk
         FROM sc_$r) WHERE rk <= $GBeam)"""
     }
-    // edgh = the primary intra-cell edges + the crossCellEdges long
+    // edgh = the primary intra-cell edges + the crossEdgesFrom long
     // links (score ranks 2..GXCells+1, top GXK per (src, cell)),
     // symmetrized — the navigable graph the beam actually walks
     s"""$knnEdgeCtes,

@@ -24,29 +24,6 @@ object TextOps {
 
   // ======================= public operator API =======================
 
-  /** Whitespace-token statistics per doc: count, char mass, avg length. */
-  def tokenStats(docs: org.apache.spark.sql.DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame =
-    norm(docs, idCol, textCol)
-      .withColumn("toks", expr(toksExpr))
-      .select(
-        col("doc_id"),
-        size(col("toks")).as("n_tokens"),
-        expr("aggregate(toks, 0, (acc, x) -> acc + length(x))").as("tok_chars"),
-        (expr("cast(aggregate(toks, 0, (acc, x) -> acc + length(x)) as double)") /
-          size(col("toks"))).as("avg_tok_len"))
-
-  /** GPT-2-ish pre-tokenizer count + ceil(len/4) subword estimate. */
-  def bpeTokenEstimate(docs: org.apache.spark.sql.DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame =
-    norm(docs, idCol, textCol)
-      .withColumn("pt", expr(s"regexp_extract_all(text, '$bpePattern', 0)"))
-      .select(
-        col("doc_id"),
-        size(col("pt")).as("n_pretokens"),
-        expr("aggregate(pt, 0, (acc, t) -> acc + cast(ceil(length(t) / 4.0) as int))")
-          .as("est_bpe_tokens"))
-
   /** Stopword-vote language heuristic → pred_lang ∈ {en, data}. */
   def langId(docs: org.apache.spark.sql.DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame =
@@ -164,16 +141,6 @@ object TextOps {
     SELECT labeled, predicted, n,
       CAST(10000 * n // SUM(n) OVER (PARTITION BY labeled) AS BIGINT) AS row_share_bp
     FROM c ORDER BY labeled, predicted"""))
-
-  /** md5 + 60-bit numeric fingerprint of the normalized text. */
-  def fingerprint(docs: org.apache.spark.sql.DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame =
-    norm(docs, idCol, textCol)
-      .withColumn("nrm", trim(regexp_replace(lower(col("text")), "\\s+", " ")))
-      .select(
-        col("doc_id"),
-        md5(col("nrm").cast("binary")).as("fp_md5"),
-        expr(h60("nrm")).as("fp60"))
 
   /** Deterministic train/test split by CONTENT fingerprint, not row id:
     * identical documents always land in the same split, so exact

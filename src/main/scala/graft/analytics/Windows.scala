@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.GraftQuery
 import Exact._
-import OracleFragments.{d2 => od2, sumD => oSumD}
+import OracleFragments.{d2 => od2}
 
 /** Window-function queries (rank / running totals / lag) with DuckDB oracles.
   * All window sorts carry full tie-break key chains so row content is

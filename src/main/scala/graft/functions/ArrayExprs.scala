@@ -328,56 +328,12 @@ case class SimHash60(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Full k-permutation MinHash signature over an ARRAY<STRING> of shingles:
-  * slot i = min over shingles of h60("<i>:<shingle>"), where h60 is the
-  * md5-prefix hash (= `conv(substring(md5(s),1,15),16,10)` — first 8 digest
-  * bytes big-endian, logically right-shifted 4). One digest instance per
-  * evaluation thread; no hex-string intermediates, no interpreted lambdas.
-  */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-
-  @transient private lazy val md = java.security.MessageDigest.getInstance("MD5")
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val sig = Array.fill(k)(Long.MaxValue)
-    var j = 0
-    while (j < n) {
-      val s = arr.getUTF8String(j).getBytes
-      var i = 0
-      while (i < k) {
-        md.reset()
-        md.update(java.lang.Integer.toString(i).getBytes("UTF-8"))
-        md.update(':'.toByte)
-        md.update(s)
-        val d = md.digest()
-        var h = 0L
-        var b = 0
-        while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
-        h = h >>> 4 // first 15 hex chars = drop the low nibble of byte 8
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(sig)
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** MinHash signature from an ARRAY<BIGINT> of pre-hashed shingles via a
   * multiply-mod universal family: slot i = min over x of
   * `(A(i)·(x & 30-bit mask) + B(i)) mod (2³¹−1)`.
   *
-  * Replaces the k-md5s-per-shingle [[MinHashSig]] path in the hot loop: one
-  * base hash per shingle plus k cheap integer ops, fully inside whole-stage
-  * codegen. The 30-bit mask keeps `A·x + B < 2⁶²`, so the identical
+  * One base hash per shingle plus k cheap integer ops (not k md5s per
+  * shingle), fully inside whole-stage codegen. The 30-bit mask keeps `A·x + B < 2⁶²`, so the identical
   * arithmetic is expressible in DuckDB BIGINT without overflow — the oracle
   * twin is exact, not approximate (companion emits the literal A/B lists).
   */
@@ -453,8 +409,6 @@ object GraftFunctions {
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
   def graft_simhash60(hs: Column): Column =
     GraftColumnBridge.column(SimHash60(GraftColumnBridge.expression(hs)))
-  def graft_minhash(sh: Column, k: Int): Column =
-    GraftColumnBridge.column(MinHashSig(GraftColumnBridge.expression(sh), k))
   def graft_minhash_affine(hs: Column, k: Int): Column =
     GraftColumnBridge.column(MinHashAffine(GraftColumnBridge.expression(hs), k))
   def graft_nfc(s: Column): Column =
@@ -501,37 +455,48 @@ object GraftFunctions {
     GraftColumnBridge.column(CdcBoundaries(
       GraftColumnBridge.expression(t), w, buckets))
 
+  /** Every `graft_*` SQL function: its name, the expression class it
+    * builds (for DESCRIBE FUNCTION) and the builder. [[GraftExtensions]]
+    * injects this list into every session built with it; [[register]]
+    * adds it to one existing session.
+    */
+  private[functions] val sqlFunctions
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], es => DotProduct(es.head, es(1))),
+    ("graft_simhash60", classOf[SimHash60], es => SimHash60(es.head)),
+    ("graft_minhash_affine", classOf[MinHashAffine],
+      es => MinHashAffine(es.head, es(1).eval().asInstanceOf[Int])),
+    ("graft_nfc", classOf[NfcNormalize], es => NfcNormalize(es.head)),
+    ("graft_idot", classOf[IntDot], es => IntDot(es.head, es(1))),
+    ("graft_dot_scores", classOf[DotScores], es => DotScores(es.head, es(1))),
+    ("graft_int8_pack", classOf[Int8Pack], es => Int8Pack(es.head)),
+    ("graft_idot_packed", classOf[Int8DotPacked],
+      es => Int8DotPacked(es.head, es(1))),
+    ("graft_shingle_hashes", classOf[ShingleHashes],
+      es => ShingleHashes(es.head, es(1).eval().asInstanceOf[Int])),
+    ("graft_prefix_explode", classOf[ShinglePrefixGen],
+      es => ShinglePrefixGen(es.head,
+        numericLiteral(es(1), "graft_prefix_explode threshold"))),
+    ("graft_span_hashes", classOf[SpanHashGen],
+      es => SpanHashGen(es.head, es(1).eval().asInstanceOf[Int],
+        es(2).eval().asInstanceOf[Int])),
+    ("graft_intersect_count", classOf[IntersectCount],
+      es => IntersectCount(es.head, es(1))),
+    ("graft_sorted_intersect_count", classOf[SortedIntersectCount],
+      es => SortedIntersectCount(es.head, es(1))))
+
   /** SQL surface: `SELECT graft_dot(a, b)` after registration. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot", es => DotProduct(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash60", es => SimHash60(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_affine", es => MinHashAffine(es.head,
-      es(1).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc", es => NfcNormalize(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_idot", es => IntDot(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot_scores",
-      es => DotScores(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_int8_pack",
-      es => Int8Pack(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_idot_packed",
-      es => Int8DotPacked(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes", es => ShingleHashes(es.head,
-      es(1).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_prefix_explode", es => ShinglePrefixGen(es.head,
-      GraftFunctions.numericLiteral(es(1), "graft_prefix_explode threshold")), "built-in")
-    reg.createOrReplaceTempFunction("graft_span_hashes", es => SpanHashGen(es.head,
-      es(1).eval().asInstanceOf[Int], es(2).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("graft_intersect_count",
-      es => IntersectCount(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect_count",
-      es => SortedIntersectCount(es.head, es(1)), "built-in")
+    sqlFunctions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 
   /** Fold a foldable numeric argument expression to Double (SQL surface
     * passes thresholds as int/decimal/double literals interchangeably).
     */
-  private[functions] def numericLiteral(e: Expression, what: String): Double =
+  private def numericLiteral(e: Expression, what: String): Double =
     e.eval() match {
       case d: java.lang.Double => d.doubleValue()
       case f: java.lang.Float => f.doubleValue()

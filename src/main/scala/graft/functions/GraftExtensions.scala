@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Library deployment hook: the standard way to ship custom Catalyst
   * expressions with a Spark library. Activate with
@@ -14,46 +14,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (es: Seq[Expression]) => DotProduct(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash60"),
-      (es: Seq[Expression]) => SimHash60(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_affine"),
-      new ExpressionInfo(classOf[MinHashAffine].getName, "graft_minhash_affine"),
-      (es: Seq[Expression]) => MinHashAffine(es.head,
-        es(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_idot"),
-      new ExpressionInfo(classOf[IntDot].getName, "graft_idot"),
-      (es: Seq[Expression]) => IntDot(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_dot_scores"),
-      new ExpressionInfo(classOf[DotScores].getName, "graft_dot_scores"),
-      (es: Seq[Expression]) => DotScores(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_int8_pack"),
-      new ExpressionInfo(classOf[Int8Pack].getName, "graft_int8_pack"),
-      (es: Seq[Expression]) => Int8Pack(es.head)))
-    ext.injectFunction((FunctionIdentifier("graft_idot_packed"),
-      new ExpressionInfo(classOf[Int8DotPacked].getName, "graft_idot_packed"),
-      (es: Seq[Expression]) => Int8DotPacked(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (es: Seq[Expression]) => ShingleHashes(es.head,
-        es(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("graft_prefix_explode"),
-      new ExpressionInfo(classOf[ShinglePrefixGen].getName, "graft_prefix_explode"),
-      (es: Seq[Expression]) => ShinglePrefixGen(es.head,
-        GraftFunctions.numericLiteral(es(1), "graft_prefix_explode threshold"))))
-    ext.injectFunction((FunctionIdentifier("graft_span_hashes"),
-      new ExpressionInfo(classOf[SpanHashGen].getName, "graft_span_hashes"),
-      (es: Seq[Expression]) => SpanHashGen(es.head,
-        es(1).eval().asInstanceOf[Int], es(2).eval().asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("graft_intersect_count"),
-      new ExpressionInfo(classOf[IntersectCount].getName, "graft_intersect_count"),
-      (es: Seq[Expression]) => IntersectCount(es.head, es(1))))
+    GraftFunctions.sqlFunctions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     // optimizer tier: composed size(array_intersect(...)) rewritten to the
     // allocation-free native count wherever result-identical
     ext.injectOptimizerRule(_ => RewriteIntersectCount)

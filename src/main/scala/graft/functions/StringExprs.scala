@@ -2,8 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData

@@ -82,6 +82,9 @@ object Event {
 
 /** event.proto:66-75. The `bytes_value` oneof arm is never used by the
   * reference (every construction site sets event_value), so it is omitted.
+  * [[graft.routing.Routing]]'s result; it never goes on the wire as a
+  * whole (the topics carry `Event` bytes, KafkaSerializeProto.java:24-30,
+  * and the plan carries [[WireRoute]]).
   */
 final case class Route(direction: Int, routeName: String, key: String, eventValue: Event)
 

@@ -47,10 +47,6 @@ object ProtoCodec {
   private def writeBool(out: ByteArrayOutputStream, field: Int, v: Boolean): Unit =
     if (v) { writeTag(out, field, 0); writeVarint(out, 1L) }
 
-  /** enum / int32 written only when nonzero (plain field). */
-  private def writeEnum(out: ByteArrayOutputStream, field: Int, v: Int): Unit =
-    if (v != 0) writeEnumAlways(out, field, v)
-
   /** enum written unconditionally (oneof arm). */
   private def writeEnumAlways(out: ByteArrayOutputStream, field: Int, v: Int): Unit = {
     writeTag(out, field, 0)
@@ -96,15 +92,6 @@ object ProtoCodec {
     e.reply.foreach(writeEnumAlways(out, 4, _))
     if (e.payload != null && e.payload.nonEmpty) writeBytesField(out, 5, e.payload)
     e.current.foreach(c => writeMessageAlways(out, 6, encode(c)))
-    out.toByteArray
-  }
-
-  def encode(r: Route): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeEnum(out, 1, r.direction)
-    writeString(out, 2, r.routeName)
-    writeString(out, 3, r.key)
-    writeMessageAlways(out, 4, encode(r.eventValue)) // oneof arm
     out.toByteArray
   }
 
@@ -233,23 +220,6 @@ object ProtoCodec {
       }
     }
     Event(eventId, addr, request, reply, payload, current)
-  }
-
-  def decodeRoute(buf: Array[Byte]): Route = {
-    var direction = 0; var routeName = ""; var key = ""
-    var ev: Event = Event("", Event.emptyAddress, None, None, Array.emptyByteArray, None)
-    val r = new Reader(buf, 0, buf.length)
-    while (r.hasMore) {
-      val k = r.readVarint()
-      ((k >> 3).toInt, (k & 7).toInt) match {
-        case (1, 0) => direction = r.readVarint().toInt
-        case (2, 2) => routeName = str(buf, r.readLenDelim())
-        case (3, 2) => key = str(buf, r.readLenDelim())
-        case (4, 2) => val d = r.readLenDelim(); ev = decodeEvent(buf, d._1, d._2)
-        case (_, w) => r.skip(w)
-      }
-    }
-    Route(direction, routeName, key, ev)
   }
 
   def decodeEventRequestReply(buf: Array[Byte]): EventRequestReply = {

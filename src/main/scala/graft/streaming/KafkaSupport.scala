@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, when}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.exec.FunctionExecutor
@@ -43,31 +43,30 @@ object KafkaSupport {
       .select(col("value").as[Array[Byte]])
   }
 
-  /** S3: route → (key = route key bytes, value = the event's proto bytes).
-    * Egress keys every route by its event id, so the record key is the
-    * `event_id` bytes (KafkaSerializeProto.java:24-30).
+  /** S3: route → (key = route key bytes, value = the event's proto bytes,
+    * topic). Egress keys every route by its event id, so the record key is
+    * the `event_id` bytes (KafkaSerializeProto.java:24-30). CLIENT routes
+    * go to `client_reply`, INTERNAL ones to `internal`; egress emits no
+    * other direction.
     */
   def toKafkaRecords(routes: Dataset[WireRoute]): DataFrame =
-    routes.select(col("key").cast("binary").as("key"), col("event").as("value"))
+    routes.select(col("key").cast("binary").as("key"), col("event").as("value"),
+      when(col("direction") === RouteDirection.CLIENT, "client_reply")
+        .when(col("direction") === RouteDirection.INTERNAL, "internal")
+        .as("topic"))
 
-  /** Full job: one streaming query, single-pass fan-out to both topics in
-    * foreachBatch (the Spark shape for the reference's side outputs; the
-    * feedback loop closes through the `internal` topic re-entering the
-    * source, exactly as StateFlowFlinkJob.java:143-147 + :50). The batch
-    * is persisted because it feeds two distributed writes.
+  /** Full job: one streaming query, and one Kafka write per batch that
+    * fans out to both topics by each record's `topic` column (the Spark
+    * shape for the reference's side outputs; the feedback loop closes
+    * through the `internal` topic re-entering the source, exactly as
+    * StateFlowFlinkJob.java:143-147 + :50).
     */
   def start(spark: SparkSession, bootstrap: String, executor: FunctionExecutor,
       checkpoint: String, config: JobConfig = JobConfig()): StreamingQuery =
     StateflowPipeline.start(readEvents(spark, bootstrap), executor, checkpoint, config) { batch =>
-      batch.persist()
-      def sink(direction: Int, topic: String): Unit =
-        toKafkaRecords(batch.filter(col("direction") === direction))
-          .write.format("kafka")
-          .option("kafka.bootstrap.servers", bootstrap)
-          .option("topic", topic)
-          .save()
-      sink(RouteDirection.CLIENT, "client_reply")
-      sink(RouteDirection.INTERNAL, "internal")
-      batch.unpersist()
+      toKafkaRecords(batch)
+        .write.format("kafka")
+        .option("kafka.bootstrap.servers", bootstrap)
+        .save()
     }
 }

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Driver-side union-find closure over an edge list — the reference
-    * semantics both simhashClusterEdges pins compare against (doc ->
+    * semantics both cluster-edge pins compare against (doc ->
     * component-min label, docs restricted to those appearing in an edge,
     * matching nearDupClusters' emit contract).
     */
@@ -150,7 +150,8 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = (base ++ dups).toDF("doc_id", "text")
     val full = DedupOps.simhashPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val budgeted = DedupOps.simhashClusterEdges(docs, blockT = 64)
+    val budgeted = DedupOps.clusterEdgesFromSigs(
+        DedupOps.simhashSigsOf(docs), blockT = 64)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(unionFindClosure(budgeted) == unionFindClosure(full),
       s"budgeted closure diverged from the full pair-list closure: " +
@@ -170,7 +171,8 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       val docs = Tables.documents(spark, dir)
       val full = DedupOps.simhashPairs(docs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val budgeted = DedupOps.simhashClusterEdges(docs)
+      // the edge memo the qd_neardup_clusters family reads
+      val budgeted = DedupOps.clusterEdgesMemo(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(unionFindClosure(budgeted) == unionFindClosure(full),
         s"budgeted closure diverged from full closure at $dir")
@@ -452,15 +454,6 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out == List((2L, 1L, 2L), (3L, 1L, 3L)))
   }
 
-  test("dropNearDups keeps the lower id of each pair") {
-    val pairs = DedupOps.ngramJaccard(docs, idCol = "post_id", textCol = "body",
-      threshold = 0.5)
-    val kept = DedupOps.dropNearDups(docs, pairs, idCol = "post_id")
-      .select("post_id").collect().map(_.getLong(0)).toSet
-    // 10-11 and 10-12/11-12 pair up → 11 and 12 dropped; 10 and 13 survive
-    assert(kept == Set(10L, 13L), s"got $kept")
-  }
-
   test("lineDedup keeps the first occurrence of each line") {
     import spark.implicits._
     val md = Seq(
@@ -633,33 +626,6 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val saltedType = SkewOps.saltedAgg(dec, Seq("k"), col("d"), salts = 8)
       .schema("salted_sum").dataType
     assert(saltedType == directType, s"$saltedType != $directType")
-  }
-
-  test("curationPipeline composes redact -> dedup -> filter -> normalize -> keep") {
-    import spark.implicits._
-    val md = Seq(
-      // PII + a duplicated line + a boilerplate line; survives cleaning
-      (1L, "Contact a@b.io for the good long answer here.\n" +
-        "Contact a@b.io for the good long answer here.\n" +
-        "no terminal punctuation so dropped\n" +
-        "This Second Sentence also has enough words."),
-      // exact duplicate of doc 1 after cleaning → dropped as dup
-      (2L, "contact <EMAIL> for the good long answer here.\n" +
-        "this second sentence also has enough words."),
-      // everything filtered away → empty clean text, not kept
-      (3L, "short.\nno punct")).toDF("post_id", "body")
-    val out = CurationOps.curationPipeline(md, idCol = "post_id", textCol = "body")
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((r.getString(1), r.getInt(2), r.getBoolean(3), r.getBoolean(5))))
-      .toMap
-    // normalizeText collapses the line separator into a single space
-    val expectClean = "contact <email> for the good long answer here. " +
-      "this second sentence also has enough words."
-    assert(out(1L) == ((expectClean, 2, false, true)), s"got ${out(1L)}")
-    // doc 2 normalizes to the same text as doc 1 → exact dup, dropped
-    assert(out(2L)._1 == expectClean && out(2L)._3 && !out(2L)._4, s"got ${out(2L)}")
-    assert(out(3L) == (("", 0, false, false)), s"got ${out(3L)}")
   }
 
   test("vocabulary and tfidfKeywords rank by count and tf/df") {
@@ -938,18 +904,6 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"got $out")
   }
 
-  test("text ops on custom column names") {
-    val stats = TextOps.tokenStats(docs, idCol = "post_id", textCol = "body")
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(stats(10L) == 9, s"got $stats")
-    val bpe = TextOps.bpeTokenEstimate(docs, idCol = "post_id", textCol = "body")
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(bpe(10L) == 9, s"9 space-prefixed word pretokens expected: $bpe")
-    val fp = TextOps.fingerprint(docs, idCol = "post_id", textCol = "body")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(fp(10L) == fp(11L) && fp(10L) != fp(12L))
-  }
-
   test("bloomNewDocs equals the exact anti-join even at absurd fpp") {
     // fpp = 0.5 floods the probe with false positives; the exact verify
     // join must resolve every one — the sketch only prunes, never decides
@@ -1160,29 +1114,6 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"got ${out.toSeq}")
   }
 
-  test("pqTrainCodebooks recovers per-subspace cluster structure") {
-    import spark.implicits._
-    // 8-dim corpus whose first subspace has two tight clusters at +/- e1;
-    // one Lloyd round from rough seeds must pull codewords onto the
-    // cluster means in that subspace
-    val rows = (0 until 20).map { i =>
-      val sign = if (i % 2 == 0) 1.0 else -1.0
-      (i.toLong, Seq(sign, 0.001 * i, 0, 0, 1.0, 0, 0, 0))
-    }
-    val vecs = rows.toDF("vid", "vec")
-    val init: Seq[Seq[Seq[Double]]] = Seq(
-      Seq(Seq(0.5, 0, 0, 0), Seq(-0.5, 0, 0, 0)),
-      Seq(Seq(1.0, 0, 0, 0), Seq(0, 1.0, 0, 0)))
-    val trained = SimilarityOps.pqTrainCodebooks(vecs, init, iters = 1,
-      idCol = "vid", vecCol = "vec")
-    assert(trained.size == 2 && trained.forall(_.size == 2) &&
-      trained.forall(_.forall(_.size == 4)), "codebook geometry must survive")
-    // subspace 0: codeword 1 ~ (+1, ~0.01, 0, 0), codeword 2 ~ (-1, ...)
-    assert(math.abs(trained(0)(0)(0) - 1.0) < 1e-6 &&
-      math.abs(trained(0)(1)(0) + 1.0) < 1e-6,
-      s"Lloyd round missed the subspace clusters: ${trained(0)}")
-  }
-
   test("scd2 collapses duplicate versions and stamps validity on custom columns") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -1300,7 +1231,8 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // baskets: {1,2,3}, {1,2}, {1,3} -> for item 1: 2 co-occurs 2x, 3 co-occurs 2x
     val b = Seq((10L, 1L), (10L, 2L), (10L, 3L), (11L, 1L), (11L, 2L),
       (12L, 1L), (12L, 3L)).toDF("basket", "sku")
-    val out = Relational3.coOccurrenceTopK(b, "basket", "sku", k = 2)
+    val out = Relational3.coOccurrenceTopKFrom(Relational3.coOccurrencePairs(
+        b.select($"basket".as("g"), $"sku".as("item")).distinct()), k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
     val item1 = out.filter(_._1 == 1L).toList
     assert(item1 == List((1L, 2L, 2L, 1), (1L, 3L, 2L, 2)), s"got $item1")
@@ -2373,7 +2305,12 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val cents = SimilarityOps.trainCentroids(emb)
     val xCells = 2; val xK = 3
-    val x = SimilarityOps.crossCellEdges(emb, cents, xCells, xK).collect()
+    // the assignment stage + cross-edge cut the crossEdges memo runs
+    def crossEdges(literalMax: Int) = SimilarityOps.crossEdgesFrom(
+      SimilarityOps.assignWithSecondaries(
+        SimilarityOps.prep(emb, "vec_id", "embedding"), cents, xCells,
+        literalMax), xK).collect()
+    val x = crossEdges(SimilarityOps.CentroidLiteralMax)
     assert(x.nonEmpty, "expected some cross-cell edges")
     // budget: at most xCells * xK long links per source
     val bySrc = x.groupBy(_.getLong(0))
@@ -2389,8 +2326,7 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       "cross edge connected two vectors in the same primary cell")
     // the corpus-scaled branch (broadcast codebook + rank window) must
     // produce the identical edge set as the literal branch
-    val xj = SimilarityOps.crossCellEdges(emb, cents, xCells, xK,
-      literalMax = 0).collect()
+    val xj = crossEdges(literalMax = 0)
     assert(x.map(r => (r.getLong(0), r.getLong(1))).toSet ==
       xj.map(r => (r.getLong(0), r.getLong(1))).toSet,
       "literal and broadcast cross-edge paths diverged")
@@ -2419,7 +2355,10 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val cents = SimilarityOps.trainCentroids(emb)
-    val edges = SimilarityOps.knnGraph(emb, 3, cents)
+    // the kNN memo's build: shared assignment stage, intra-cell top-k cut
+    val edges = SimilarityOps.knnEdgesFrom(SimilarityOps.assignWithSecondaries(
+        SimilarityOps.prep(emb, "vec_id", "embedding"), cents, 2)
+      .select(col("vec_id"), col("v"), col("nrm"), col("cell")), 3)
     val queries = emb.filter(col("vec_id") < 5)
     val entries = emb.filter(col("vec_id") % 50 === 0)
     val out = SimilarityOps.graphAnnSearch(emb, queries, entries, edges,
@@ -2659,8 +2598,11 @@ class OpsApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     // path 1 - 2 - 3, symmetrized; landmarks = all three nodes
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("s", "d")
     val seeds = Seq(1L, 2L, 3L).toDF("n")
-    val out = GraphOps.boundedBetweenness(edges, seeds, maxHops = 2,
+    // the qg_betweenness chain: landmark BFS → shortest-path DAG → sweep
+    val bfs = GraphOps.landmarkDistances(edges, seeds, maxHops = 2,
         srcCol = "s", dstCol = "d", seedCol = "n")
+    val dag = GraphOps.pathDag(bfs, edges.toDF("src", "dst"))
+    val out = GraphOps.betweennessFromDag(dag, bfs, maxHops = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // node 2 sits on the 1→3 and 3→1 shortest paths: δ = 10⁶ from each root
     assert(out == Map(1L -> 0L, 2L -> 2000000L, 3L -> 0L), out.toString)

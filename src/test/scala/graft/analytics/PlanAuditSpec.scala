@@ -872,7 +872,8 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       "simhash_candidates_distinct_sig" ->
         sumC2(chunkBuckets(sigs.select(col("simhash")).distinct())),
       "simhash_verified_pairs" -> DedupOps.simhashPairs(docs).count(),
-      "simhash_budget_edges" -> DedupOps.simhashClusterEdges(docs).count(),
+      "simhash_budget_edges" ->
+        DedupOps.clusterEdgesFromSigs(DedupOps.simhashSigsOf(docs))._1.count(),
       "minhash_band_candidates" -> sumC2(docs.select(
           GraftFunctions.graft_minhash_affine(
             GraftFunctions.graft_shingle_hashes(col("text"), 3), 16).as("sig"))

@@ -96,21 +96,6 @@ class ArrayExprsSpec extends AnyFunSuite with BeforeAndAfterAll {
     got.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
-  test("MinHashSig == transform(sequence, array_min(transform)) with conv/md5") {
-    import spark.implicits._
-    val df = Seq(
-      Seq("a b c", "b c d", "c d e"),
-      Seq("hello world x"),
-      Seq("q w e", "w e r", "e r t", "r t y")).toDF("sh")
-    val slow = "transform(sequence(0, 15), i -> array_min(transform(sh, " +
-      "s -> cast(conv(substring(md5(concat(cast(i as string), ':', s)), 1, 15), 16, 10) as bigint))))"
-    val got = df.select(
-      GraftFunctions.graft_minhash(col("sh"), 16).as("fast"), expr(slow).as("slow")).collect()
-    got.foreach { r =>
-      assert(r.getSeq[Long](0) == r.getSeq[Long](1))
-    }
-  }
-
   test("MinHashAffine == composed multiply-mod min over masked base hashes") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)

@@ -53,20 +53,6 @@ class ProtoCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("Route round-trips (event_value oneof arm)") {
-    val gen = for {
-      e <- genEvent; dir <- Gen.choose(0, 2); name <- genStr; key <- genStr
-    } yield (e, dir, name, key)
-    forAll(gen) { case (e, dir, name, key) =>
-      val r = Route(dir, name, key, e)
-      val back = ProtoCodec.decodeRoute(ProtoCodec.encode(r))
-      assert(back.direction == r.direction)
-      assert(back.routeName == r.routeName)
-      assert(back.key == r.key)
-      assertEventEq(back.eventValue, r.eventValue)
-    }
-  }
-
   test("EventRequestReply round-trips") {
     val gen = for {
       e <- genEvent; st <- Gen.listOf(Arbitrary.arbByte.arbitrary); op <- genStr

@@ -120,10 +120,16 @@ class WireRouteSpec extends AnyFunSuite with BeforeAndAfterAll {
       WireRoute(r.direction, r.routeName, r.key, ProtoCodec.encode(r.eventValue)))
 
     val records = KafkaSupport.toKafkaRecords(rows.toDS()).collect()
-    assert(records.map(_.schema.fieldNames.toSeq).distinct.toSeq == Seq(Seq("key", "value")))
+    assert(records.map(_.schema.fieldNames.toSeq).distinct.toSeq == Seq(Seq("key", "value", "topic")))
     val got = records.map(r => (r.getAs[Array[Byte]]("key").toSeq,
       view(ProtoCodec.decodeEvent(r.getAs[Array[Byte]]("value")))))
     assert(got.toSeq == events.map(e => (e.eventId.getBytes("UTF-8").toSeq, view(e))))
+    // one write fans out by topic: the in-flight flow hop feeds back
+    // through `internal`, the answered events go to `client_reply`
+    assert(routes.map(_.direction) == Seq(RouteDirection.INTERNAL,
+      RouteDirection.CLIENT, RouteDirection.CLIENT))
+    assert(records.map(_.getAs[String]("topic")).toSeq ==
+      Seq("internal", "client_reply", "client_reply"))
   }
 
   /** Whether `t` holds the [[Event]] struct or object anywhere. */
